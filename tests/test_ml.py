@@ -382,6 +382,19 @@ def test_harmony_soft_reduces_batch_separation(spark):
     assert after < before * 0.25, (before, after)
 
 
+def test_harmony_soft_rejects_ragged_input(spark):
+    """The fixed-dimensionality precondition fails loudly: one short
+    embedding row raises instead of dropping out of the moment sums. k=1
+    is the path without KMeans, whose fit would reject the row itself."""
+    from utils_spark.operators.ml import harmony_soft
+
+    rows = [(f"{b}{j}", b, [float(j), float(j % 3), 1.0, 0.5]) for b in "AB" for j in range(10)]
+    rows.append(("short", "A", [1.0, 2.0]))
+    df = spark.createDataFrame(rows, ["id", "batch", "vec"])
+    with pytest.raises(Exception, match="ragged input"):
+        harmony_soft(df, "id", "vec", "batch", k=1, n_iter=1, sigma=1.0).collect()
+
+
 def test_harmony_diversity_penalty_mixes_confounded_batches(spark):
     """Reference M8 theta (R/integrate.R:115-118): when batch is CONFOUNDED
     with cluster structure (each soft cluster ~one batch), the penalty-free

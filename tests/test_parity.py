@@ -163,7 +163,7 @@ def test_collect_sites_match_adjudicated_whitelist():
 
     # file -> adjudicated count of bounded collect() call sites
     WHITELIST = {
-        "operators/ml.py": 5,  # kxd centroids x2, approx_points bins, distinct-batch list, knn hot-bucket census (≤ _MAX_HOT_BUCKETS rows by limit())
+        "operators/ml.py": 4,  # kxd centroids, approx_points bins, distinct-batch list, knn hot-bucket census (≤ _MAX_HOT_BUCKETS rows by limit())
         "operators/textmodel.py": 2,  # <=8-row merge tables
         "queries/text.py": 2,  # <=8-row merge tables
         "queries/composite.py": 1,  # data-derived k

@@ -119,6 +119,8 @@ def main() -> int:
         if s != d:
             bad.append(name)
             print(f"MISMATCH {name}: spark {len(s)} rows vs oracle {len(d)}")
+        else:
+            print(f"match {name}: {len(s)} rows")
     if not names_filter:
         entry_rows = len(E.entry(spark).collect())
         print(f"entry rows: {entry_rows}")

@@ -123,6 +123,57 @@ def minhash_band_structs(sig_col: Column | str, n_hashes: int, n_bands: int) -> 
     )
 
 
+# MinHash universal-hash family: ONE md5 per shingle, then cheap affine
+# permutations h_i = (a_i * h30 + b_i) mod P30 in 30-bit space — products
+# stay < 2^60 so the arithmetic is overflow-free and bit-identical in every
+# engine (md5 16x per shingle was the 80 s/sf0.1 hot spot; this is ~10x less
+# hashing work). Constants derived deterministically from md5(i).
+MINHASH_P30 = 1073741789  # largest prime < 2^30
+_TWO30 = 1 << 30
+
+
+def _minhash_constants(n: int) -> list[tuple[int, int]]:
+    import hashlib
+
+    out = []
+    for i in range(n):
+        h = hashlib.md5(f"minhash:{i}".encode()).hexdigest()
+        a = (int(h[:8], 16) % (MINHASH_P30 - 1)) + 1  # a in [1, P30-1]
+        b = int(h[8:16], 16) % MINHASH_P30
+        out.append((a, b))
+    return out
+
+
+def _minhash_sig_col(grams, n_hashes: int):
+    """array<long> MinHash signature column: md5 once per shingle, affine
+    permutations per hash function. Pure JVM expressions, zero shuffle."""
+    consts = _minhash_constants(n_hashes)
+    a_arr = F.array(*[F.lit(a) for a, _ in consts])
+    b_arr = F.array(*[F.lit(b) for _, b in consts])
+    init = F.array(*[F.lit(MINHASH_P30).cast("long")] * n_hashes)  # P30 > any hash value
+    # md5 exactly ONCE per shingle (naive per-hash array_min duplicates the
+    # md5 transform n_hashes times under CollapseProject — measured 9x slower)
+    base = F.transform(grams, lambda s: md5_long(s) % _TWO30)
+    return F.aggregate(
+        base,
+        init,
+        lambda acc, h: F.transform(
+            acc,
+            lambda v, i: F.least(
+                v, (F.element_at(a_arr, i + 1) * h + F.element_at(b_arr, i + 1)) % MINHASH_P30
+            ),
+        ),
+    )
+
+
+def text_fingerprint(text: Column | str) -> Column:
+    """Exact-dedup fingerprint: md5 of the trimmed, lower-cased,
+    whitespace-collapsed text — the key every fingerprint dedup path
+    (batch, incremental and streaming) groups on."""
+    t = F.col(text) if isinstance(text, str) else text
+    return F.md5(F.lower(F.regexp_replace(F.trim(t), r"\s+", " ")))
+
+
 def strict_mean(value: Column | str) -> Column:
     """NA-poisoning mean — R's ``mean(x)`` DEFAULT (na.rm=FALSE): NULL if
     ANY input is NULL, else the mean. Spark's ``avg`` matches only R's

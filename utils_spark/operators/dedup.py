@@ -10,7 +10,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from utils_spark.functions import char_shingles, md5_long, minhash_band_structs
+from utils_spark.functions import (
+    _minhash_sig_col,
+    char_shingles,
+    minhash_band_structs,
+    text_fingerprint,
+)
 from utils_spark.io import spread_low_parallelism
 from utils_spark.plans import cut_lineage, scratch_persist
 
@@ -47,11 +52,9 @@ def fingerprint_duplicates(
 ) -> DataFrame:
     """Duplicate clusters by normalized-text md5 fingerprint: returns
     (fingerprint, n_docs, canonical_key) for clusters of size > 1."""
-    t = F.col(text_col)
-    if normalize:
-        t = F.lower(F.regexp_replace(F.trim(t), r"\s+", " "))
+    fp = text_fingerprint(text_col) if normalize else F.md5(F.col(text_col))
     return (
-        df.select(F.md5(t).alias("fingerprint"), F.col(key_col))
+        df.select(fp.alias("fingerprint"), F.col(key_col))
         .groupBy("fingerprint")
         .agg(F.count("*").alias("n_docs"), F.min(key_col).alias("canonical_key"))
         .filter(F.col("n_docs") > 1)
@@ -71,8 +74,6 @@ def minhash_lsh_candidates(
     (key_a, key_b, est_jaccard). Signatures are zero-shuffle array math
     (one md5 per shingle + affine permutations); the only shuffle is the
     (band_id, band_hash) self-join — never O(n²) pair enumeration."""
-    from utils_spark.queries.text import _minhash_sig_col
-
     # signature computation is CPU-bound (n_hashes × grams/doc per row); a
     # single-file local scan arrives as ONE partition (parquet splits at
     # row-group granularity), which would serialize it. Spread only when
@@ -147,9 +148,6 @@ def lsh_verified_pairs(
     hashes / 8 bands / est >= 0.5 give miss probability < 2e-5 per pair at
     j = 0.9); exact verification then removes every false positive.
     """
-    from utils_spark.functions import char_shingles as _shingles
-    from utils_spark.queries.text import _minhash_sig_col
-
     # same single-file-scan parallelism guard as minhash_lsh_candidates:
     # the shingle explode below is CPU-bound map work
     df = spread_low_parallelism(df)
@@ -164,7 +162,7 @@ def lsh_verified_pairs(
     # bytes — or when the planner cannot bound the source — the persist
     # is skipped and the map-side shingling recomputes per consumer.
     shingled = _persist_if_bounded(
-        df.select(F.col(key_col).alias("__k"), _shingles(text_col, shingle_k).alias("grams")),
+        df.select(F.col(key_col).alias("__k"), char_shingles(text_col, shingle_k).alias("grams")),
         df,
     )
     sig = shingled.select(

@@ -874,47 +874,8 @@ def centroid_mst_pseudotime(
 
     Bulk data never leaves DataFrames; only the (k × d) centroid matrix is
     collected (SURVEY §3 design rule)."""
-    comp = df.select(cluster_col, F.posexplode(to_double_array(array_col)).alias("dim", "x"))
-    cent_long = comp.groupBy(cluster_col, "dim").agg(F.avg("x").alias("cx"))
-    cent_rows = (
-        cent_long.groupBy(cluster_col)
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "cx"))).alias("pairs"))
-        .select(cluster_col, F.transform("pairs", lambda p: p["cx"]).alias("centroid"))
-        .collect()
-    )
-    import math as _math
-
-    cents = {r[cluster_col]: r["centroid"] for r in cent_rows}
+    cents, _adj, dist = _centroid_mst(df, array_col, cluster_col, start_cluster)
     ks = sorted(cents)
-    if start_cluster not in cents:
-        raise ValueError(f"start_cluster {start_cluster!r} not found")
-    # Prim's MST on the tiny centroid graph
-    def d(a, b):
-        return _math.sqrt(sum((x - y) ** 2 for x, y in zip(cents[a], cents[b])))
-
-    in_tree, edges = {start_cluster}, []
-    while len(in_tree) < len(ks):
-        best = min(
-            ((a, b, d(a, b)) for a in in_tree for b in ks if b not in in_tree),
-            key=lambda t: (t[2], str(t[1])),
-        )
-        in_tree.add(best[1])
-        edges.append(best)
-    # BFS cumulative distance from start
-    dist = {start_cluster: 0.0}
-    frontier = [start_cluster]
-    adj: dict = {}
-    for a, b, w in edges:
-        adj.setdefault(a, []).append((b, w))
-        adj.setdefault(b, []).append((a, w))
-    while frontier:
-        nxt = []
-        for u in frontier:
-            for v, w in adj.get(u, []):
-                if v not in dist:
-                    dist[v] = dist[u] + w
-                    nxt.append(v)
-        frontier = nxt
     base = F.create_map(*[x for k in ks for x in (F.lit(k), F.lit(dist[k]))])
     # pseudotime = cluster base distance + distance from own centroid
     cmap = F.create_map(*[x for k in ks for x in (F.lit(k), F.array(*[F.lit(c) for c in cents[k]]))])
@@ -1586,8 +1547,8 @@ def harmony_soft(
     (k×batches) aggregate tables per refinement.
 
     PRECONDITION: fixed dimensionality (probed once from the first row);
-    ragged inputs were never supported (KMeans' array_to_vector rejects
-    them).
+    a row of any other length raises an error instead of yielding NULL
+    sums.
 
     Returns df + `corrected` array column."""
     from pyspark.ml.clustering import KMeans
@@ -1614,7 +1575,15 @@ def harmony_soft(
     # F.expr hands the server one string to parse. Column objects are
     # immutable and reusable across iterations, so the loop pays zero
     # expression-construction cost.
-    bsum_aggs = [F.expr("sum(__resp) AS __rw")] + [
+    # the fixed-dimensionality precondition is checked row by row inside the
+    # first moment aggregation (no extra job): a ragged or NULL `__v` would
+    # otherwise read NULL past its end and silently drop out of the sums
+    bsum_aggs = [
+        F.expr(
+            f"sum(if(size(__v) = {dim}, __resp, raise_error("
+            f"'harmony_soft: ragged input, expected {dim} elements per row'))) AS __rw"
+        )
+    ] + [
         F.expr(f"sum(__resp * __v[{d}]) AS __s_{d}") for d in range(dim)
     ]
     wsum_aggs = [F.expr("sum(__rw) AS __trw")] + [

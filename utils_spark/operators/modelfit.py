@@ -294,7 +294,9 @@ def loess_trend(
     to `defaultParallelism` chunk tasks that each fit their index slice
     (identical per-point arithmetic), and the two robustness re-weightings
     run as single-row stages between the fan-outs. Three fan-out passes
-    total, one consumer action — no checkpoints, no driver collects.
+    and no driver collects; there are no checkpoints either, so unless
+    Spark reuses the broadcast exchanges, a consumer action may recompute
+    earlier rounds' chunk fits (the results are the same either way).
     Points are sorted by (mean, variance, feature) — a deterministic total
     order; the previous np.argsort(x) left ties implementation-ordered, so
     neighborhoods at exactly-tied means can select a different (equally

@@ -48,6 +48,23 @@ def bh_adjust(
     )
 
 
+def median_mad(df: DataFrame, value_col: str, group_cols: list[str]) -> DataFrame:
+    """Per-group exact median and scaled MAD of `value_col` →
+    (*group_cols, __med, __mad), MAD = 1.4826 · median|x − median|.
+
+    Two exact-median passes: the per-group median table is broadcast back
+    onto the data for the absolute-deviation median. `group_cols` must be
+    non-empty (use a constant column for one global group)."""
+    med = df.groupBy(*group_cols).agg(F.expr(f"percentile(`{value_col}`, 0.5)").alias("__med"))
+    return (
+        df.join(F.broadcast(med), group_cols)
+        .groupBy(*group_cols, "__med")
+        .agg(
+            (F.expr(f"percentile(abs(`{value_col}` - __med), 0.5)") * MAD_CONSISTENCY).alias("__mad")
+        )
+    )
+
+
 def mad_outlier_flags(
     df: DataFrame,
     value_col: str,
@@ -62,20 +79,16 @@ def mad_outlier_flags(
     perCellQCFilters/isOutlier, nmads=3, optional log scale, one- or
     two-sided). Flags x outside median ± nmads · MAD (MAD scaled by 1.4826).
 
-    Two exact-median passes over tiny per-group aggregates, broadcast back.
-    The reference's per-sample R loop (R/wrapper.R:178-216) is one groupBy.
+    Two exact-median passes over tiny per-group aggregates (`median_mad`),
+    broadcast back. The reference's per-sample R loop (R/wrapper.R:178-216)
+    is one groupBy.
     """
-    group_cols = group_cols or []
+    keys = group_cols or ["__g"]
     v = F.log(F.col(value_col)) if log_scale else F.col(value_col)
     work = df.withColumn("__v", v)
-    gb = group_cols if group_cols else [F.lit(1).alias("__g")]
-    med = work.groupBy(*gb).agg(F.expr("percentile(__v, 0.5)").alias("__med"))
-    joined = work.join(F.broadcast(med), group_cols) if group_cols else work.crossJoin(F.broadcast(med))
-    mad = (
-        joined.groupBy(*(group_cols or ["__g"]))
-        .agg((F.expr("percentile(abs(__v - __med), 0.5)") * MAD_CONSISTENCY).alias("__mad"))
-    )
-    full = joined.join(F.broadcast(mad), group_cols or ["__g"])
+    if not group_cols:
+        work = work.withColumn("__g", F.lit(1))
+    full = work.join(F.broadcast(median_mad(work, "__v", keys)), keys)
     lo_flag = F.col("__v") < F.col("__med") - nmads * F.col("__mad")
     hi_flag = F.col("__v") > F.col("__med") + nmads * F.col("__mad")
     flag = (lo_flag if lower else F.lit(False)) | (hi_flag if upper else F.lit(False))

@@ -310,25 +310,20 @@ def pairwise_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     asymptotic p, all in one plan: pair table (tiny, broadcast) × events,
     ECDFs via per-pair cumulative windows. Scales as O(pairs × values)
     with per-pair parallelism — no driver loop over pairs."""
-    from utils_spark.operators.stats import pairwise_ecdf
+    from utils_spark.operators.stats import pairwise_ks_test
 
-    # same per-pair ECDF pipeline as the operator (r15: routed through the
-    # shared `pairwise_ecdf`; note it deliberately has NO
+    # the `pairwise_ks_test` operator, two-sided (it deliberately has NO
     # spread_low_parallelism guard — a spread was tried in r15 and measured
-    # net-negative, see stats.py — identical expressions, so the per-pair
-    # statistics are unchanged). NOTE: pairwise_ecdf filters value IS NOT
+    # net-negative, see stats.py). NOTE: the operator filters value IS NOT
     # NULL; the registered oracle counts NULLs in na/nb, so they agree
     # because events.value is null-free at every shipped SF — a
     # null-bearing regeneration must add the same filter to the oracle.
     e = load_table(spark, sf_dir, "events")
-    ecdf = pairwise_ecdf(e, "value", "event_type")
-    d = F.max(F.abs(F.col("fa") - F.col("fb")))
-    en = F.first("na") * F.first("nb") / (F.first("na") + F.first("nb"))
-    return ecdf.groupBy(
-        F.col("group_a").alias("ta"), F.col("group_b").alias("tb")
-    ).agg(
-        F.round(d, 6).alias("ks_stat"),
-        F.round(F.least(F.lit(1.0), 2 * F.exp(-2 * d * d * en)), 6).alias("p_asymptotic"),
+    return pairwise_ks_test(e, "value", "event_type").select(
+        F.col("group_a").alias("ta"),
+        F.col("group_b").alias("tb"),
+        F.round("ks_stat", 6).alias("ks_stat"),
+        F.round("p_asymptotic", 6).alias("p_asymptotic"),
     )
 
 

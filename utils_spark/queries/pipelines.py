@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from utils_spark.functions import det_order_key
 from utils_spark.io import load_table
+from utils_spark.operators.stats import mad_outlier_flags
 from utils_spark.registry import register
 
 
@@ -117,8 +118,8 @@ def qc_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The QC→filter pipeline E2 (R/wrapper.R:78-117 → 148-220 → 223-252):
     per-entity metric bundle (A8) → global MAD outlier flags (A11) →
     support filter (A10) → survivors summary. The reference's per-sample
-    loop and three separate passes become one chain with two tiny
-    broadcast threshold tables."""
+    loop and three separate passes become one chain; the flags are the
+    `mad_outlier_flags` operator over one global group."""
     o = load_table(spark, sf_dir, "orders")
     metrics = o.groupBy(F.col("o_custkey").alias("entity")).agg(
         F.count("*").alias("n_rows"),
@@ -131,27 +132,11 @@ def qc_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.sum("o_totalprice")
         ).alias("urgent_pct"),
     )
-    med = metrics.agg(F.expr("percentile(total, 0.5)").alias("med_total"))
-    mad = (
-        metrics.crossJoin(F.broadcast(med))
-        .agg((F.expr("percentile(abs(total - med_total), 0.5)") * 1.4826).alias("mad_total"))
-    )
-    flagged = (
-        metrics.crossJoin(F.broadcast(med))
-        .crossJoin(F.broadcast(mad))
-        .withColumn(
-            "is_outlier",
-            F.when(
-                (F.col("total") < F.col("med_total") - 3 * F.col("mad_total"))
-                | (F.col("total") > F.col("med_total") + 3 * F.col("mad_total")),
-                1,
-            ).otherwise(0),
-        )
-    )
-    passing = (F.col("is_outlier") == 0) & (F.col("n_rows") >= 5)
+    flagged = mad_outlier_flags(metrics, "total")
+    passing = ~F.col("is_outlier") & (F.col("n_rows") >= 5)
     return flagged.agg(
         F.count("*").alias("n_entities"),
-        F.sum("is_outlier").cast("long").alias("n_outliers"),
+        F.sum(F.col("is_outlier").cast("long")).alias("n_outliers"),
         F.count(F.when(passing, 1)).alias("n_pass"),
         F.round(F.sum(F.when(passing, F.col("total"))), 2).alias("passing_total"),
     )

@@ -12,9 +12,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from utils_spark.io import load_table
+from utils_spark.operators.stats import MAD_CONSISTENCY, median_mad
 from utils_spark.registry import register
-
-MAD_CONSISTENCY = 1.4826  # consistency constant for normal data, as in R stats::mad
 
 
 @register(
@@ -45,25 +44,21 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     R/wrapper.R:148-220 perCellQCFilters: flag x < median − 3·MAD lower
     tail / upper tail; the per-sample R loop becomes one groupBy).
 
-    Two exact-median aggregation passes + a broadcast join of the (tiny)
+    Two exact-median aggregation passes (the `median_mad` stage of the
+    `mad_outlier_flags` operator) + a broadcast join of the (tiny)
     per-group threshold table back onto the data — the reference's
     driver-RAM thresholds become a broadcast table (SURVEY §3)."""
     c = load_table(spark, sf_dir, "customer")
-    med = c.groupBy("c_mktsegment").agg(F.expr("percentile(c_acctbal, 0.5)").alias("med_bal"))
-    mad = (
-        c.join(F.broadcast(med), "c_mktsegment")
-        .groupBy("c_mktsegment", "med_bal")
-        .agg((F.expr("percentile(abs(c_acctbal - med_bal), 0.5)") * MAD_CONSISTENCY).alias("mad_bal"))
-    )
+    mad = median_mad(c, "c_acctbal", ["c_mktsegment"])
     return (
         c.join(F.broadcast(mad), "c_mktsegment")
         .groupBy("c_mktsegment")
         .agg(
             F.count("*").alias("n"),
-            F.round(F.first("med_bal"), 4).alias("med_bal"),
-            F.round(F.first("mad_bal"), 4).alias("mad_bal"),
-            F.count(F.when(F.col("c_acctbal") < F.col("med_bal") - 3 * F.col("mad_bal"), 1)).alias("n_low"),
-            F.count(F.when(F.col("c_acctbal") > F.col("med_bal") + 3 * F.col("mad_bal"), 1)).alias("n_high"),
+            F.round(F.first("__med"), 4).alias("med_bal"),
+            F.round(F.first("__mad"), 4).alias("mad_bal"),
+            F.count(F.when(F.col("c_acctbal") < F.col("__med") - 3 * F.col("__mad"), 1)).alias("n_low"),
+            F.count(F.when(F.col("c_acctbal") > F.col("__med") + 3 * F.col("__mad"), 1)).alias("n_high"),
         )
     )
 

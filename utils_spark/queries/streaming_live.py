@@ -433,10 +433,10 @@ def stream_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = read_documents_stream(spark, sf_dir)
     stream = stream.union(stream)  # re-crawl: every doc arrives twice
-    from utils_spark.functions import word_tokens
+    from utils_spark.functions import text_fingerprint, word_tokens
 
     passing = F.size(word_tokens("text")) >= 40
-    fp = F.md5(F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")))
+    fp = text_fingerprint("text")
     keyed = stream.select(
         "source",
         F.when(passing, F.concat(F.lit("p_"), fp))
@@ -502,7 +502,7 @@ def _near_dup_registry_oracle() -> str:
     """Batch SQL twin of the streaming band registry: replay signatures
     (the _LSH_ORACLE hash family), band every doc, and aggregate the
     collision buckets (count >= 2) with winner-independent stats."""
-    from utils_spark.queries.text import MINHASH_P30, _minhash_constants
+    from utils_spark.functions import MINHASH_P30, _minhash_constants
 
     sig_elems = ", ".join(
         f"CAST(list_min(list_transform(base, h -> ({a} * h + {b}) % {MINHASH_P30})) AS BIGINT)"
@@ -556,8 +556,7 @@ def stream_near_dup_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     band keys and would be watermark-evicted by ingest time; here the
     bounded backfill drains in one availableNow batch and must equal the
     batch replay exactly."""
-    from utils_spark.functions import char_shingles, minhash_band_structs
-    from utils_spark.queries.text import _minhash_sig_col
+    from utils_spark.functions import _minhash_sig_col, char_shingles, minhash_band_structs
     from utils_spark.streaming.windows import read_documents_stream
 
     docs = read_documents_stream(spark, sf_dir)

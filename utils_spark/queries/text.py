@@ -15,10 +15,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from utils_spark.functions import (
+    MINHASH_P30,
+    _minhash_constants,
+    _minhash_sig_col,
     char_shingles,
     det_order_key,
     md5_long,
     minhash_band_structs,
+    text_fingerprint,
     word_tokens,
 )
 from utils_spark.io import load_table, spread_low_parallelism
@@ -33,49 +37,6 @@ STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
 # corpus size — the raw (lang x distinct-word) likelihood table grows with
 # the corpus (Heaps' law) and is a broadcast OOM at 100 TB.
 NB_TOPK_FEATURES = 4096
-
-
-# MinHash universal-hash family: ONE md5 per shingle, then cheap affine
-# permutations h_i = (a_i * h30 + b_i) mod P30 in 30-bit space — products
-# stay < 2^60 so the arithmetic is overflow-free and bit-identical in every
-# engine (md5 16x per shingle was the 80 s/sf0.1 hot spot; this is ~10x less
-# hashing work). Constants derived deterministically from md5(i).
-MINHASH_P30 = 1073741789  # largest prime < 2^30
-_TWO30 = 1 << 30
-
-
-def _minhash_constants(n: int) -> list[tuple[int, int]]:
-    import hashlib
-
-    out = []
-    for i in range(n):
-        h = hashlib.md5(f"minhash:{i}".encode()).hexdigest()
-        a = (int(h[:8], 16) % (MINHASH_P30 - 1)) + 1  # a in [1, P30-1]
-        b = int(h[8:16], 16) % MINHASH_P30
-        out.append((a, b))
-    return out
-
-
-def _minhash_sig_col(grams, n_hashes: int):
-    """array<long> MinHash signature column: md5 once per shingle, affine
-    permutations per hash function. Pure JVM expressions, zero shuffle."""
-    consts = _minhash_constants(n_hashes)
-    a_arr = F.array(*[F.lit(a) for a, _ in consts])
-    b_arr = F.array(*[F.lit(b) for _, b in consts])
-    init = F.array(*[F.lit(MINHASH_P30).cast("long")] * n_hashes)  # P30 > any hash value
-    # md5 exactly ONCE per shingle (naive per-hash array_min duplicates the
-    # md5 transform n_hashes times under CollapseProject — measured 9x slower)
-    base = F.transform(grams, lambda s: md5_long(s) % _TWO30)
-    return F.aggregate(
-        base,
-        init,
-        lambda acc, h: F.transform(
-            acc,
-            lambda v, i: F.least(
-                v, (F.element_at(a_arr, i + 1) * h + F.element_at(b_arr, i + 1)) % MINHASH_P30
-            ),
-        ),
-    )
 
 
 @register(
@@ -635,14 +596,13 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact near-dup fingerprinting: md5 over whitespace-normalized
     lowercase text; groups of >1 doc sharing a fingerprint are duplicate
     clusters, canonical = min doc_id. Hash-groupBy — the exact-dedup
-    primitive of every curation pipeline; shuffles 16-byte keys only."""
+    primitive of every curation pipeline; shuffles 16-byte keys only.
+    Runs the `fingerprint_duplicates` operator."""
+    from utils_spark.operators.dedup import fingerprint_duplicates
+
     d = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")))
-    return (
-        d.select("doc_id", fp.alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("canonical_doc"))
-        .filter(F.col("n_docs") > 1)
+    return fingerprint_duplicates(d, "text", "doc_id").withColumnRenamed(
+        "canonical_key", "canonical_doc"
     )
 
 
@@ -808,49 +768,15 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: signatures map-side (see minhash_signature); band join shuffles
     only (band_id, band_hash) keys — no O(n²) pair enumeration. This is
     the canonical 100 TB near-dup design (MinHashLSH as in MLlib, but with
-    deterministic md5 hashing and explicit banding)."""
-    n_hashes, n_bands = 16, 4
-    # local testdata is ONE parquet file with ONE row group, so the scan is
-    # a single partition no matter what spark.sql.files.maxPartitionBytes
-    # says (parquet splits at row-group granularity) — repartition is the
-    # only way to spread the CPU-bound shingling+hashing locally. Guard it
-    # on the actual scan parallelism so a real cluster read (many files)
-    # provably has no extra Exchange in this plan.
+    deterministic md5 hashing and explicit banding). Runs the
+    `minhash_lsh_candidates` operator at its defaults."""
+    from utils_spark.operators.dedup import minhash_lsh_candidates
+
     d = load_table(spark, sf_dir, "documents")
-    d = spread_low_parallelism(d)
-    # persist the signatures (r15, guide §5): the banded join evaluates
-    # both sides, and without the cache each side re-paid the full
-    # md5-per-shingle signature pass (measured 6.2 s + 9.2 s of
-    # executorRunTime across the two sides of minhash_lsh_pairs at sf0.1).
-    # One (doc_id, 16 longs) row per doc — tiny at any scale.
-    sig = scratch_persist(
-        d.select("doc_id", _minhash_sig_col(char_shingles("text", 5), n_hashes).alias("sig"))
-    )
-    bands = sig.select(
-        "doc_id",
-        "sig",
-        F.explode(minhash_band_structs("sig", n_hashes, n_bands)).alias("band"),
-    ).select("doc_id", "sig", "band.band_id", "band.band_hash")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (
-                F.size(F.filter(F.zip_with("a.sig", "b.sig", lambda x, y: x == y), lambda v: v)).cast("double")
-                / n_hashes
-            ).alias("est_jaccard"),
-        )
-        .distinct()
-    )
-    return cand.filter(F.col("est_jaccard") >= 0.5).select(
-        "doc_a", "doc_b", F.round("est_jaccard", 6).alias("est_jaccard")
+    return minhash_lsh_candidates(d, "text", "doc_id").select(
+        F.col("key_a").alias("doc_a"),
+        F.col("key_b").alias("doc_b"),
+        F.round("est_jaccard", 6).alias("est_jaccard"),
     )
 
 
@@ -2283,7 +2209,7 @@ def curated_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     recrawl = d.unionAll(d)
     passing = recrawl.filter(F.size(word_tokens("text")) >= 40)
-    fp = F.md5(F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")))
+    fp = text_fingerprint("text")
     # exact_dedup picks ONE key per fingerprint; the re-crawl's copies
     # carry the SAME doc_id, so both identical rows survive the semi-join
     # and a row-level distinct finishes the job (deterministic — the
@@ -3390,7 +3316,7 @@ def incremental_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from utils_spark.operators.dedup import incremental_dedup
 
     d = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")))
+    fp = text_fingerprint("text")
     f = d.select("doc_id", "source", fp.alias("fp"))
     hist = f.filter(F.col("doc_id") % 5 != 0).select("fp")
     fresh = f.filter(F.col("doc_id") % 5 == 0)

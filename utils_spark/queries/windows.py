@@ -13,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from utils_spark.functions import det_order_key
 from utils_spark.io import load_table
 from utils_spark.registry import register
 
@@ -176,12 +175,13 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism at scale: ordering by md5(key:seed) — partition-layout- and
     engine-independent (SURVEY §7.2), unlike F.rand(seed). Checksummed per
-    stratum so the oracle verifies the exact same rows were chosen."""
+    stratum so the oracle verifies the exact same rows were chosen. Runs
+    the `stratified_sample_exact` operator."""
+    from utils_spark.operators.sampling import stratified_sample_exact
+
     c = load_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy(det_order_key("c_custkey", 290))
     return (
-        c.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 100)
+        stratified_sample_exact(c, "c_mktsegment", "c_custkey", 100, seed=290)
         .groupBy("c_mktsegment")
         .agg(F.count("*").alias("n_sampled"), F.round(F.sum("c_acctbal"), 4).alias("bal_sum"))
     )
