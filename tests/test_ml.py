@@ -109,43 +109,6 @@ def test_cluster_transition_counts(spark):
     assert out == {("a", "x"): 2, ("a", "y"): 1, ("b", "y"): 1}
 
 
-def test_harmony_lite_reduces_batch_separation(spark):
-    import numpy as np
-
-    from utils_spark.operators.ml import harmony_lite
-
-    # two "batches" of the same two biological clusters, batch B shifted by
-    # a constant offset in dims 1-2 — correction should remove the shift
-    rng = np.random.default_rng(7)
-    rows = []
-    for b, off in (("A", 0.0), ("B", 3.0)):
-        for ci, center in enumerate([0.0, 12.0]):
-            for j in range(25):
-                v = rng.normal(scale=0.4, size=4)
-                v[0] += center
-                v[1] += off
-                v[2] += off
-                rows.append((f"{b}{ci}{j}", b, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, ["id", "batch", "vec"])
-
-    def batch_gap(frame, col):
-        means = (
-            frame.select("batch", F.posexplode(col).alias("d", "x"))
-            .filter(F.col("d") == 1)
-            .groupBy("batch")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        vals = {r["batch"]: r["m"] for r in means}
-        return abs(vals["A"] - vals["B"])
-
-    before = batch_gap(df, "vec")
-    corrected = harmony_lite(df, "id", "vec", "batch", k=2, n_iter=2)
-    after = batch_gap(corrected, "corrected")
-    assert before > 2.5
-    assert after < before * 0.2, (before, after)
-
-
 def test_cca_integrate_lite_removes_batch_shift(spark):
     import numpy as np
 

@@ -197,6 +197,14 @@ def test_check_functional_dependency(spark):
     assert len(v) == 1 and v[0]["n_labels"] == 2
 
 
+def test_pivot_membership(spark):
+    from utils_spark.operators import pivot_membership
+
+    df = spark.createDataFrame([("g1", "A"), ("g1", "B"), ("g2", "B"), ("g2", "B")], ["gene", "set"])
+    out = {r["gene"]: (r["A"], r["B"], r["C"]) for r in pivot_membership(df, "gene", "set", ["A", "B", "C"]).collect()}
+    assert out == {"g1": (1, 1, 0), "g2": (0, 1, 0)}
+
+
 def test_per_entity_qc_subsets(spark):
     from utils_spark.operators import per_entity_qc
 

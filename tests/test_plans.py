@@ -546,3 +546,36 @@ def test_ambient_significance_null_grid_broadcast(spark, sf_dir):
     assert not _re.search(r"^\(\d+\) CartesianProduct", p.text, _re.MULTILINE), p.text[:1500]
     assert p.n_broadcast_joins >= 4, p.text[:1500]
     assert "InMemoryTableScan" in p.text, "shared counts aggregate must be cached"
+
+
+def _simple_plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
+
+
+@pytest.mark.parametrize(
+    "name", ["pairwise_ks", "pairwise_ks_one_sided", "pairwise_cvm", "mann_whitney_u"]
+)
+def test_pairwise_fanout_hash_joined(spark, sf_dir, name):
+    """The group-pair fanout of the two-sample tests
+    (`stats.pairwise_value_counts`) joins the data to the pair table once
+    per role, as broadcast hash joins. A single join on
+    (g = group_a) OR (g = group_b) plans as a BroadcastNestedLoopJoin that
+    compares every row with every pair, quadratic in the group count; the
+    only nested-loop join left builds the tiny pair table itself."""
+    text = _simple_plan(REGISTRY[name].fn(spark, sf_dir))
+    nested = [ln for ln in text.splitlines() if "BroadcastNestedLoopJoin" in ln]
+    assert not [ln for ln in nested if " OR " in ln], text[:3000]
+    assert text.count("BroadcastHashJoin") >= 2, text[:3000]
+
+
+def test_zscore_per_group_window_aggregates_once(spark):
+    """`zscore_per_group` evaluates its mean and sd window aggregates once
+    each; inlining them into the non-finite guard would repeat them per
+    reference."""
+    from utils_spark.operators import zscore_per_group
+
+    df = spark.createDataFrame([("a", 1.0), ("a", 2.0), ("b", 3.0), ("b", 5.0)], ["g", "v"])
+    text = _simple_plan(zscore_per_group(df, "v", ["g"]))
+    windows = "\n".join(ln for ln in text.splitlines() if "Window [" in ln)
+    assert windows.count("avg(") == 1, text
+    assert windows.count("stddev_samp(") == 1, text

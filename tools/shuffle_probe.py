@@ -123,10 +123,10 @@ def stage_flag(small_stages: int, big_stages: int) -> str | None:
     return None
 
 
-def fmt_bytes(n: int) -> str:
+def fmt_bytes(n: float) -> str:
     for unit in ("B", "KB", "MB", "GB"):
         if n < 1024 or unit == "GB":
-            return f"{n:.1f} {unit}" if unit != "B" else f"{n} B"
+            return f"{n:.1f} {unit}" if unit != "B" else f"{int(n)} B"
         n /= 1024
     return f"{n:.1f} GB"
 

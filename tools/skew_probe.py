@@ -47,17 +47,12 @@ import urllib.request
 REPO = __file__.rsplit("/tools/", 1)[0]
 sys.path.insert(0, REPO)
 
+from shuffle_probe import completed_stages, fmt_bytes  # noqa: E402
+
 SF_DEFAULT = "/root/testdata/sf0.1"
 MIN_STAGE = 256 * 1024  # ignore stages reading < 256 KB total
 MIN_TASK = 1024 * 1024  # a flag needs a >1 MB max task read
 MIN_CPU_MS = 1000.0  # a CPU flag needs a >=1 s max task runtime
-
-
-def completed_stages(ui_url: str, app_id: str) -> list[dict]:
-    with urllib.request.urlopen(
-        f"{ui_url}/api/v1/applications/{app_id}/stages?status=complete"
-    ) as r:
-        return json.load(r)
 
 
 def task_read_quantiles(
@@ -115,14 +110,6 @@ def cpu_flag(
     if max_ms >= MIN_CPU_MS and skew_ratio(median_ms, max_ms) > check:
         return f"**CPU >{check:g}×**"
     return None
-
-
-def fmt_bytes(n: float) -> str:
-    for unit in ("B", "KB", "MB", "GB"):
-        if n < 1024 or unit == "GB":
-            return f"{n:.1f} {unit}" if unit != "B" else f"{int(n)} B"
-        n /= 1024
-    return f"{n:.1f} GB"
 
 
 def main() -> int:

@@ -1063,55 +1063,6 @@ def principal_curve_pseudotime(
     return out
 
 
-def harmony_lite(
-    df: DataFrame,
-    key_col: str,
-    array_col: str,
-    batch_col: str,
-    k: int = 10,
-    n_iter: int = 3,
-    seed: int = 290,
-) -> DataFrame:
-    """Harmony-style iterative batch correction (reference M8:
-    R/integrate.R:100-123 RunHarmony — soft k-means + per-cluster linear
-    correction; this is the hard-assignment simplification, flagged
-    non-parity per SURVEY §2.8 M8).
-
-    Each iteration: (1) KMeans in the current embedding, (2) per-(cluster,
-    batch) mean offset from the cluster mean, (3) subtract the offset from
-    each vector. All offsets are tiny aggregate tables joined back —
-    nothing collects to the driver; lineage checkpointed per iteration.
-    Returns df + `corrected` array column."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    work = df.select(F.col(key_col).alias("__key"), F.col(batch_col).alias("__batch"),
-                     to_double_array(array_col).alias("__v"))
-    for it in range(n_iter):
-        vec = work.withColumn("__feat", array_to_vector("__v"))
-        model = KMeans(k=k, seed=seed + it, featuresCol="__feat", predictionCol="__c").fit(vec)
-        assigned = model.transform(vec).drop("__feat")
-        comp = assigned.select("__key", "__batch", "__c", F.posexplode("__v").alias("__d", "__x"))
-        cluster_mean = comp.groupBy("__c", "__d").agg(F.avg("__x").alias("__cm"))
-        batch_mean = comp.groupBy("__c", "__batch", "__d").agg(F.avg("__x").alias("__bm"))
-        offsets = (
-            batch_mean.join(cluster_mean, ["__c", "__d"])
-            .select("__c", "__batch", "__d", (F.col("__bm") - F.col("__cm")).alias("__off"))
-        )
-        corrected = (
-            comp.join(offsets, ["__c", "__batch", "__d"], "left")
-            .withColumn("__xc", F.col("__x") - F.coalesce("__off", F.lit(0.0)))
-            .groupBy("__key", "__batch")
-            .agg(F.array_sort(F.collect_list(F.struct("__d", "__xc"))).alias("__pairs"))
-            .select(
-                "__key", "__batch", F.transform("__pairs", lambda p: p["__xc"]).alias("__v")
-            )
-        )
-        work = cut_lineage(corrected)
-    out = work.select(F.col("__key").alias(key_col), F.col("__v").alias("corrected"))
-    return df.join(out, key_col)
-
-
 def cca_integrate_lite(
     df: DataFrame,
     key_col: str,

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from utils_spark.functions import log2_cpm
+
 
 def per_entity_qc(
     df: DataFrame,
@@ -114,7 +116,7 @@ def log_normalize(
     return (
         df.join(totals, entity_col)
         .crossJoin(F.broadcast(mean_total))
-        .withColumn(out_col, F.log2(F.col(value_col) / (F.col("__total") / F.col("__mean_total")) + 1))
+        .withColumn(out_col, log2_cpm(F.col(value_col), F.col("__total") / F.col("__mean_total")))
         .drop("__total", "__mean_total")
     )
 

@@ -101,10 +101,6 @@ def pairwise_distances(
     return joined.select(F.col("a.k").alias("key_a"), F.col("b.k").alias("key_b"), m.alias(metric))
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, d: acc + d)
-
-
 def _hyperplane_band_keys(planes, bands: int, rows_per_band: int):
     """Arrow-vectorized hyperplane band keys: one `pandas_udf` column
     producing the array of `bands` sign-bit strings per vector.

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from utils_spark.functions import zscore
+
 MAD_CONSISTENCY = 1.4826  # stats::mad consistency constant (normal data)
 
 
@@ -100,17 +102,64 @@ def zscore_per_group(
     df: DataFrame, value_col: str, group_cols: list[str] | None = None, out_col: str = "zscore"
 ) -> DataFrame:
     """Per-group z-score with non-finite→NULL (reference P19:
-    R/tradeseq.R:172-182). Single window partitioning, no join."""
+    R/tradeseq.R:172-182). Single window partitioning, no join; mean and
+    sd are window columns so each aggregate runs once, not once per
+    reference in the non-finite guard."""
     w = Window.partitionBy(*(group_cols or []))
-    z = (F.col(value_col) - F.avg(value_col).over(w)) / F.stddev_samp(value_col).over(w)
-    z = F.when(F.isnan(z), F.lit(None)).otherwise(z)
-    return df.withColumn(out_col, z)
+    return (
+        df.select(
+            "*",
+            F.avg(value_col).over(w).alias("__mean"),
+            F.stddev_samp(value_col).over(w).alias("__sd"),
+        )
+        .withColumn(out_col, zscore(F.col(value_col), F.col("__mean"), F.col("__sd")))
+        .drop("__mean", "__sd")
+    )
+
+
+def pairwise_value_counts(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
+    """All-pairs fanout of the two-sample tests: every group pair
+    (group_a < group_b) with the per-value counts of each side →
+    (group_a, group_b, v, ca, cb), one row per (pair, distinct value).
+    NULL values are dropped.
+
+    The pair table is tiny and broadcast; the fanout is two broadcast HASH
+    joins (optimization r16, guide §3): a single join on
+    (__g == group_a) OR (__g == group_b) is a non-equi condition, so it
+    plans as a BroadcastNestedLoopJoin — every data row evaluated against
+    every pair, O(rows × pairs) comparisons that grow quadratically with
+    the group count. Joining each role separately makes both sides
+    hashable (O(1) probes); the union is the identical row multiset
+    (group_a < group_b, so a row matches at most one role per pair) and
+    the per-(pair, value) aggregation is order-insensitive."""
+    e = df.select(F.col(group_col).alias("__g"), F.col(value_col).alias("v")).filter(
+        F.col("v").isNotNull()
+    )
+    types = e.select(F.col("__g").alias("t")).distinct()
+    pairs = (
+        types.alias("x")
+        .join(F.broadcast(types.alias("y")), F.col("x.t") < F.col("y.t"))
+        .select(F.col("x.t").alias("group_a"), F.col("y.t").alias("group_b"))
+    )
+    tagged = (
+        e.join(F.broadcast(pairs), F.col("__g") == F.col("group_a")).select(
+            "group_a", "group_b", "v", F.lit(1).alias("a"), F.lit(0).alias("b")
+        )
+    ).unionAll(
+        e.join(F.broadcast(pairs), F.col("__g") == F.col("group_b")).select(
+            "group_a", "group_b", "v", F.lit(0).alias("a"), F.lit(1).alias("b")
+        )
+    )
+    return tagged.groupBy("group_a", "group_b", "v").agg(
+        F.sum("a").alias("ca"), F.sum("b").alias("cb")
+    )
 
 
 def pairwise_ecdf(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
-    """Shared all-pairs ECDF stage of the pairwise KS tests: broadcast pair
-    table × data, per-pair cumulative windows over distinct values →
-    (group_a, group_b, fa, fb, na, nb), one row per (pair, distinct value).
+    """Shared all-pairs ECDF stage of the pairwise EDF tests: per-pair
+    cumulative windows over the distinct values of `pairwise_value_counts`
+    → (group_a, group_b, fa, fb, na, nb, ca, cb), one row per (pair,
+    distinct value).
 
     Factored out (optimization r15) so one-pass consumers that need BOTH
     one-sided statistics (D⁺ and D⁻ are aggregates of the same fa−fb
@@ -124,39 +173,10 @@ def pairwise_ecdf(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
     parallelism saved on this data size (interleaved A/B: 1.55 s without
     vs 1.76-1.99 s with). On a real multi-row-group read the scan is
     already parallel and the question is moot."""
-    e = df.select(F.col(group_col).alias("__g"), F.col(value_col).alias("__v")).filter(
-        F.col("__v").isNotNull()
-    )
-    types = e.select(F.col("__g").alias("t")).distinct()
-    pairs = (
-        types.alias("x")
-        .join(F.broadcast(types.alias("y")), F.col("x.t") < F.col("y.t"))
-        .select(F.col("x.t").alias("group_a"), F.col("y.t").alias("group_b"))
-    )
-    # pair fanout as two broadcast HASH joins (optimization r16, guide §3):
-    # the former single join on (__g == group_a) OR (__g == group_b) is a
-    # non-equi condition, so it planned as BroadcastNestedLoopJoin — every
-    # data row evaluated against every pair, O(rows × pairs) comparisons
-    # that grow quadratically with the group count. Joining each role
-    # separately makes both sides hashable (O(1) probes); the union is the
-    # identical row multiset (group_a < group_b, so a row matches at most
-    # one role per pair) and the downstream per-(pair, value) aggregation
-    # is order-insensitive.
-    tagged = (
-        e.join(F.broadcast(pairs), F.col("__g") == F.col("group_a")).select(
-            "group_a", "group_b", "__v", F.lit(1).alias("a"), F.lit(0).alias("b")
-        )
-    ).unionAll(
-        e.join(F.broadcast(pairs), F.col("__g") == F.col("group_b")).select(
-            "group_a", "group_b", "__v", F.lit(0).alias("a"), F.lit(1).alias("b")
-        )
-    )
-    pervalue = tagged.groupBy("group_a", "group_b", "__v").agg(
-        F.sum("a").alias("ca"), F.sum("b").alias("cb")
-    )
+    pervalue = pairwise_value_counts(df, value_col, group_col)
     w = (
         Window.partitionBy("group_a", "group_b")
-        .orderBy("__v")
+        .orderBy("v")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     wp = Window.partitionBy("group_a", "group_b")
@@ -167,6 +187,8 @@ def pairwise_ecdf(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
         (F.sum("cb").over(w) / F.sum("cb").over(wp)).alias("fb"),
         F.sum("ca").over(wp).alias("na"),
         F.sum("cb").over(wp).alias("nb"),
+        "ca",
+        "cb",
     )
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from utils_spark.functions import md5_long, word_tokens
 from utils_spark.io import load_table
+from utils_spark.operators.stats import pairwise_ecdf, pairwise_ks_test
 from utils_spark.registry import register
 
 
@@ -310,8 +311,6 @@ def pairwise_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     asymptotic p, all in one plan: pair table (tiny, broadcast) × events,
     ECDFs via per-pair cumulative windows. Scales as O(pairs × values)
     with per-pair parallelism — no driver loop over pairs."""
-    from utils_spark.operators.stats import pairwise_ks_test
-
     # the `pairwise_ks_test` operator, two-sided (it deliberately has NO
     # spread_low_parallelism guard — a spread was tried in r15 and measured
     # net-negative, see stats.py). NOTE: the operator filters value IS NOT
@@ -386,8 +385,6 @@ def pairwise_ks_one_sided(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp(−2·d·d·en)) are unchanged float math over the identical ECDF rows
     — only the duplicated pipeline is gone (measured: two full window
     pipelines → one; ~2× on the sweep timing)."""
-    from utils_spark.operators.stats import pairwise_ecdf
-
     e = load_table(spark, sf_dir, "events")
     ecdf = pairwise_ecdf(e, "value", "event_type")
     diff = F.col("fa") - F.col("fb")
@@ -679,51 +676,15 @@ def pairwise_cvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-volume shuffle), per-pair cumulative windows over distinct
     values, one bounded aggregate. O(pairs x distinct values) with
     per-pair parallelism; no driver loop."""
-    e = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    types = e.select(F.col("event_type").alias("t")).distinct()
-    x, y = types.alias("x"), types.alias("y")
-    # broadcast build side: bounded BroadcastNestedLoopJoin, not a
-    # CartesianProduct (registry-wide plan audit contract)
-    pairs = x.join(F.broadcast(y), F.col("x.t") < F.col("y.t")).select(
-        F.col("x.t").alias("ta"), F.col("y.t").alias("tb")
-    )
-    tagged = e.join(
-        F.broadcast(pairs),
-        (F.col("event_type") == F.col("ta")) | (F.col("event_type") == F.col("tb")),
-    ).select(
-        "ta",
-        "tb",
-        F.col("value").alias("v"),
-        F.when(F.col("event_type") == F.col("ta"), 1).otherwise(0).alias("a"),
-        F.when(F.col("event_type") == F.col("tb"), 1).otherwise(0).alias("b"),
-    )
-    pervalue = tagged.groupBy("ta", "tb", "v").agg(
-        F.sum("a").alias("ca"), F.sum("b").alias("cb")
-    )
-    win = (
-        Window.partitionBy("ta", "tb")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wp = Window.partitionBy("ta", "tb")
-    ecdf = pervalue.select(
-        "ta",
-        "tb",
-        (F.col("ca") + F.col("cb")).alias("w"),
-        (F.sum("ca").over(win) / F.sum("ca").over(wp)).alias("fa"),
-        (F.sum("cb").over(win) / F.sum("cb").over(wp)).alias("fb"),
-        F.sum("ca").over(wp).alias("na"),
-        F.sum("cb").over(wp).alias("nb"),
-    )
-    return ecdf.groupBy("ta", "tb").agg(
-        F.first("na").cast("long").alias("n_a"),
-        F.first("nb").cast("long").alias("n_b"),
+    e = load_table(spark, sf_dir, "events")
+    ecdf = pairwise_ecdf(e, "value", "event_type")
+    na, nb = F.first("na"), F.first("nb")
+    gap = F.col("fa") - F.col("fb")
+    return ecdf.groupBy(F.col("group_a").alias("ta"), F.col("group_b").alias("tb")).agg(
+        na.cast("long").alias("n_a"),
+        nb.cast("long").alias("n_b"),
         F.round(
-            F.first("na")
-            * F.first("nb")
-            / ((F.first("na") + F.first("nb")) * (F.first("na") + F.first("nb")))
-            * F.sum(F.col("w") * (F.col("fa") - F.col("fb")) * (F.col("fa") - F.col("fb"))),
-            6,
+            na * nb / ((na + nb) * (na + nb)) * F.sum((F.col("ca") + F.col("cb")) * gap * gap), 6
         ).alias("cvm_stat"),
     )
 

@@ -8,11 +8,12 @@ partial (map-side) + final aggregation automatically; exact ``percentile``
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from utils_spark.functions import fixed_width_bucket
 from utils_spark.io import load_table
+from utils_spark.operators import relational
 from utils_spark.registry import register
 
 
@@ -134,9 +135,8 @@ def crosstab_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     R/integrate.R:231-232 `proportions(table(a,b), margin=1)`), kept long
     (scale rule SURVEY §7.5) with a window over the aggregated result."""
     o = load_table(spark, sf_dir, "orders")
-    counts = o.groupBy("o_orderstatus", "o_orderpriority").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("o_orderstatus")
-    return counts.withColumn("row_prop", F.round(F.col("n").cast("double") / F.sum("n").over(w), 6))
+    xt = relational.crosstab_proportions(o, "o_orderstatus", "o_orderpriority")
+    return xt.withColumn("row_prop", F.round("row_prop", 6))
 
 
 @register(

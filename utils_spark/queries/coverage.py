@@ -10,8 +10,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
-from utils_spark.functions import det_order_key
 from utils_spark.io import load_table
+from utils_spark.operators import sampling
 from utils_spark.registry import register
 
 
@@ -170,8 +170,7 @@ def random_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     same rows were selected. TakeOrderedAndProject — no full sort."""
     p = load_table(spark, sf_dir, "part")
     return (
-        p.orderBy(det_order_key("p_partkey", 290))
-        .limit(50)
+        sampling.random_subset(p, "p_partkey", 50, seed=290)
         .agg(
             F.count("*").alias("n"),
             F.sum("p_partkey").cast("long").alias("key_checksum"),

@@ -7,11 +7,12 @@ exactly the boundaries SURVEY §3 E1 predicts.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from utils_spark.functions import det_order_key
 from utils_spark.io import load_table
+from utils_spark.operators.qc import log_normalize
+from utils_spark.operators.sampling import stratified_sample_exact
 from utils_spark.operators.stats import mad_outlier_flags
 from utils_spark.registry import register
 
@@ -69,17 +70,8 @@ def atlas_loader_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_acctbal",
         F.concat_ws("_", "n_name", "c_mktsegment").alias("group_key"),
     )
-    w = Window.partitionBy("group_key").orderBy(det_order_key("c_custkey", 290))
-    sampled = keyed.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 20).drop("rn")
-    sf = sampled.groupBy("group_key").agg(F.sum("c_acctbal").alias("g_total"))
-    mean_total = sf.agg(F.avg("g_total").alias("mean_total"))
-    lognorm = (
-        sampled.join(sf, "group_key")
-        .crossJoin(F.broadcast(mean_total))
-        .withColumn(
-            "ln", F.log2(F.col("c_acctbal") / (F.col("g_total") / F.col("mean_total")) + 1)
-        )
-    )
+    sampled = stratified_sample_exact(keyed, "group_key", "c_custkey", 20, seed=290)
+    lognorm = log_normalize(sampled, "group_key", "c_acctbal", out_col="ln")
     return lognorm.groupBy("group_key").agg(
         F.count("*").alias("n_sampled"), F.round(F.sum("ln"), 4).alias("lognorm_sum")
     )

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from utils_spark.functions import make_unique, pair_key
 from utils_spark.io import load_table
+from utils_spark.operators import relational
 from utils_spark.registry import register
 
 
@@ -386,9 +387,8 @@ def freq_ordered_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     R/utils.R:46-52 `sort(table(x))` as factor levels). Tiny post-agg
     window — runs on the already-aggregated (5-row) side."""
     o = load_table(spark, sf_dir, "orders")
-    counts = o.groupBy(F.col("o_orderpriority").alias("level")).agg(F.count("*").alias("n"))
-    w = Window.orderBy(F.desc("n"), F.asc("level"))
-    return counts.withColumn("level_rank", F.dense_rank().over(w).cast("long"))
+    levels = relational.freq_ordered_levels(o, "o_orderpriority")
+    return levels.withColumn("level_rank", F.col("level_rank").cast("long"))
 
 
 @register(

@@ -12,7 +12,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from utils_spark.io import load_table
-from utils_spark.operators.stats import MAD_CONSISTENCY, median_mad
+from utils_spark.functions import squish
+from utils_spark.operators import qc
+from utils_spark.operators.stats import (
+    MAD_CONSISTENCY,
+    median_mad,
+    pairwise_value_counts,
+    zscore_per_group,
+)
 from utils_spark.registry import register
 
 
@@ -88,16 +95,18 @@ def zscore_squish(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no join needed — stats and row values co-partitioned)."""
     c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment")
-    mu = F.avg("c_acctbal").over(w)
-    sigma = F.stddev_samp("c_acctbal").over(w)
-    q1 = F.expr("percentile(c_acctbal, 0.25)").over(w)
-    q3 = F.expr("percentile(c_acctbal, 0.75)").over(w)
+    q = c.select(
+        "*",
+        F.expr("percentile(c_acctbal, 0.25)").over(w).alias("__q1"),
+        F.expr("percentile(c_acctbal, 0.75)").over(w).alias("__q3"),
+    )
+    q1, q3 = F.col("__q1"), F.col("__q3")
     iqr = q3 - q1
-    return c.select(
+    return zscore_per_group(q, "c_acctbal", ["c_mktsegment"]).select(
         "c_custkey",
         "c_mktsegment",
-        F.round((F.col("c_acctbal") - mu) / sigma, 6).alias("zscore"),
-        F.round(F.least(F.greatest(F.col("c_acctbal"), q1 - 1.5 * iqr), q3 + 1.5 * iqr), 4).alias("squished"),
+        F.round("zscore", 6).alias("zscore"),
+        F.round(squish(F.col("c_acctbal"), q1 - 1.5 * iqr, q3 + 1.5 * iqr), 4).alias("squished"),
     )
 
 
@@ -259,18 +268,8 @@ def log_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-entity totals + one scalar mean, then a map-side expression —
     the same two-pass shape works at any scale."""
     o = load_table(spark, sf_dir, "orders")
-    sf = o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("cust_total"))
-    mean_total = sf.agg(F.avg("cust_total").alias("mean_total"))
-    return (
-        o.join(sf, "o_custkey")
-        .crossJoin(F.broadcast(mean_total))
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            F.round(F.log2(F.col("o_totalprice") / (F.col("cust_total") / F.col("mean_total")) + 1), 6).alias(
-                "log_norm"
-            ),
-        )
+    return qc.log_normalize(o, "o_custkey", "o_totalprice").select(
+        "o_orderkey", "o_custkey", F.round("log_norm", 6).alias("log_norm")
     )
 
 
@@ -628,36 +627,27 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (the `pairwise_ks` pattern): corpus collapses once to the
     per-(pair, value) count table, all windows partition by pair (parallel
     across pairs), and rank sums are exact (half-integers x integer
-    counts sum below 2^53) so only the final z rounds."""
+    counts sum below 2^53) so only the final z rounds. The count table is
+    the `pairwise_value_counts` fanout, which drops NULL values; the oracle
+    does not, so they agree because events.value is null-free at every
+    shipped SF (the `pairwise_ks` caveat)."""
     e = load_table(spark, sf_dir, "events")
-    types = e.select(F.col("event_type").alias("t")).distinct()
-    pairs = (
-        types.alias("x")
-        .join(F.broadcast(types.alias("y")), F.col("x.t") < F.col("y.t"))
-        .select(F.col("x.t").alias("ta"), F.col("y.t").alias("tb"))
+    pervalue = pairwise_value_counts(e, "value", "event_type")
+    w = (
+        Window.partitionBy("group_a", "group_b")
+        .orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, -1)
     )
-    tagged = e.join(
-        F.broadcast(pairs),
-        (F.col("event_type") == F.col("ta")) | (F.col("event_type") == F.col("tb")),
-    ).select(
-        "ta",
-        "tb",
-        F.col("value").alias("v"),
-        F.when(F.col("event_type") == F.col("ta"), 1).otherwise(0).alias("a"),
-        F.when(F.col("event_type") == F.col("tb"), 1).otherwise(0).alias("b"),
-    )
-    pervalue = tagged.groupBy("ta", "tb", "v").agg(F.sum("a").alias("ca"), F.sum("b").alias("cb"))
-    w = Window.partitionBy("ta", "tb").orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
     t = F.col("ca") + F.col("cb")
     ranked = pervalue.select(
-        "ta",
-        "tb",
+        "group_a",
+        "group_b",
         "ca",
         "cb",
         (F.coalesce(F.sum(t).over(w), F.lit(0)) + (t + 1) / 2.0).alias("rank_avg"),
         (t * t * t - t).cast("double").alias("tie_term"),
     )
-    agg = ranked.groupBy("ta", "tb").agg(
+    agg = ranked.groupBy("group_a", "group_b").agg(
         F.sum("ca").cast("double").alias("na"),
         F.sum("cb").cast("double").alias("nb"),
         F.sum(F.col("ca") * F.col("rank_avg")).alias("ra"),
@@ -668,8 +658,8 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = ra - na * (na + 1) / 2.0
     var = na * nb / 12.0 * ((n + 1) - ties / (n * (n - 1)))
     return agg.select(
-        F.col("ta").alias("group_a"),
-        F.col("tb").alias("group_b"),
+        "group_a",
+        "group_b",
         na.cast("long").alias("n_a"),
         nb.cast("long").alias("n_b"),
         F.round(u, 1).alias("u_stat"),

@@ -19,7 +19,6 @@ from utils_spark.functions import (
     _minhash_constants,
     _minhash_sig_col,
     char_shingles,
-    det_order_key,
     md5_long,
     minhash_band_structs,
     text_fingerprint,
@@ -1229,13 +1228,11 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     stratum chosen by engine- and partitioning-independent md5 order
     (SURVEY §7.2), checksummed so the oracle proves the identical rows
     were picked on both engines."""
-    from pyspark.sql import Window
+    from utils_spark.operators.sampling import stratified_sample_exact
 
     d = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang", "source").orderBy(det_order_key("doc_id", 290))
     return (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 20)
+        stratified_sample_exact(d, ["lang", "source"], "doc_id", 20, seed=290)
         .groupBy("lang", "source")
         .agg(
             F.count("*").alias("n_sampled"),
