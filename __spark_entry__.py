@@ -38,63 +38,13 @@ def entry(spark: SparkSession) -> DataFrame:
 # Least-verified-RECENTLY first: the driver samples a ~50-query prefix of
 # this dict (rows+schema+hash vs the DuckDB oracle -> CORRECTNESS_r{N}).
 # GENERATED by `python tools/gen_priority.py --write` from
-# CORRECTNESS_r01..r15.json — do not hand-edit.
-# Latest-green histogram at generation: {'r10': 23, 'r11': 50, 'r12': 50, 'r13': 50, 'r14': 50, 'r15': 50}.
-# The 50-slot sample for round 16 is: 23 r10-latest + 27 r11-latest;
+# CORRECTNESS_r01..r16.json — do not hand-edit.
+# Latest-green histogram at generation: {'r11': 23, 'r12': 50, 'r13': 50, 'r14': 50, 'r15': 50, 'r16': 50}.
+# The 50-slot sample for round 17 is: 23 r11-latest + 27 r12-latest;
 # the remainder continues in oldest-evidence order (never-sampled
 # queries rank at tier 5.5 per the VERDICT r9 soft-unfreeze rule).
 # Verify with `python tools/gen_priority.py --check` (must exit 0).
 _PRIORITY = (
-    "sliding_window",  # r10
-    "session_window_native",  # r10
-    "quantile_normalize",  # r10
-    "grouped_correlation",  # r10
-    "grouped_moments",  # r10
-    "token_stats",  # r10
-    "quality_score",  # r10
-    "lang_id_ngram",  # r10
-    "doc_fingerprint",  # r10
-    "minhash_signature",  # r10
-    "bpe_style_tokens",  # r10
-    "chunk_documents",  # r10
-    "benchmark_decontamination",  # r10
-    "corpus_mixture_sample",  # r10
-    "repetition_filter",  # r10
-    "hierarchical_time_rollup",  # r10
-    "cohort_retention",  # r10
-    "min_per_group_join_back",  # r10
-    "having_threshold_join",  # r10
-    "distinct_suppliers_per_attr",  # r10
-    "date_arithmetic",  # r10
-    "embedding_stats",  # r10
-    "label_centroids",  # r10
-    "strict_na_aggregation",  # r11
-    "pairwise_ks_one_sided",  # r11
-    "spline_trend_fits",  # r11
-    "batch_correction",  # r11
-    "pca_embedding",  # r11
-    "denoised_feature_selection",  # r11
-    "cca_anchor_identity",  # r11
-    "cluster_blobs_certificate",  # r11
-    "harmony_shift_recovery",  # r11
-    "sweep_exact_recovery",  # r11
-    "csv_roundtrip_scan",  # r11
-    "jsonl_roundtrip_scan",  # r11
-    "orc_roundtrip_scan",  # r11
-    "converter_roundtrip",  # r11
-    "multimodal_decode_certificate",  # r11
-    "media_dedup_certificate",  # r11
-    "video_frame_sampling",  # r11
-    "audio_energy_certificate",  # r11
-    "image_stats_certificate",  # r11
-    "cluster_pipeline",  # r11
-    "embedding_near_dup",  # r11
-    "approx_sketch_aggs",  # r11
-    "skew_salted_join",  # r11
-    "train_holdout_split",  # r11
-    "zorder_layout",  # r11
-    "stream_tumbling_counts",  # r11
-    "stream_session_windows",  # r11
     "stream_session_windows_append",  # r11
     "stream_stateful_dedup",  # r11
     "stream_custom_state_profile",  # r11
@@ -147,13 +97,6 @@ _PRIORITY = (
     "make_unique_names",  # r12
     "lookup_join",  # r12
     "left_join_agg",  # r12
-    "incremental_dedup_batch",  # r12
-    "k_anonymity_audit",  # r12
-    "suffix_lcp_dedup",  # r12
-    "count_mean_sketch_frequency",  # r12
-    "split_leakage_audit",  # r12
-    "pretokenizer_token_counts",  # r12
-    "ngram_novelty_curve",  # r12
     "stream_cms_sketch_state",  # r12
     "windowed_event_dedup",  # r12
     "event_funnel_conversion",  # r12
@@ -161,6 +104,13 @@ _PRIORITY = (
     "event_pair_affinity",  # r12
     "daily_ewma_smoothing",  # r12
     "hourly_percentile_bands",  # r12
+    "incremental_dedup_batch",  # r12
+    "k_anonymity_audit",  # r12
+    "suffix_lcp_dedup",  # r12
+    "count_mean_sketch_frequency",  # r12
+    "split_leakage_audit",  # r12
+    "pretokenizer_token_counts",  # r12
+    "ngram_novelty_curve",  # r12
     "late_shipment_priority_counts",  # r12
     "priority_class_line_counts",  # r12
     "top_revenue_supplier",  # r12
@@ -206,15 +156,15 @@ _PRIORITY = (
     "logrank_test",  # r13
     "cochran_armitage_trend",  # r13
     "g_test_independence",  # r13
+    "ewma_anomaly_flags",  # r13
+    "rolling_correlation",  # r13
+    "seasonal_decomposition",  # r13
+    "theil_sen_trend",  # r13
     "bpe_training_rounds",  # r13
     "bpe_encoding_apply",  # r13
     "exact_substring_dedup",  # r13
     "lm_trigram_backoff_filter",  # r13
     "bloom_decontamination",  # r13
-    "ewma_anomaly_flags",  # r13
-    "rolling_correlation",  # r13
-    "seasonal_decomposition",  # r13
-    "theil_sen_trend",  # r13
     "customer_order_distribution",  # r13
     "sole_late_supplier_counts",  # r13
     "hard_negative_mining",  # r13
@@ -234,6 +184,15 @@ _PRIORITY = (
     "log_normalize",  # r14
     "grouped_regression",  # r14
     "permutation_test_daily",  # r14
+    "autocorrelation_lags",  # r14
+    "cusum_changepoints",  # r14
+    "ljung_box_test",  # r14
+    "holt_linear_forecast",  # r14
+    "holt_winters_seasonal",  # r14
+    "periodogram_peak",  # r14
+    "dtw_pairwise_distance",  # r14
+    "isotonic_daily_fit",  # r14
+    "kendall_tau_daily",  # r14
     "gopher_quality_rules",  # r14
     "countmin_heavy_hitters",  # r14
     "winnowing_fingerprints",  # r14
@@ -257,15 +216,6 @@ _PRIORITY = (
     "gini_source_inequality",  # r14
     "tokenizer_fertility",  # r14
     "curriculum_length_stages",  # r14
-    "autocorrelation_lags",  # r14
-    "cusum_changepoints",  # r14
-    "ljung_box_test",  # r14
-    "holt_linear_forecast",  # r14
-    "holt_winters_seasonal",  # r14
-    "periodogram_peak",  # r14
-    "dtw_pairwise_distance",  # r14
-    "isotonic_daily_fit",  # r14
-    "kendall_tau_daily",  # r14
     "embedding_int8_quantization",  # r14
     "by_adjust_dependent",  # r14
     "na_drop_subset",  # r15
@@ -296,14 +246,14 @@ _PRIORITY = (
     "multiway_join_revenue",  # r15
     "top_orders_by_revenue",  # r15
     "reorder_to_input",  # r15
-    "mixture_temperature_weights",  # r15
-    "unigram_lm_tokenizer",  # r15
-    "unigram_encoding_apply",  # r15
     "stream_near_dup_registry",  # r15
     "monthly_rollup",  # r15
     "tumbling_window",  # r15
     "json_extract",  # r15
     "pacf_durbin_levinson",  # r15
+    "mixture_temperature_weights",  # r15
+    "unigram_lm_tokenizer",  # r15
+    "unigram_encoding_apply",  # r15
     "cosine_topk",  # r15
     "ann_ivf_bucketed",  # r15
     "ann_ivf_pq",  # r15
@@ -318,6 +268,56 @@ _PRIORITY = (
     "sessionize",  # r15
     "rolling_time_range",  # r15
     "equidepth_histogram",  # r15
+    "strict_na_aggregation",  # r16
+    "pairwise_ks_one_sided",  # r16
+    "spline_trend_fits",  # r16
+    "batch_correction",  # r16
+    "pca_embedding",  # r16
+    "denoised_feature_selection",  # r16
+    "cca_anchor_identity",  # r16
+    "cluster_blobs_certificate",  # r16
+    "harmony_shift_recovery",  # r16
+    "sweep_exact_recovery",  # r16
+    "csv_roundtrip_scan",  # r16
+    "jsonl_roundtrip_scan",  # r16
+    "orc_roundtrip_scan",  # r16
+    "converter_roundtrip",  # r16
+    "multimodal_decode_certificate",  # r16
+    "media_dedup_certificate",  # r16
+    "video_frame_sampling",  # r16
+    "audio_energy_certificate",  # r16
+    "image_stats_certificate",  # r16
+    "cluster_pipeline",  # r16
+    "sliding_window",  # r16
+    "session_window_native",  # r16
+    "embedding_near_dup",  # r16
+    "approx_sketch_aggs",  # r16
+    "skew_salted_join",  # r16
+    "train_holdout_split",  # r16
+    "zorder_layout",  # r16
+    "quantile_normalize",  # r16
+    "grouped_correlation",  # r16
+    "grouped_moments",  # r16
+    "stream_tumbling_counts",  # r16
+    "stream_session_windows",  # r16
+    "hierarchical_time_rollup",  # r16
+    "cohort_retention",  # r16
+    "token_stats",  # r16
+    "quality_score",  # r16
+    "lang_id_ngram",  # r16
+    "doc_fingerprint",  # r16
+    "minhash_signature",  # r16
+    "bpe_style_tokens",  # r16
+    "chunk_documents",  # r16
+    "benchmark_decontamination",  # r16
+    "corpus_mixture_sample",  # r16
+    "repetition_filter",  # r16
+    "min_per_group_join_back",  # r16
+    "having_threshold_join",  # r16
+    "distinct_suppliers_per_attr",  # r16
+    "date_arithmetic",  # r16
+    "embedding_stats",  # r16
+    "label_centroids",  # r16
 )
 
 

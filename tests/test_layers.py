@@ -1,12 +1,15 @@
-"""Import-layering rules of the package: the operator library sits below
-the query registry, so no operator module may import a query module."""
+"""Layering rules of the package: the operator library sits below the
+query registry, so no operator module may import a query module; and the
+loop mechanics (lineage checkpoints, observed metrics) live only in
+``utils_spark.plans``."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
 
-OPERATORS_DIR = pathlib.Path(__file__).resolve().parent.parent / "utils_spark" / "operators"
+PACKAGE_DIR = pathlib.Path(__file__).resolve().parent.parent / "utils_spark"
+OPERATORS_DIR = PACKAGE_DIR / "operators"
 
 
 def _imported_modules(path: pathlib.Path) -> set[str]:
@@ -27,4 +30,21 @@ def test_operators_do_not_import_queries():
         for mod in _imported_modules(path)
         if mod == "utils_spark.queries" or mod.startswith("utils_spark.queries.")
     )
+    assert not offenders, offenders
+
+
+def test_loop_mechanics_only_in_plans():
+    """Operators and queries reach lineage checkpoints and observed metrics
+    through ``plans`` (``cut_lineage``, ``observed_cut``, ``fixpoint``): a
+    raw ``localCheckpoint`` keeps the carried ``sizeInBytes`` statistic
+    that ``cut_lineage`` resets, and a hand-built ``Observation`` re-derives
+    the round contract ``fixpoint`` owns."""
+    offenders = []
+    for path in sorted([*OPERATORS_DIR.glob("*.py"), *(PACKAGE_DIR / "queries").glob("*.py")]):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+                if name in ("localCheckpoint", "Observation"):
+                    offenders.append(f"{path.parent.name}/{path.name}:{node.lineno}: {name}")
     assert not offenders, offenders

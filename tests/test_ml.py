@@ -86,18 +86,6 @@ def test_lisi_low_for_separated_blobs(blobs):
     assert med < 1.2  # neighborhoods are label-pure → LISI ≈ 1
 
 
-def test_pseudotime_monotone_along_path(blobs):
-    from utils_spark.operators.ml import centroid_mst_pseudotime
-
-    out = centroid_mst_pseudotime(blobs, "vec", "cluster", start_cluster="c0")
-    med = {
-        r["cluster"]: r["m"]
-        for r in out.groupBy("cluster").agg(F.expr("percentile(pseudotime, 0.5)").alias("m")).collect()
-    }
-    assert med["c0"] < med["c1"] < med["c2"], med
-    # start-cluster entities sit near zero
-    assert med["c0"] < 2.0
-
 
 def test_cluster_transition_counts(spark):
     from utils_spark.operators.ml import cluster_transition_counts

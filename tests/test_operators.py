@@ -227,15 +227,6 @@ def test_per_entity_qc_subsets(spark):
     assert out["c2"]["subsets_mito_percent"] == 0.0
 
 
-def test_filter_features_by_support(spark):
-    from utils_spark.operators.qc import filter_features_by_support
-
-    rows = [("c1", "g1", 1.0), ("c2", "g1", 2.0), ("c1", "g2", 1.0), ("c1", "MT-x", 9.0), ("c2", "MT-x", 9.0)]
-    df = spark.createDataFrame(rows, ["cell", "gene", "v"])
-    out = filter_features_by_support(df, "gene", "v", min_detected=2, drop_patterns=["^MT-"])
-    assert sorted(set(r["gene"] for r in out.collect())) == ["g1"]
-
-
 def test_module_score(spark):
     from utils_spark.operators import module_score
 

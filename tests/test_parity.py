@@ -164,7 +164,7 @@ def test_collect_sites_match_adjudicated_whitelist():
     # file -> adjudicated count of bounded collect() call sites
     WHITELIST = {
         "operators/ml.py": 4,  # kxd centroids, approx_points bins, distinct-batch list, knn hot-bucket census (≤ _MAX_HOT_BUCKETS rows by limit())
-        "operators/textmodel.py": 2,  # <=8-row merge tables
+        "operators/textmodel.py": 1,  # <=8-row merge tables (the shared BPE/WordPiece round)
         "queries/text.py": 2,  # <=8-row merge tables
         "queries/composite.py": 1,  # data-derived k
         "queries/coverage.py": 1,  # bounded COO

@@ -162,6 +162,125 @@ def test_louvain_job_count_bounded(spark, sf_dir):
     assert 0 < n_jobs <= 60, f"louvain ran {n_jobs} jobs — early-stop or lineage regression?"
 
 
+# Spark jobs of every NON-terminal ``plans.fixpoint`` round, in round
+# order across the call's fixpoint invocations, and the most jobs one
+# whole call may run — both measured on the hand-rolled loops these
+# operators had before the primitive existed (same fixtures, Spark 4.1.2,
+# AQE off as in the test). label_propagation's rounds are pairs of
+# synchronous rounds (its old loop cut every second round); its
+# exact-equality exit ends the fixture at its second pair, whose probe
+# job makes that round terminal. The calls run 1 (connected_components_star,
+# louvain_communities, refine_partition) or 0 jobs fewer than before.
+LOOP_JOBS = {
+    "connected_components_star": ([1] * 6, 10),
+    "label_propagation": ([1], 5),
+    "louvain_communities": ([1, 1], 11),
+    "refine_partition": ([2, 2], 12),
+    "bpe_train": ([2] * 3, 10),
+    "wordpiece_train": ([2] * 3, 10),
+}
+
+
+def _loop_call(spark, name):
+    import itertools
+
+    from pyspark.sql import functions as F
+
+    from utils_spark.operators import dedup, ml, textmodel
+
+    edges = [(a, b, 1.0) for a, b in itertools.combinations([0, 1, 2, 3], 2)]
+    edges += [(a, b, 1.0) for a, b in itertools.combinations([10, 11, 12, 13], 2)]
+    e = spark.createDataFrame(edges + [(3, 10, 1.0)], ["u", "v", "w"])
+    nodes = e.select(F.col("u").alias("n")).union(e.select(F.col("v").alias("n"))).distinct()
+    texts = [
+        "low low low low lower lower newest newest newest widest",
+        "aaa aaa abab abab abab banana bandana",
+        "the cat sat on the mat the bat",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), ["id", "text"])
+    calls = {
+        "connected_components_star": lambda: dedup.connected_components_star(
+            spark.createDataFrame([(i, i + 1) for i in range(19)], ["key_a", "key_b"])
+        ),
+        "label_propagation": lambda: ml.label_propagation(e, nodes, "n", max_iter=6),
+        "louvain_communities": lambda: ml.louvain_communities(e, nodes, "n", weight_col="w"),
+        "refine_partition": lambda: ml.refine_partition(
+            e, nodes.select(F.col("n").alias("node"), F.lit(0).alias("community")), weight_col="w"
+        ),
+        "bpe_train": lambda: textmodel.bpe_train(docs, "text", 4),
+        "wordpiece_train": lambda: textmodel.wordpiece_train(docs, "text", 4),
+    }
+    module = {"connected_components_star": dedup, "bpe_train": textmodel, "wordpiece_train": textmodel}
+    return calls[name], module.get(name, ml)
+
+
+@pytest.mark.parametrize("name", sorted(LOOP_JOBS))
+def test_fixpoint_loop_job_counts(spark, monkeypatch, name):
+    """The per-round contract of ``plans.fixpoint`` on each ported loop:
+    every round's lineage cut and driver-side scalars ride ONE checkpoint
+    job carrying exactly one Observation, each round runs the Spark jobs
+    of the hand-rolled loop it replaced, and the whole call no more
+    (LOOP_JOBS). Rounds are told apart by a job group the test sets as
+    each round's step starts. AQE is off so a count is a property of the
+    plans: with AQE on, runtime re-planning moved single rounds of the
+    old loops by ±1 job between identical runs."""
+    import uuid
+
+    from pyspark.sql import Observation
+
+    import utils_spark.plans as plans
+
+    call, module = _loop_call(spark, name)
+    sc = spark.sparkContext
+    outer = f"{name}-{uuid.uuid4().hex}"
+    invocations = []  # per fixpoint call: [[job group, n_observations, produced]]
+    running = []  # the rounds of the fixpoint call in progress
+    real_fixpoint = module.fixpoint
+
+    class CountingObservation(Observation):
+        def __init__(self, *args):
+            super().__init__(*args)
+            if running:
+                running[0][-1][1] += 1
+
+    def spy(step, state, max_iter, **kw):
+        rounds = []
+        invocations.append(rounds)
+        running.append(rounds)
+
+        def tagged(s, it):
+            group = f"{outer}-{len(invocations)}-{it}"
+            sc.setJobGroup(group, group)
+            rounds.append([group, 0, False])
+            nxt = step(s, it)
+            rounds[-1][2] = nxt is not None
+            return nxt
+
+        try:
+            return real_fixpoint(tagged, state, max_iter, **kw)
+        finally:
+            running.pop()
+            sc.setJobGroup(outer, outer)
+
+    monkeypatch.setattr(module, "fixpoint", spy)
+    monkeypatch.setattr(plans, "Observation", CountingObservation)
+    sc.setJobGroup(outer, outer)
+    try:
+        with plans.scoped_conf(spark, "spark.sql.adaptive.enabled", "false"):
+            call().collect()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    rounds = [r for inv in invocations for r in inv]
+    assert rounds and all(n_obs == int(produced) for _, n_obs, produced in rounds), rounds
+    non_terminal = [len(tracker.getJobIdsForGroup(g)) for inv in invocations for g, _, _ in inv[:-1]]
+    want, max_total = LOOP_JOBS[name]
+    assert non_terminal == want, (non_terminal, want)
+    total = len(tracker.getJobIdsForGroup(outer)) + sum(len(tracker.getJobIdsForGroup(g)) for g, _, _ in rounds)
+    assert total <= max_total, (total, max_total)
+
+
 def test_dedup_keep_best_no_raw_gram_join(spark, sf_dir):
     """VERDICT r4 item 2: the keep-policy's candidate stage must be
     MinHash-LSH + candidate-keyed exact verification. A bare gram=gram

@@ -126,14 +126,6 @@ def test_salted_join_matches_plain(spark):
     assert {(r["k"], r["name"]): r["count"] for r in got} == want
 
 
-def test_skewed_group_count_matches_plain(spark):
-    from utils_spark.operators.skew import skewed_group_count
-
-    big = spark.createDataFrame([(i % 3,) for i in range(300)], ["k"])
-    got = {r["k"]: r["n"] for r in skewed_group_count(big, "k").collect()}
-    assert got == {0: 100, 1: 100, 2: 100}
-
-
 @given(
     lines=st.lists(
         st.text(

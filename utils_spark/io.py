@@ -38,6 +38,23 @@ TABLES = (
 DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
 
+def pin_read_confs(spark: SparkSession) -> None:
+    """The session conf policy of every star-schema read, batch
+    (``load_table``) and streaming (``streaming.read_events_stream``):
+    ``nanosAsLong`` so TIMESTAMP(NANOS) parquet reads as long nanos instead
+    of failing, and a UTC session time zone, under which the
+    timestamp_ntz -> timestamp cast is wall-clock-preserving. Set on the
+    caller's session (runtime-settable, idempotent), so caller-supplied
+    vanilla sessions read identically to ones built by our factory."""
+    if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # NOTE: no sentinel default to conf.get here — Spark 4 VALIDATES the
+    # caller-supplied default when the conf is unset, so get(key, "") throws
+    # INVALID_CONF_VALUE on exactly the vanilla sessions this guard exists for
+    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one star-schema table (columnar parquet; pruning/pushdown-able).
 
@@ -53,9 +70,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     - timestamp_ntz → cast to TimestampType (session tz is UTC in this
       environment, so the wall-clock value is unchanged).
 
-    The nanos config is set here (runtime-settable, idempotent) rather than
-    only at session build, so any caller-supplied vanilla SparkSession can
-    read the file — not just sessions built by our own factory.
+    The nanos config is set here (``pin_read_confs``) rather than only at
+    session build, so any caller-supplied vanilla SparkSession can read
+    the file — not just sessions built by our own factory.
 
     SIDE EFFECT: the conf stays set on the session after this call, so any
     later parquet read of a TIMESTAMP(NANOS) column in the same session
@@ -65,16 +82,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     reading unrelated nanos parquet in the same session should convert as
     done here (timestamp_micros(ts div 1000)).
     """
-    if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # the timestamp_ntz -> timestamp cast below is wall-clock-preserving only
-    # under UTC; pin it for caller-supplied vanilla sessions too (same
-    # defensive-config pattern as nanosAsLong above)
-    # NOTE: no sentinel default to conf.get here — Spark 4 VALIDATES the
-    # caller-supplied default when the conf is unset, so get(key, "") throws
-    # INVALID_CONF_VALUE on exactly the vanilla sessions this guard exists for
-    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_read_confs(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")

@@ -17,7 +17,7 @@ from utils_spark.functions import (
     text_fingerprint,
 )
 from utils_spark.io import spread_low_parallelism
-from utils_spark.plans import cut_lineage, scratch_persist
+from utils_spark.plans import SAME_STATE, cut_lineage, fixpoint, scratch_persist
 
 # Size gate for the shingled-frame persists below (optimization r16, guide
 # §5 + VERDICT r15 item 2): the (key, grams) frame is ~shingle_k× the
@@ -206,42 +206,20 @@ def connected_components_star(
         every edge points downward to a candidate root.
 
     At the fixed point the edge set is a star per component rooted at
-    the component min. Convergence detection (optimization r16, guide
-    §1.2 "don't pay jobs you can fold into existing passes"): every
-    round's checkpoint pass already scans the new edge set, so it
-    OBSERVES two free set-fingerprint metrics — edge count and the
-    bit_xor of xxhash64(u, v) (order-independent and overflow-free — a
-    long SUM would trip ANSI overflow; distinct sets, so the fold is a
-    set fingerprint). While the fingerprint differs
-    from the previous round's the set provably changed and the round
-    pays ZERO extra jobs (previously: up to two limit(1) anti-join
-    count jobs per round). Only when the fingerprint MATCHES does the
-    exact limit(1) anti-join probe run to confirm — so termination
-    remains decided by exact set equality, never by the hash (a
-    colliding fingerprint on a changed set just runs the probe, sees
-    the change, and continues). Each round is two bounded groupBy/join
-    shuffles over the CURRENT edge set, lineage cut per round. Round
-    count is O(log n) on ANY graph shape — the safe default for 100 TB
-    duplicate graphs where chain-like components (A~B~C~... near-dup
-    drift) make O(diameter) propagation unbounded. Deterministic."""
-    from pyspark.sql import Observation
+    the component min. The rounds run on ``plans.fixpoint`` with its
+    exact-equality stop rule (``SAME_STATE``): a round whose edge set
+    provably changed pays no extra job, and termination is decided by
+    exact set equality. Round 0 materializes the deduplicated input edge
+    set (edge producers can be expensive LSH joins), so the first star
+    round is compared against it. Each round is two bounded groupBy/join
+    shuffles over the CURRENT edge set. Round count is O(log n) on ANY
+    graph shape — the safe default for 100 TB duplicate graphs where
+    chain-like components (A~B~C~... near-dup drift) make O(diameter)
+    propagation unbounded. Deterministic."""
 
-    def _fingerprint_metrics():
-        return (
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        )
-
-    obs0 = Observation()
-    e = cut_lineage(  # edge producers can be expensive (LSH joins) — materialize
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .observe(obs0, *_fingerprint_metrics())
-    )
-    prev_fp = (obs0.get["n"], obs0.get["h"])
-    nodes = e.select("u").union(e.select(F.col("v").alias("u"))).distinct()
-    for _i in range(max_iter):
+    def star_round(e: DataFrame, it: int) -> DataFrame:
+        if it == 0:
+            return e.filter(F.col("u") != F.col("v")).distinct()
         # large-star over the bidirectional neighborhood
         bidir = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         lmin = bidir.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
@@ -258,28 +236,23 @@ def connected_components_star(
         ).distinct()
         smin = edir.groupBy("u").agg(F.min("v").alias("m"))
         joined = edir.join(smin, "u")
-        obs = Observation()
-        new_e = cut_lineage(
+        return (
             joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(joined.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .observe(obs, *_fingerprint_metrics())
         )
-        fp = (obs.get["n"], obs.get["h"])
-        if fp != prev_fp:
-            changed = True
-        else:
-            # fingerprint matched — confirm the fixed point EXACTLY
-            changed = bool(
-                new_e.join(e, ["u", "v"], "left_anti").limit(1).count()
-                or e.join(new_e, ["u", "v"], "left_anti").limit(1).count()
-            )
-        e, prev_fp = new_e, fp
-        if not changed:
-            break
-    # stars point child → root(min); roots and isolated-in-e nodes map to
-    # themselves
+
+    e, _ = fixpoint(
+        star_round,
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")),
+        max_iter + 1,
+        until=SAME_STATE,
+    )
+    # stars point child → root(min); roots map to themselves. Every round
+    # keeps the node set of the input edges (each node stays an endpoint),
+    # so the final stars list every node.
+    nodes = e.select("u").union(e.select(F.col("v").alias("u"))).distinct()
     asg = e.select("u", F.col("v").alias("p"))
     return (
         nodes.join(asg, "u", "left")

@@ -17,7 +17,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from utils_spark.functions import to_double_array
-from utils_spark.plans import cut_lineage, scratch_persist
+from utils_spark.plans import (
+    SAME_STATE,
+    cut_lineage,
+    fixpoint,
+    interpreted_execution,
+    observed_cut,
+    scaled_shuffle_partitions,
+    scoped_conf,
+    scratch_persist,
+)
 
 
 def _to_vector_col(df: DataFrame, array_col: str, out: str = "features") -> DataFrame:
@@ -370,18 +379,25 @@ def label_propagation(
     list (reference M5 baseline: R/wrapper.R:296-303 FindClusters; exact
     Louvain modularity parity is out of scope — SURVEY §7.3, property
     tests instead). Each round: adopt the most frequent neighbor label
-    (ties → smallest label, deterministic). Lineage checkpointed."""
+    (ties → smallest label, deterministic).
+
+    Rounds run in pairs on ``plans.fixpoint`` (one lineage cut per pair)
+    with its exact-equality stop rule: once a pair of rounds leaves the
+    labels unchanged, every later pair does too (the update is a
+    deterministic function of the labels), so stopping there returns
+    exactly the labels of the full ``max_iter`` rounds; an odd last
+    round is applied after the loop."""
     lbl = nodes.select(F.col(key_col).alias("node"), (F.col(seed_col) if seed_col else F.col(key_col)).alias("label"))
     # cut the upstream lineage once: the edge list is re-read every round
     # (and the round plans reference lbl twice), so an expensive producer
     # like an LSH KNN join would otherwise be re-planned 2^iters times
-    und = (
+    und = cut_lineage(
         edges.select("u", "v")
         .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
-        .localCheckpoint()
     )
-    for i in range(max_iter):
+
+    def lpa_round(lbl: DataFrame) -> DataFrame:
         neigh = (
             und.join(lbl.withColumnRenamed("node", "v"), "v")
             .groupBy("u", "label")
@@ -393,13 +409,13 @@ def label_propagation(
             .filter(F.col("__rn") == 1)
             .select(F.col("u").alias("node"), "label")
         )
-        lbl = (
+        return (
             lbl.join(new_lbl.withColumnRenamed("label", "__new"), "node", "left")
             .select("node", F.coalesce("__new", "label").alias("label"))
         )
-        if (i + 1) % 2 == 0:
-            lbl = cut_lineage(lbl)
-    return lbl
+
+    lbl, _ = fixpoint(lambda lbl, _it: lpa_round(lpa_round(lbl)), lbl, max_iter // 2, until=SAME_STATE)
+    return lpa_round(lbl) if max_iter % 2 else lbl
 
 
 def _symmetrize(edges: DataFrame, weight_col: str | None) -> DataFrame:
@@ -485,30 +501,26 @@ def louvain_communities(
     level repeats on the quotient graph; final labels compose the levels.
 
     Scale shape: pure aggregate-messages — each sweep is one join of edges
-    with the assignment plus two bounded aggs; no per-node driver loop;
-    lineage cut by localCheckpoint per sweep. All driver-scalar probes
-    (2m, the desired-move convergence count, and the phase-2 crossing
-    test) ride the existing checkpoint jobs as observe() metrics, so a
-    sweep costs exactly one action; sweep parallelism is sized from the
-    measured edge count (no-op at cluster scale — see
+    with the assignment plus two bounded aggs (``_local_moving_sweep``,
+    shared with ``refine_partition``); no per-node driver loop. The
+    sweeps run on ``plans.fixpoint``, so the lineage cut and the
+    desired-move convergence count ride one checkpoint job per sweep; 2m
+    and the edge count ride the input checkpoint, and the phase-2
+    crossing test rides the last sweep. Sweep parallelism is sized from
+    the measured edge count (no-op at cluster scale — see
     plans.scaled_shuffle_partitions). Keys must be integral.
 
     Returns (node, community)."""
-    from pyspark.sql import Observation
-
     spark = edges.sparkSession
-    # 2m rides the mandatory edge-count job as an observe() metric; graph
-    # contraction preserves total weight (intra-community weight becomes
-    # self-loops), so ONE measurement serves every level — the per-level
-    # degree-checkpoint job that used to carry it is gone.
-    obs_m2 = Observation("louvain_m2")
-    und = cut_lineage(_symmetrize(edges, weight_col)).observe(
-        obs_m2, F.sum("w").alias("m2")
-    )
+    # 2m and the edge count ride the input checkpoint; graph contraction
+    # preserves total weight (intra-community weight becomes self-loops),
+    # so ONE measurement serves every level.
+    und, m = observed_cut(_symmetrize(edges, weight_col), F.sum("w").alias("m2"))
     base = nodes.select(F.col(key_col).cast("long").alias("node")).distinct()
     # node → final community, composed across levels
     mapping = base.select("node", F.col("node").alias("community"))
-
+    if not m["m2"]:
+        return mapping
     # Iterative sweeps shuffle the same bounded graph dozens of times; size
     # their parallelism from the MEASURED edge count (no-op at 100 TB —
     # see plans.scaled_shuffle_partitions). AQE is disabled inside the
@@ -516,24 +528,96 @@ def louvain_communities(
     # AQE's stage-as-job submission added ~15 scheduler round-trips per
     # run on an already-2-partition plan (measured ~0.7 s at sf0.1) while
     # having nothing left to re-optimize; restored on exit either way.
-    from utils_spark.plans import scaled_shuffle_partitions
+    with scoped_conf(spark, "spark.sql.adaptive.enabled", "false"), scaled_shuffle_partitions(
+        spark, m["n"], 100_000
+    ), interpreted_execution(spark, m["n"]):
+        return _louvain_levels(und, mapping, float(m["m2"]), resolution, max_iter, levels)
 
-    n_edges = und.count()
-    m2_val = obs_m2.get["m2"]
-    if not m2_val:
-        return mapping
-    from utils_spark.plans import interpreted_execution
 
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        with scaled_shuffle_partitions(spark, n_edges, 100_000), interpreted_execution(
-            spark, n_edges
-        ):
-            mapping = _louvain_levels(und, mapping, float(m2_val), resolution, max_iter, levels)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-    return mapping
+def _sweep_candidates(asg: DataFrame, edges: DataFrame, deg: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Candidate moves of one local-moving sweep under assignment ``asg``
+    (node, community): per node u, the weight w_ic into each neighboring
+    community c plus a zero-weight stay row for its own community
+    c_own, and the community strength table (community, tot). ``edges``
+    (u, v, w) must exclude self-loops — super-node internal weight
+    travels with the node, so it cancels in gain comparisons and must not
+    inflate the stay option. The stay row is unioned BEFORE the
+    aggregation so one groupBy builds the full candidate set (it sums
+    into the real in-community weight when present, stands alone
+    otherwise — incl. isolated nodes); tagging c_own afterwards is a
+    plain u-keyed join."""
+    ctot = (
+        asg.join(deg.withColumnRenamed("u", "node"), "node")
+        .groupBy("community")
+        .agg(F.sum("k").alias("tot"))
+    )
+    nbr = (
+        edges.join(asg.withColumnRenamed("node", "v").withColumnRenamed("community", "c"), "v")
+        .select("u", "c", F.col("w").alias("w_ic"))
+    )
+    own = asg.select(F.col("node").alias("u"), F.col("community").alias("c_own"))
+    stay = own.select("u", F.col("c_own").alias("c"), F.lit(0.0).alias("w_ic"))
+    cand = (
+        nbr.unionByName(stay)
+        .groupBy("u", "c")
+        .agg(F.sum("w_ic").alias("w_ic"))
+        .join(own, "u")
+    )
+    return cand, ctot
+
+
+def _local_moving_sweep(
+    cand: DataFrame, ctot: DataFrame, deg: DataFrame, m2: float, resolution: float
+) -> DataFrame:
+    """The scoring half of a local-moving sweep, shared by Louvain and the
+    Leiden refinement: per node, the candidate community with the
+    largest resolution-scaled modularity gain
+    ΔQ(i→C) = w(i→C)/2m − γ·k_i·tot(C∖i)/(2m)² (ties → smallest id).
+    Returns (node, c_best, c_own, has_cross); has_cross says whether the
+    node has ANY positive-weight edge into another community under the
+    sweep-start assignment — an unordered max over the same window
+    partition (no extra shuffle), pruned by the planner when unused. Each
+    caller applies its own move gate."""
+    scored = (
+        cand.join(ctot.withColumnRenamed("community", "c"), "c")
+        .join(deg, "u")
+        .withColumn(
+            "tot_excl",
+            F.col("tot") - F.when(F.col("c") == F.col("c_own"), F.col("k")).otherwise(0.0),
+        )
+        .withColumn(
+            "gain",
+            F.col("w_ic") / m2
+            - F.lit(resolution) * F.col("k") * F.col("tot_excl") / (m2 * m2),
+        )
+    )
+    wbest = Window.partitionBy("u").orderBy(F.desc("gain"), F.asc("c"))
+    return (
+        scored.withColumn("__rn", F.row_number().over(wbest))
+        .withColumn(
+            "has_cross",
+            F.max(
+                ((F.col("c") != F.col("c_own")) & (F.col("w_ic") > 0)).cast("long")
+            ).over(Window.partitionBy("u")),
+        )
+        .filter(F.col("__rn") == 1)
+        .select(
+            F.col("u").alias("node"),
+            F.col("c").alias("c_best"),
+            F.col("c_own"),
+            "has_cross",
+        )
+    )
+
+
+def _parity_gate(it: int):
+    """Move eligibility shared by both sweeps: id-decreasing moves are
+    monotone (labels are bounded below, so they can never cycle) and
+    always eligible; id-increasing moves need xxhash64(node)%2 == it%2,
+    which breaks A⇄B swap cycles (always id-increasing on one side)."""
+    return (F.col("c_best") < F.col("c_own")) | (
+        F.pmod(F.xxhash64("node"), F.lit(2)) == F.lit(it % 2)
+    )
 
 
 def _louvain_levels(
@@ -544,12 +628,10 @@ def _louvain_levels(
     max_iter: int,
     levels: int,
 ) -> DataFrame:
-    """Level/sweep loop of ``louvain_communities`` (split out so the
-    shuffle-parallelism and AQE guards wrap it with try/finally). ``m2``
-    (total directed weight = 2m) is measured once by the caller —
-    contraction preserves it exactly."""
-    from pyspark.sql import Observation
-
+    """Level/sweep loop of ``louvain_communities``, run inside its
+    shuffle-parallelism and AQE guards. ``m2`` (total directed weight =
+    2m) is measured once by the caller — contraction preserves it
+    exactly."""
     for level in range(levels):
         # deg is read 2-3x per sweep (ctot + scored + stay); checkpoint it
         # once per level so every sweep's plan references a flat
@@ -557,12 +639,9 @@ def _louvain_levels(
         # 3x per sweep (measured: cache() kept execution cheap but paid
         # more in driver-side planning than the one checkpoint job costs)
         deg = cut_lineage(und.groupBy("u").agg(F.sum("w").alias("k")))
-        # every node with an edge appears in deg — reuse it as the node set
-        # (isolated super-nodes keep strength 0 and never move anyway)
-        asg = deg.select(F.col("u").alias("node"), F.col("u").alias("community"))
+        nonself = und.filter(F.col("u") != F.col("v"))
 
-        crossing_at_fixpoint: int | None = None
-        for it in range(max_iter):
+        def sweep(asg: DataFrame, it: int) -> DataFrame:
             if it == 0:
                 # SWEEP-1 SPECIALIZATION: the level starts from the
                 # identity assignment (community(v) == v), so ctot IS the
@@ -570,118 +649,40 @@ def _louvain_levels(
                 # neighbor — the two asg joins and the community
                 # re-aggregation collapse to projections. Saves ~4
                 # exchanges on the first (often only-moving) sweep of
-                # every level; the general path below is untouched.
+                # every level.
                 ctot = deg.select(F.col("u").alias("community"), F.col("k").alias("tot"))
-                nbr_pre = und.filter(F.col("u") != F.col("v")).select(
-                    "u", F.col("v").alias("c"), F.col("w").alias("w_ic")
-                )
+                nbr = nonself.select("u", F.col("v").alias("c"), F.col("w").alias("w_ic"))
                 stay = deg.select("u", F.col("u").alias("c"), F.lit(0.0).alias("w_ic"))
                 cand = (
-                    nbr_pre.unionByName(stay)
+                    nbr.unionByName(stay)
                     .groupBy("u", "c")
                     .agg(F.sum("w_ic").alias("w_ic"))
                     .withColumn("c_own", F.col("u"))
                 )
             else:
-                ctot = (
-                    asg.join(deg.withColumnRenamed("u", "node"), "node", "left")
-                    .na.fill({"k": 0.0})
-                    .groupBy("community")
-                    .agg(F.sum("k").alias("tot"))
-                )
-                # per node: weight into each neighboring community. Self-loops
-                # (super-node internal weight after contraction) are excluded —
-                # they travel with the node, so they cancel in gain comparisons
-                # and must not inflate the stay option.
-                nbr_pre = (
-                    und.filter(F.col("u") != F.col("v"))
-                    .join(asg.withColumnRenamed("node", "v").withColumnRenamed("community", "c"), "v")
-                    .select("u", "c", F.col("w").alias("w_ic"))
-                )
-                own = asg.select(F.col("node").alias("u"), F.col("community").alias("c_own"))
-                # the zero-weight stay row is unioned BEFORE the aggregation so
-                # one groupBy builds the full candidate set (the stay seed sums
-                # into the real in-community weight when present, stands alone
-                # otherwise — incl. isolated nodes); tagging c_own afterwards is
-                # a plain u-keyed join. One shuffle fewer per sweep than the old
-                # right-join + union + re-aggregate shape.
-                stay = own.select("u", F.col("c_own").alias("c"), F.lit(0.0).alias("w_ic"))
-                cand = (
-                    nbr_pre.unionByName(stay)
-                    .groupBy("u", "c")
-                    .agg(F.sum("w_ic").alias("w_ic"))
-                    .join(own, "u")
-                )
-            scored = (
-                cand.join(ctot.withColumnRenamed("community", "c"), "c")
-                .join(deg, "u")
-                .withColumn(
-                    "tot_excl",
-                    F.col("tot") - F.when(F.col("c") == F.col("c_own"), F.col("k")).otherwise(0.0),
-                )
-                .withColumn(
-                    "gain",
-                    F.col("w_ic") / m2
-                    - F.lit(resolution) * F.col("k") * F.col("tot_excl") / (m2 * m2),
-                )
+                cand, ctot = _sweep_candidates(asg, nonself, deg)
+            best = _local_moving_sweep(cand, ctot, deg, m2, resolution)
+            moves = _parity_gate(it) & (F.col("c_best") != F.col("c_own"))
+            return best.withColumn(
+                "community", F.when(moves, F.col("c_best")).otherwise(F.col("c_own"))
             )
-            wbest = Window.partitionBy("u").orderBy(F.desc("gain"), F.asc("c"))
-            # has_cross: does u have ANY positive-weight edge into another
-            # community under the sweep-start assignment? Computed as an
-            # unordered max over the same window partition (no extra
-            # shuffle) and carried on the kept row — it feeds the
-            # phase-2 crossing probe for free at the fixed point.
-            wpart = Window.partitionBy("u")
-            best = (
-                scored.withColumn("__rn", F.row_number().over(wbest))
-                .withColumn(
-                    "has_cross",
-                    F.max(
-                        ((F.col("c") != F.col("c_own")) & (F.col("w_ic") > 0)).cast("long")
-                    ).over(wpart),
-                )
-                .filter(F.col("__rn") == 1)
-                .select(
-                    F.col("u").alias("node"),
-                    F.col("c").alias("c_best"),
-                    F.col("c_own"),
-                    "has_cross",
-                    # id-decreasing moves are monotone (can't cycle) → always
-                    # eligible; id-increasing moves need the parity gate
-                    (
-                        (F.col("c") < F.col("c_own"))
-                        | (F.pmod(F.xxhash64("u"), F.lit(2)) == F.lit(it % 2))
-                    ).alias("eligible"),
-                )
-            )
-            moved = best.withColumn(
-                "new_c",
-                F.when(F.col("eligible") & (F.col("c_best") != F.col("c_own")), F.col("c_best")).otherwise(
-                    F.col("c_own")
-                ),
-            )
-            # Convergence test on DESIRED moves (any node whose argmax beats
-            # staying, parity-eligible or not): n_desired == 0 is the exact
-            # local-moving fixed point — no node wants to change under the
-            # current assignment. Both counters ride the checkpoint job as
-            # observe() metrics — zero extra actions per sweep.
-            obs_mv = Observation(f"louvain_mv_l{level}_i{it}")
-            moved = cut_lineage(
-                moved.select("node", "new_c", "c_own", "c_best", "has_cross").observe(
-                    obs_mv,
-                    F.sum((F.col("c_best") != F.col("c_own")).cast("long")).alias("d"),
-                    F.sum("has_cross").alias("x"),
-                )
-            )
-            metrics = obs_mv.get
-            n_desired = metrics["d"]
-            asg = moved.select("node", F.col("new_c").alias("community"))
-            if not n_desired:
-                # at the fixed point asg equals the sweep-start assignment,
-                # so the sweep's own cross-community evidence IS the
-                # phase-2 probe — no extra join pass
-                crossing_at_fixpoint = int(metrics["x"] or 0)
-                break
+
+        # every node with an edge appears in deg — reuse it as the node set
+        # (isolated super-nodes keep strength 0 and never move anyway).
+        # Convergence is tested on DESIRED moves (any node whose argmax
+        # beats staying, parity-eligible or not): d == 0 is the exact
+        # local-moving fixed point — no node wants to change under the
+        # current assignment.
+        asg, last = fixpoint(
+            sweep,
+            deg.select(F.col("u").alias("node"), F.col("u").alias("community")),
+            max_iter,
+            metrics=(
+                F.sum((F.col("c_best") != F.col("c_own")).cast("long")).alias("d"),
+                F.sum("has_cross").alias("x"),
+            ),
+            until=lambda m: not m["d"],
+        )
 
         level_map = asg.select(F.col("node").alias("community"), F.col("community").alias("__c2"))
         mapping = (
@@ -695,16 +696,16 @@ def _louvain_levels(
             # self-loops and further levels cannot move anything — return
             # the lazily-composed mapping and let the consumer's action
             # materialize it (the eager checkpoint used to cost a job on
-            # exactly the converged path). When the sweeps converged, the
-            # final sweep's has_cross metric already answered the probe
-            # (free); only a max_iter bailout (asg moved past the last
-            # sweep's evidence) pays the explicit limit(1) probe.
-            if crossing_at_fixpoint is not None:
-                crossing = crossing_at_fixpoint
+            # exactly the converged path). When the sweeps converged, asg
+            # equals the last sweep's start assignment, so that sweep's
+            # has_cross metric already answered the probe (free); only a
+            # max_iter bailout (asg moved past the last sweep's evidence)
+            # pays the explicit limit(1) probe.
+            if last and not last["d"]:
+                crossing = int(last["x"] or 0)
             else:
                 crossing = (
-                    und.filter(F.col("u") != F.col("v"))
-                    .join(asg.withColumnRenamed("node", "u").withColumnRenamed("community", "cu"), "u")
+                    nonself.join(asg.withColumnRenamed("node", "u").withColumnRenamed("community", "cu"), "u")
                     .join(asg.withColumnRenamed("node", "v").withColumnRenamed("community", "cv"), "v")
                     .filter(F.col("cu") != F.col("cv"))
                     .limit(1)
@@ -749,8 +750,6 @@ def pagerank(
     sized from the measured edge count (no-op at cluster scale). Returns
     (``key_col``, rank) after ``n_iter`` rounds, unnormalized-rounded by
     the caller."""
-    from utils_spark.plans import scaled_shuffle_partitions
-
     spark = edges.sparkSession
     e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
     ns = cut_lineage(nodes.select(F.col(key_col).cast("long").alias("n")).distinct())
@@ -799,8 +798,6 @@ def hits(edges: DataFrame, n_iter: int = 3) -> tuple[DataFrame, DataFrame]:
 
     Returns ``(hubs, authorities)`` as (node, score) DataFrames after
     ``n_iter`` rounds."""
-    from utils_spark.plans import scaled_shuffle_partitions
-
     spark = edges.sparkSession
     e = cut_lineage(
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long")).distinct()
@@ -861,34 +858,10 @@ def lisi_score(
     return p2
 
 
-def centroid_mst_pseudotime(
-    df: DataFrame,
-    array_col: str,
-    cluster_col: str,
-    start_cluster,
-) -> DataFrame:
-    """Trajectory skeleton (reference M12: R/slingshot.R:8-55 slingshot):
-    cluster centroids → MST over centroids (driver-side: #clusters is tiny
-    by definition) → BFS distances from start cluster → per-entity
-    pseudotime = centroid distance + projection along the local edge.
-
-    Bulk data never leaves DataFrames; only the (k × d) centroid matrix is
-    collected (SURVEY §3 design rule)."""
-    cents, _adj, dist = _centroid_mst(df, array_col, cluster_col, start_cluster)
-    ks = sorted(cents)
-    base = F.create_map(*[x for k in ks for x in (F.lit(k), F.lit(dist[k]))])
-    # pseudotime = cluster base distance + distance from own centroid
-    cmap = F.create_map(*[x for k in ks for x in (F.lit(k), F.array(*[F.lit(c) for c in cents[k]]))])
-    own = cmap[F.col(cluster_col)]
-    v = to_double_array(array_col)
-    local = F.sqrt(F.aggregate(F.zip_with(v, own, lambda x, c: (x - c) * (x - c)), F.lit(0.0), lambda a, z: a + z))
-    return df.withColumn("pseudotime", base[F.col(cluster_col)] + local)
-
-
 def _centroid_mst(df: DataFrame, array_col: str, cluster_col: str, start_cluster):
-    """Cluster centroids + Prim MST + BFS distances (shared by the
-    centroid-pseudotime and principal-curve operators). Only the (k × d)
-    centroid matrix reaches the driver."""
+    """Cluster centroids + Prim MST from ``start_cluster`` (the skeleton of
+    ``principal_curve_pseudotime``). Only the (k × d) centroid matrix
+    reaches the driver."""
     comp = df.select(cluster_col, F.posexplode(to_double_array(array_col)).alias("dim", "x"))
     cent_long = comp.groupBy(cluster_col, "dim").agg(F.avg("x").alias("cx"))
     cent_rows = (
@@ -919,17 +892,7 @@ def _centroid_mst(df: DataFrame, array_col: str, cluster_col: str, start_cluster
     for a, b, w in edges:
         adj.setdefault(a, []).append((b, w))
         adj.setdefault(b, []).append((a, w))
-    dist = {start_cluster: 0.0}
-    frontier = [start_cluster]
-    while frontier:
-        nxt = []
-        for u in frontier:
-            for v, w in adj.get(u, []):
-                if v not in dist:
-                    dist[v] = dist[u] + w
-                    nxt.append(v)
-        frontier = nxt
-    return cents, adj, dist
+    return cents, adj
 
 
 def principal_curve_pseudotime(
@@ -969,7 +932,7 @@ def principal_curve_pseudotime(
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    cents, adj, _dist = _centroid_mst(df, array_col, cluster_col, start_cluster)
+    cents, adj = _centroid_mst(df, array_col, cluster_col, start_cluster)
     # lineages: start → each leaf (deg-1 node other than start)
     leaves = [k for k, nb in adj.items() if len(nb) == 1 and k != start_cluster]
     if not leaves and len(cents) == 1:
@@ -1692,34 +1655,22 @@ def refine_partition(
     kept is that the output is a true SUBPARTITION of the input (every
     refined community lies inside one coarse community).
 
-    Scale shape: identical aggregate-message sweeps to
-    ``louvain_communities`` (one edge⋈assignment join + two bounded aggs
-    per sweep, observe()-fused convergence, lineage cut per sweep) plus
-    one broadcast-size join against the subcommunity-size table for the
-    singleton-origin gate. Returns (node, community) with refined ids.
+    Scale shape: the ``louvain_communities`` sweep
+    (``_local_moving_sweep``: one edge⋈assignment join + two bounded aggs
+    per sweep) on ``plans.fixpoint``, plus one broadcast-size join
+    against the subcommunity-size table for the singleton-origin gate.
+    Returns (node, community) with refined ids.
     """
-    from pyspark.sql import Observation
-
-    from utils_spark.plans import scaled_shuffle_partitions
-
     spark = edges.sparkSession
-    und = cut_lineage(_symmetrize(edges, weight_col))
-    n_edges = und.count()
+    und, m = observed_cut(_symmetrize(edges, weight_col))
     parent = assignment.select(
         F.col("node").cast("long").alias("node"), F.col("community").alias("pc")
     )
-    from utils_spark.plans import interpreted_execution
-
-    with scaled_shuffle_partitions(spark, n_edges, 100_000), interpreted_execution(
-        spark, n_edges
-    ):
-        obs_deg = Observation("refine_deg")
-        deg = cut_lineage(
-            und.groupBy("u")
-            .agg(F.sum("w").alias("k"))
-            .observe(obs_deg, F.sum("k").alias("m2"))
+    with scaled_shuffle_partitions(spark, m["n"], 100_000), interpreted_execution(spark, m["n"]):
+        deg, m = observed_cut(
+            und.groupBy("u").agg(F.sum("w").alias("k")), F.sum("k").alias("m2")
         )
-        m2 = float(obs_deg.get["m2"] or 0.0)
+        m2 = float(m["m2"] or 0.0)
         if not m2:
             return parent.select("node", F.col("node").alias("community"))
         # parent labels restricted to nodes present in the graph
@@ -1736,97 +1687,41 @@ def refine_partition(
             .filter(F.col("pu") == F.col("pv"))
             .select("u", "v", "w")
         )
-        ref = deg.select(F.col("u").alias("node"), F.col("u").alias("community"))
-        for it in range(max_iter):
+
+        def sweep(ref: DataFrame, it: int) -> DataFrame:
             sizes = ref.groupBy("community").agg(F.count("*").alias("sz"))
-            ctot = (
-                ref.join(deg.withColumnRenamed("u", "node"), "node")
-                .groupBy("community")
-                .agg(F.sum("k").alias("tot"))
+            best = _local_moving_sweep(*_sweep_candidates(ref, same, deg), deg, m2, resolution)
+            # singleton-origin gate: only nodes still alone may merge, under
+            # the main loop's parity gate — no cycle is possible anyway
+            # because a merged node stops being a singleton and freezes,
+            # but the gate keeps the sweep deterministic when two
+            # singletons want each other. Without the id-increasing branch
+            # the MIN node of a parent community could strand forever
+            # (every subcommunity label ≥ its own).
+            moves = (F.col("sz") == 1) & (F.col("c_best") != F.col("c_own")) & _parity_gate(it)
+            return best.join(
+                F.broadcast(sizes.withColumnRenamed("community", "c_own")), "c_own"
+            ).select(
+                "node",
+                F.when(moves, F.col("c_best")).otherwise(F.col("c_own")).alias("community"),
+                "c_own",
+                "c_best",
+                "sz",
             )
-            nbr = (
-                same.join(
-                    ref.withColumnRenamed("node", "v").withColumnRenamed("community", "c"),
-                    "v",
-                )
-                .select("u", "c", F.col("w").alias("w_ic"))
-            )
-            own = ref.select(F.col("node").alias("u"), F.col("community").alias("c_own"))
-            stay = own.select("u", F.col("c_own").alias("c"), F.lit(0.0).alias("w_ic"))
-            cand = (
-                nbr.unionByName(stay)
-                .groupBy("u", "c")
-                .agg(F.sum("w_ic").alias("w_ic"))
-                .join(own, "u")
-            )
-            scored = (
-                cand.join(ctot.withColumnRenamed("community", "c"), "c")
-                .join(deg, "u")
-                .withColumn(
-                    "tot_excl",
-                    F.col("tot")
-                    - F.when(F.col("c") == F.col("c_own"), F.col("k")).otherwise(0.0),
-                )
-                .withColumn(
-                    "gain",
-                    F.col("w_ic") / m2
-                    - F.lit(resolution) * F.col("k") * F.col("tot_excl") / (m2 * m2),
-                )
-            )
-            wbest = Window.partitionBy("u").orderBy(F.desc("gain"), F.asc("c"))
-            best = (
-                scored.withColumn("__rn", F.row_number().over(wbest))
-                .filter(F.col("__rn") == 1)
-                .select(
-                    F.col("u").alias("node"),
-                    F.col("c").alias("c_best"),
-                    F.col("c_own"),
-                )
-            )
-            # singleton-origin gate: only nodes still alone may merge.
-            # Id-decreasing moves are always safe (labels bounded below);
-            # id-increasing moves take the main loop's parity gate — no
-            # cycle is possible anyway because a merged node stops being
-            # a singleton and freezes, but the gate keeps the sweep
-            # deterministic when two singletons want each other. Without
-            # the id-increasing branch the MIN node of a parent community
-            # could strand forever (every subcommunity label ≥ its own).
-            moved = (
-                best.join(
-                    F.broadcast(sizes.withColumnRenamed("community", "c_own")), "c_own"
-                )
-                .withColumn(
-                    "new_c",
-                    F.when(
-                        (F.col("sz") == 1)
-                        & (F.col("c_best") != F.col("c_own"))
-                        & (
-                            (F.col("c_best") < F.col("c_own"))
-                            | (F.pmod(F.xxhash64("node"), F.lit(2)) == F.lit(it % 2))
-                        ),
-                        F.col("c_best"),
-                    ).otherwise(F.col("c_own")),
-                )
-            )
-            obs_mv = Observation(f"refine_mv_{it}")
-            ref = cut_lineage(
-                moved.select(
-                    "node", F.col("new_c").alias("community"), "c_own", "c_best", "sz"
-                )
-                .observe(
-                    obs_mv,
-                    # converge on DESIRED singleton-origin moves, not
-                    # executed ones: a parity-blocked desire executes next
-                    # sweep, while non-singleton desires are frozen by
-                    # design and must not keep the loop alive
-                    F.sum(
-                        ((F.col("sz") == 1) & (F.col("c_best") != F.col("c_own"))).cast(
-                            "long"
-                        )
-                    ).alias("d"),
-                )
-                .select("node", "community")
-            )
-            if not obs_mv.get["d"]:
-                break
+
+        ref, _ = fixpoint(
+            sweep,
+            deg.select(F.col("u").alias("node"), F.col("u").alias("community")),
+            max_iter,
+            # converge on DESIRED singleton-origin moves, not executed
+            # ones: a parity-blocked desire executes next sweep, while
+            # non-singleton desires are frozen by design and must not keep
+            # the loop alive
+            metrics=(
+                F.sum(
+                    ((F.col("sz") == 1) & (F.col("c_best") != F.col("c_own"))).cast("long")
+                ).alias("d"),
+            ),
+            until=lambda m: not m["d"],
+        )
     return ref

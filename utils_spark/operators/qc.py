@@ -61,27 +61,6 @@ def per_feature_support(
     )
 
 
-def filter_features_by_support(
-    df: DataFrame,
-    feature_col: str,
-    value_col: str,
-    min_detected: int,
-    drop_patterns: list[str] | None = None,
-) -> DataFrame:
-    """Keep rows whose feature passes a detection-support threshold,
-    optionally dropping regex-matched features (reference A10:
-    R/wrapper.R:223-252). Support table is small → broadcast semi-join."""
-    support = (
-        per_feature_support(df, feature_col, value_col)
-        .filter(F.col("n_detected") >= min_detected)
-        .select(feature_col)
-    )
-    out = df.join(F.broadcast(support), feature_col, "left_semi")
-    for pat in drop_patterns or []:
-        out = out.filter(~F.col(feature_col).rlike(pat))
-    return out
-
-
 def module_score(
     df: DataFrame,
     entity_col: str,

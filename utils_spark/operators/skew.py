@@ -36,17 +36,3 @@ def salted_join(
     out = salted_big.join(salted_small, [key, "__salt"], how)
     return out.drop("__salt")
 
-
-def skewed_group_count(df: DataFrame, key: str, salt_buckets: int = 16) -> DataFrame:
-    """Two-stage (salted partial → final) aggregation for hot grouping keys:
-    stage 1 aggregates on (key, salt) spreading a hot key over many tasks,
-    stage 2 merges the per-salt partials. Spark's own partial aggregation
-    already does this for algebraic aggs; this explicit form is for
-    non-algebraic pipelines (e.g. building per-key collections) and as the
-    documented pattern."""
-    stage1 = (
-        df.withColumn("__salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets)))
-        .groupBy(key, "__salt")
-        .agg(F.count("*").alias("__partial"))
-    )
-    return stage1.groupBy(key).agg(F.sum("__partial").alias("n"))

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from utils_spark.functions import word_tokens
+from utils_spark.plans import cut_lineage, fixpoint
 
 
 def _bigram_structs(toks_col: str):
@@ -226,7 +227,8 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 8, return_vocab: boo
     corpus size — a bounded pair aggregation plus a 1-row argmax collect
     (the same driver-scalar pattern as the Louvain convergence probe).
     The merge itself is a JVM-side array fold (`aggregate`), no UDF; the
-    vocab table's lineage is cut each round so plans stay flat.
+    round loop (``_merge_rounds``, shared with ``wordpiece_train``) runs
+    on ``plans.fixpoint``.
 
     The fold implements exact greedy BPE merge semantics: scanning left
     to right, an occurrence is merged iff the accumulator's last token is
@@ -234,40 +236,10 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 8, return_vocab: boo
     re-match (e.g. "aaa" with (a,a) → [aa, a]), and merged tokens only
     match rules addressed to them ((a,b) never re-fires on "ab").
     """
-    from utils_spark.plans import cut_lineage
-
-    sess = df.sparkSession
-    words = cut_lineage(_word_symbol_table(df, text_col))
-    merges = []
-    for rnd in range(1, n_merges + 1):
-        pair_idx = F.when(
-            F.size("toks") >= 2, F.sequence(F.lit(1), F.size("toks") - 1)
-        ).otherwise(F.expr("array()").cast("array<int>"))
-        pairs = words.select(
-            "n",
-            F.explode(
-                F.transform(
-                    pair_idx,
-                    lambda i: F.struct(
-                        F.element_at("toks", i).alias("l"),
-                        F.element_at("toks", i + F.lit(1)).alias("r"),
-                    ),
-                )
-            ).alias("p"),
-        )
-        best = (
-            pairs.groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("n").cast("long").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        l, r, cnt = best[0].l, best[0].r, best[0].cnt
-        merges.append((rnd, l, r, cnt))
-        words = cut_lineage(words.select("w", _greedy_merge_fold(l, r).alias("toks"), "n"))
-    merges_df = sess.createDataFrame(
+    merges, words = _merge_rounds(
+        df, text_col, n_merges, lambda words, pairs: pairs.orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
+    )
+    merges_df = df.sparkSession.createDataFrame(
         merges, "merge_round int, left_tok string, right_tok string, pair_count long"
     )
     if return_vocab:
@@ -298,13 +270,44 @@ def wordpiece_train(df: DataFrame, text_col: str, n_merges: int = 8) -> DataFram
     builds the word-frequency table, then every round is O(vocab x
     word-length) regardless of corpus size: a bounded pair aggregation,
     a bounded unigram aggregation, a broadcast-sized 3-way join between
-    them, and a 1-row argmax collect; vocab lineage cut per round."""
-    from utils_spark.plans import cut_lineage
+    them, and a 1-row argmax collect (the ``_merge_rounds`` loop)."""
 
-    sess = df.sparkSession
-    words = cut_lineage(_word_symbol_table(df, text_col))
+    def best_pair(words: DataFrame, pairs: DataFrame) -> DataFrame:
+        uni = (
+            words.select("n", F.explode("toks").alias("tok"))
+            .groupBy("tok")
+            .agg(F.sum("n").cast("long").alias("c"))
+        )
+        ul = uni.select(F.col("tok").alias("l"), F.col("c").alias("lc"))
+        ur = uni.select(F.col("tok").alias("r"), F.col("c").alias("rc"))
+        score = F.col("cnt").cast("double") / (F.col("lc") * F.col("rc"))
+        return (
+            pairs.join(ul, "l")
+            .join(ur, "r")
+            .select("l", "r", "cnt", "lc", "rc")
+            .orderBy(F.desc(score), F.asc("l"), F.asc("r"))
+        )
+
+    merges, _ = _merge_rounds(df, text_col, n_merges, best_pair)
+    return df.sparkSession.createDataFrame(
+        merges,
+        "merge_round int, left_tok string, right_tok string, "
+        "pair_count long, left_count long, right_count long",
+    )
+
+
+def _merge_rounds(df: DataFrame, text_col: str, n_merges: int, best_pair):
+    """The training loop shared by ``bpe_train`` and ``wordpiece_train``:
+    up to ``n_merges`` rounds over the word-frequency symbol table, each
+    counting adjacent token pairs (l, r, cnt), collecting the first row of
+    ``best_pair(words, pairs)`` — the trainer's pair ranking, whose row
+    is emitted after the round number — and greedily merging that pair
+    in every word. The loop runs on ``plans.fixpoint`` and ends early
+    when no word has two tokens left. Returns (merge rows, final
+    (w, toks, n) table)."""
     merges = []
-    for rnd in range(1, n_merges + 1):
+
+    def merge_round(words: DataFrame, it: int):
         pair_idx = F.when(
             F.size("toks") >= 2, F.sequence(F.lit(1), F.size("toks") - 1)
         ).otherwise(F.expr("array()").cast("array<int>"))
@@ -324,31 +327,14 @@ def wordpiece_train(df: DataFrame, text_col: str, n_merges: int = 8) -> DataFram
             .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
             .agg(F.sum("n").cast("long").alias("cnt"))
         )
-        uni = (
-            words.select("n", F.explode("toks").alias("tok"))
-            .groupBy("tok")
-            .agg(F.sum("n").cast("long").alias("c"))
-        )
-        ul = uni.select(F.col("tok").alias("l"), F.col("c").alias("lc"))
-        ur = uni.select(F.col("tok").alias("r"), F.col("c").alias("rc"))
-        score = F.col("cnt").cast("double") / (F.col("lc") * F.col("rc"))
-        best = (
-            pairs.join(ul, "l")
-            .join(ur, "r")
-            .orderBy(F.desc(score), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .collect()
-        )
+        best = best_pair(words, pairs).limit(1).collect()
         if not best:
-            break
-        row = best[0]
-        merges.append((rnd, row.l, row.r, row.cnt, row.lc, row.rc))
-        words = cut_lineage(words.select("w", _greedy_merge_fold(row.l, row.r).alias("toks"), "n"))
-    return sess.createDataFrame(
-        merges,
-        "merge_round int, left_tok string, right_tok string, "
-        "pair_count long, left_count long, right_count long",
-    )
+            return None
+        merges.append((it + 1, *best[0]))
+        return words.select("w", _greedy_merge_fold(best[0].l, best[0].r).alias("toks"), "n")
+
+    words, _ = fixpoint(merge_round, cut_lineage(_word_symbol_table(df, text_col)), n_merges)
+    return merges, words
 
 
 # --- Unigram-LM tokenizer (Kudo 2018, SentencePiece's default) -------------
@@ -461,8 +447,6 @@ def _viterbi_chain(words: DataFrame, vocab: DataFrame):
         cur = cur.withColumn(f"dp_{i}", dp)
         cur = cur.withColumn(f"k_{i}", kc)
     if UNIGRAM_CHAIN_CUT:
-        from utils_spark.plans import cut_lineage
-
         keep = [c for c in cur.columns if not c.startswith("dp_") and c != "__m"]
         cur = cut_lineage(cur.select(*keep))
     for i, on in on_levels:
@@ -576,8 +560,6 @@ def unigram_train(df: DataFrame, text_col: str, return_vocab: bool = False):
     under the FINAL piece table), the broadcastable mapping the APPLY
     side joins against to encode a corpus map-only — the exact analog of
     ``bpe_train(return_vocab=True)``."""
-    from utils_spark.plans import cut_lineage
-
     words = cut_lineage(_unigram_words(df, text_col))
     vocab = _unigram_seed(words)
     singles = vocab.filter(F.length("piece") == 1).select("piece")

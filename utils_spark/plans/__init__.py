@@ -1,7 +1,10 @@
 """Physical-plan introspection: assert the plans we designed for are the
 plans Catalyst actually produces (pushdown reached the scan, dimensions
 broadcast, shuffle counts bounded) — the 100 TB design contract, checked
-mechanically in tests rather than by eyeballing .explain output.
+mechanically in tests rather than by eyeballing .explain output. It also
+owns the execution mechanics operators share: scratch caches, lineage
+cuts, observed metrics, the ``fixpoint`` loop primitive and scoped
+session confs.
 """
 
 from __future__ import annotations
@@ -10,7 +13,8 @@ import re
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 @dataclass
@@ -292,6 +296,90 @@ def cut_lineage(df: DataFrame) -> DataFrame:
         return ck
 
 
+def observed_cut(df: DataFrame, *metrics) -> tuple[DataFrame, dict]:
+    """``cut_lineage`` that also returns aggregate ``metrics`` over the
+    materialized rows, observed on the checkpoint job itself — a
+    driver-side scalar that costs no extra action. The returned dict
+    always carries the row count as ``n``."""
+    obs = Observation()
+    cut = cut_lineage(df.observe(obs, F.count(F.lit(1)).alias("n"), *metrics))
+    return cut, obs.get
+
+
+# ``fixpoint(..., until=SAME_STATE)``: stop when a round leaves the state unchanged
+SAME_STATE = "same_state"
+
+
+def fixpoint(step, state: DataFrame, max_iter: int, metrics=(), until=None):
+    """The loop primitive of every iterative operator: at most ``max_iter``
+    rounds of ``state <- step(state, round)``, each materialized by one
+    ``observed_cut`` so plans stay round-local and the round's driver-side
+    scalars ride its checkpoint job (exactly one Observation per round;
+    besides that job, fixpoint itself runs only the ``SAME_STATE``
+    probe).
+
+    ``step`` returns the next state, which may carry extra columns for
+    ``metrics`` (aggregate Columns) to read — the state itself keeps the
+    columns of the initial ``state`` — or None to end the loop without a
+    new state. The loop also ends when ``until`` says so:
+
+    * None — never: fixed rounds (or the step's own None);
+    * a callable — called with the round's observed metrics (the
+      ``observed_cut`` dict), returns True to stop;
+    * ``SAME_STATE`` — the new state equals the previous round's, decided
+      exactly: every round observes two free set-fingerprint metrics,
+      the row count and the ``bit_xor`` of ``xxhash64`` over the state
+      columns (order-independent and overflow-free — a long SUM would
+      trip ANSI overflow). While the fingerprint differs from the
+      previous round's the state provably changed and the round pays no
+      extra job; only on a match does an exact ``limit(1)`` anti-join
+      probe confirm that every new row is in the previous state — with
+      equal row counts and no duplicate rows that inclusion is equality
+      — so termination never rests on the hash (a colliding fingerprint
+      on a changed state just runs the probe, sees the change and
+      continues). The probe is skipped on the last allowed round, where
+      the loop ends anyway. States must be row sets (no duplicate rows),
+      and the first round — which has no observed predecessor — never
+      stops.
+
+    Returns (final state, metrics of the last round — {} if none ran)."""
+    cols = state.columns
+    same = until == SAME_STATE
+    fingerprint = [F.expr(f"bit_xor(xxhash64({', '.join(cols)}))").alias("__h")] if same else []
+    observed: dict = {}
+    for it in range(max_iter):
+        nxt = step(state, it)
+        if nxt is None:
+            break
+        cut, m = observed_cut(nxt, *fingerprint, *metrics)
+        nxt = cut.select(*cols)
+        if same:
+            stop = (
+                bool(observed)
+                and it + 1 < max_iter
+                and (m["n"], m["__h"]) == (observed["n"], observed["__h"])
+                and not nxt.join(state, cols, "left_anti").limit(1).count()
+            )
+        else:
+            stop = until is not None and until(m)
+        state, observed = nxt, m
+        if stop:
+            break
+    return state, observed
+
+
+@contextmanager
+def scoped_conf(spark, key: str, value: str):
+    """Set a session conf for the duration of the block; the previous value
+    is restored on exit, also when the block raises."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 @contextmanager
 def interpreted_execution(spark, n_rows: int | None = None, rows_threshold: int = 100_000):
     """Temporarily disable whole-stage codegen for plans over MEASURED
@@ -311,12 +399,8 @@ def interpreted_execution(spark, n_rows: int | None = None, rows_threshold: int 
     if n_rows is not None and n_rows >= rows_threshold:
         yield
         return
-    prev = spark.conf.get("spark.sql.codegen.wholeStage")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
+    with scoped_conf(spark, "spark.sql.codegen.wholeStage", "false"):
         yield
-    finally:
-        spark.conf.set("spark.sql.codegen.wholeStage", prev)
 
 
 @contextmanager
@@ -338,8 +422,5 @@ def scaled_shuffle_partitions(spark, n_rows: int, rows_per_partition: int = 100_
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     parts = min(int(prev), max(2, -(-max(n_rows, 1) // rows_per_partition)))
     parts = max(parts, 1)
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", str(parts)):
         yield parts
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -1803,8 +1803,8 @@ def lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per round one label-keyed join (edges x labels) + one
     (node, label) vote aggregation + a per-node argmax window — all
-    keyed shuffles bounded by the edge list, never node^2; lineage cut
-    every second round (operators/ml.py:199). The synchronous update
+    keyed shuffles bounded by the edge list, never node^2; the loop
+    mechanics are ``ml.label_propagation``'s. The synchronous update
     rule is what makes the result engine-replayable; classic
     random-order asynchronous LPA cannot be oracled."""
     from utils_spark.operators.ml import label_propagation

@@ -18,6 +18,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from utils_spark.io import pin_read_confs
+
 
 def _events_raw_schema(ts_type) -> StructType:
     return StructType(
@@ -45,15 +47,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: 
     two normalization branches so stream and batch schemas are identical
     (a unit test pins that equality)."""
     # one-footer probe of the STORED parquet type (lazy scan — only the
-    # schema is materialized). The conf guards below duplicate load_table's
-    # defensive pattern on purpose: a caller-supplied vanilla session must
-    # read identically (nanosAsLong set BEFORE the probe, UTC keeping the
-    # ntz cast and window/hour extraction wall-clock-exact vs the oracles).
-    if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # no sentinel default — Spark 4 validates unset-conf defaults (see io.py)
-    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # schema is materialized). The read confs are pinned BEFORE the probe
+    # (nanosAsLong), and UTC keeps the ntz cast and window/hour extraction
+    # wall-clock-exact vs the oracles.
+    pin_read_confs(spark)
     stored_ts = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes)["ts"]
     if stored_ts == "bigint":
         schema = EVENTS_RAW_SCHEMA
