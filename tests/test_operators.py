@@ -497,6 +497,103 @@ def test_prefix_filter_jaccard_matches_brute_force(spark):
             assert abs(got[pair] - j) < 1e-12
 
 
+_HOT = " footer "
+
+
+def _planted_jaccard_pair(rng, alphabet, o, na, nb, hot_side=None):
+    """Two texts whose 5-gram sets have exactly ``o`` common grams and sizes
+    ``na``, ``nb``: a = X + S, b = S + Y, with S's o grams shared and every
+    gram that touches X or Y unique to its side (nb == o plants b ⊂ a). A
+    third text S + Z makes the shared grams more frequent than the unique
+    ones, so they rank after them: the tightest case for the prefix
+    length. ``hot_side`` ends X (or starts Y) with the corpus-frequent
+    ``_HOT``, whose grams rank after the shared ones, so that side's tail
+    after the last shared gram is the longer one."""
+    rand = lambda n: "".join(rng.choice(alphabet) for _ in range(n))
+    s = rand(o + 4)
+    x = rand(na - o - len(_HOT)) + _HOT if hot_side == "a" else rand(na - o)
+    y = _HOT + rand(nb - o - len(_HOT)) if hot_side == "b" else rand(nb - o)
+    return x + s, s + y, s + rand(rng.randint(6, 30))
+
+
+def test_prefix_filter_positional_bound_keeps_exact_threshold_pairs(spark):
+    """The positional bound (overlap at most c + min(sa - pa, sb - pb))
+    must not lose a pair, also at exactly J = t: the verified pair set
+    equals brute-force Jaccard on a corpus of 10-128-char documents,
+    near-copies, and pairs planted at exactly J = t. Corpus-frequent
+    footer grams rank last, so on a pair where one side carries them that
+    side's tail is the longer one, and both branches of the min bind
+    somewhere in the corpus. 0.3, 0.55 and 0.7 are not exact in binary;
+    at 0.55 a 100-gram prefix computed as |d| - ceil(0.55 * |d|) + 1 in
+    floating point is one gram short, which loses the planted b ⊂ a
+    pair."""
+    import random
+    from fractions import Fraction
+
+    from utils_spark.operators.dedup import prefix_filtered_jaccard_pairs
+
+    rng = random.Random(29)
+    alphabet = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
+    texts = []
+    for i in range(30):
+        base = "".join(rng.choice(alphabet) for _ in range(rng.randint(10, 120)))
+        mut = list(base)
+        for _ in range(rng.randint(1, 4)):
+            mut[rng.randrange(len(mut))] = rng.choice(alphabet)
+        mut = "".join(mut)
+        texts += [base + _HOT * (i % 3 == 2), mut + _HOT * (i % 3 > 0)]
+    # (t, o, na, nb, hot_side) with o / (na + nb - o) == t exactly
+    planted = [
+        (0.3, 9, 30, 9, None), (0.3, 30, 100, 30, "a"), (0.3, 12, 20, 32, "b"),
+        (0.5, 20, 40, 20, "a"), (0.5, 20, 25, 35, "b"), (0.5, 20, 35, 25, None),
+        (0.55, 55, 100, 55, None), (0.55, 11, 14, 17, None), (0.55, 44, 80, 44, "a"),
+        (0.7, 7, 10, 7, None), (0.7, 70, 100, 70, "a"), (0.7, 35, 40, 45, "b"),
+        (0.8, 8, 10, 8, None), (0.8, 40, 44, 46, None), (0.8, 80, 100, 80, "a"),
+        (0.8, 40, 40, 50, "b"),
+    ]
+    exact = []
+    for t, o, na, nb, hot_side in planted:
+        exact.append((t, len(texts), len(texts) + 1))
+        texts += _planted_jaccard_pair(rng, alphabet, o, na, nb, hot_side)
+    texts = list(enumerate(texts))
+    df = spark.createDataFrame(texts, ["doc_id", "text"])
+    grams = {i: {x[j : j + 5] for j in range(len(x) - 4)} for i, x in texts}
+    for t in (0.3, 0.5, 0.55, 0.7, 0.8):
+        want = _brute_jaccard_pairs(texts, 5, t)
+        for tp, ia, ib in exact:
+            if tp == t:
+                inter = len(grams[ia] & grams[ib])
+                assert Fraction(inter, len(grams[ia] | grams[ib])) == Fraction(str(t))
+                assert (ia, ib) in want
+        got = {
+            (r.key_a, r.key_b): r.jaccard
+            for r in prefix_filtered_jaccard_pairs(
+                df, "text", "doc_id", shingle_k=5, threshold=t
+            ).collect()
+        }
+        assert set(got) == set(want), (t, set(want) - set(got), set(got) - set(want))
+        for pair, j in want.items():
+            assert abs(got[pair] - j) < 1e-12
+
+
+def test_prefix_filter_candidates_pruned_at_sf0001(spark, sf_dir):
+    """The positional bound's pruning, pinned where it is deterministic:
+    ngram_jaccard_pairs' input (sf0.001 documents, doc_id < 200) gives
+    18,156 prefix-join pairs, of which 182 can still reach J >= 0.5, and
+    those 182 hold every pair that reaches it (11, by brute force)."""
+    import os
+
+    from utils_spark.io import load_table
+    from utils_spark.operators.dedup import prefix_filter_candidates
+
+    sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    d = load_table(spark, sf, "documents").filter("doc_id < 200")
+    cand = {(r.key_a, r.key_b) for r in prefix_filter_candidates(d, "text", "doc_id", 5, 0.5).collect()}
+    want = _brute_jaccard_pairs([(r.doc_id, r.text) for r in d.collect()], 5, 0.5)
+    assert len(cand) == 182, len(cand)
+    assert len(want) == 11 and set(want) <= cand, (len(want), set(want) - cand)
+
+
 def test_prefix_filter_containment_matches_brute_force(spark):
     """The asymmetric containment prefix filter must have PERFECT recall:
     the verified ORDERED pair set equals brute-force all-ordered-pairs

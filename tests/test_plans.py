@@ -381,6 +381,27 @@ def test_ngram_jaccard_prefix_filtered(spark, sf_dir):
     assert "CartesianProduct" not in p.text and "BroadcastNestedLoopJoin" not in p.text
 
 
+def test_ngram_jaccard_pairs_job_count(spark, sf_dir):
+    """ngram_jaccard_pairs is bounded to 200 docs and sizes its own
+    partitions, so it runs its static plan with AQE off: building it
+    (shingle persist + lineage cut) and counting its rows take 9 Spark
+    jobs at sf0.001, where AQE's stage-as-job submission ran 23."""
+    import os
+    import uuid
+
+    sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    sc = spark.sparkContext
+    group = f"ngram-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        REGISTRY["ngram_jaccard_pairs"].fn(spark, sf).count()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 9, n_jobs
+
+
 def test_exact_substring_dedup_window_keyed(spark, sf_dir):
     """The substring-dedup plan must pair documents ONLY through the
     window-hash equi-key (the suffix array's repeat-finding role): no

@@ -207,3 +207,18 @@ def test_custom_stateful_operator_matches_batch(spark, sf_dir):
     )
     want = {r["user_id"]: (r["n"], r["t"]) for r in batch.collect()}
     assert got == want
+
+
+def test_live_stream_query_drops_its_sink_view(spark, sf_dir, duck):
+    """A registered live-stream query runs into a uuid-named memory sink and
+    returns the sink as a batch frame. Its temp view must not outlive the
+    call (each one kept its run's rows for the whole session), and the
+    returned frame, analyzed before the drop, must still yield every row."""
+    from utils_spark.registry import load_all
+
+    q = load_all()["stream_tumbling_counts"]
+    out = q.fn(spark, sf_dir)
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_sink_")]
+    assert views == [], views
+    n_oracle = duck.execute(f"SELECT count(*) FROM ({q.oracle})").fetchone()[0]
+    assert n_oracle > 0 and len(out.collect()) == n_oracle

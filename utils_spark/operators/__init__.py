@@ -13,7 +13,7 @@ from utils_spark.operators.stats import (  # noqa: F401
     pairwise_ks_test,
     zscore_per_group,
 )
-from utils_spark.operators.qc import per_entity_qc, per_feature_support, module_score  # noqa: F401
+from utils_spark.operators.qc import per_entity_qc, module_score  # noqa: F401
 from utils_spark.operators.relational import (  # noqa: F401
     check_functional_dependency,
     crosstab_proportions,

@@ -1666,7 +1666,12 @@ def refine_partition(
     parent = assignment.select(
         F.col("node").cast("long").alias("node"), F.col("community").alias("pc")
     )
-    with scaled_shuffle_partitions(spark, m["n"], 100_000), interpreted_execution(spark, m["n"]):
+    # AQE off inside the sweeps for the reason louvain_communities gives:
+    # with it on, each sweep submitted its stages as 16-17 jobs on an
+    # 8-node graph, against 2 jobs per sweep with it off.
+    with scoped_conf(spark, "spark.sql.adaptive.enabled", "false"), scaled_shuffle_partitions(
+        spark, m["n"], 100_000
+    ), interpreted_execution(spark, m["n"]):
         deg, m = observed_cut(
             und.groupBy("u").agg(F.sum("w").alias("k")), F.sum("k").alias("m2")
         )

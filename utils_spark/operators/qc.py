@@ -47,20 +47,6 @@ def per_entity_qc(
     return df.groupBy(entity_col).agg(*aggs)
 
 
-def per_feature_support(
-    df: DataFrame,
-    feature_col: str,
-    value_col: str,
-    min_count: float = 0,
-) -> DataFrame:
-    """Per-feature support: in how many rows is the feature expressed above
-    min_count (reference A9: R/wrapper.R:231-239 numDetectedAcrossCells)."""
-    return df.groupBy(feature_col).agg(
-        F.count(F.when(F.col(value_col) > min_count, 1)).alias("n_detected"),
-        F.count("*").alias("n_total"),
-    )
-
-
 def module_score(
     df: DataFrame,
     entity_col: str,

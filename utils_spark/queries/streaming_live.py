@@ -50,6 +50,11 @@ def _run_to_table(
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into a
     uniquely-named memory sink and return the sink as a batch DataFrame.
+    The sink's temp view is dropped before returning: the returned frame
+    is already analyzed against the sink, so it keeps (and still reads)
+    the sink's rows, while the session's catalog no longer does — a
+    registered view per run kept every run's rows alive for the whole
+    session.
 
     ``n_rows`` (optimization r15, guide §2.2): a streaming query's STATE
     partition count is pinned from ``spark.sql.shuffle.partitions`` at
@@ -69,27 +74,28 @@ def _run_to_table(
 
     ctx = scaled_shuffle_partitions(spark, n_rows) if n_rows is not None else nullcontext()
     name = f"stream_sink_{uuid.uuid4().hex[:10]}"
-    with ctx:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        done = q.awaitTermination(300)
-    if not done:
-        # timed out: the query is still running and the sink is only
-        # partially filled — reading it would silently return a partial
-        # result. Stop the runaway query and fail loudly instead.
+    try:
+        with ctx:
+            q = (
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .trigger(availableNow=True)
+                .start()
+            )
+            done = q.awaitTermination(300)
+        if not done:
+            # timed out: the query is still running and the sink is only
+            # partially filled — reading it would silently return a partial
+            # result. Stop the runaway query and fail loudly instead.
+            q.stop()
+            raise TimeoutError(f"streaming query {name} did not drain within 300s")
+        # availableNow has terminated; stop() is a no-op on a finished query
+        # but releases its listener/bookkeeping.
         q.stop()
-        raise TimeoutError(f"streaming query {name} did not drain within 300s")
-    # availableNow has terminated; stop() is a no-op on a finished query but
-    # releases its listener/bookkeeping. The uuid-named memory temp view
-    # stays registered (session-scoped) because the returned DataFrame reads
-    # from it lazily — the driver collects it downstream.
-    q.stop()
-    return spark.table(name)
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 @register(

@@ -659,17 +659,31 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``|d| - ceil(0.5|d|) + 1`` grams. Perfect recall at the threshold by
     the prefix-overlap theorem, and hot shingles (the df² skew bomb of a
     bare gram=gram self-join) are structurally excluded from prefixes, so
-    no gram-df cap is needed. Candidates are then verified with exact
-    set-intersection counts joined per (candidate, gram). The brute-force
-    all-pairs SQL is the oracle, so LSH-style banding misses would be
-    caught as a hash mismatch — prefix filtering has none to miss."""
+    no gram-df cap is needed. PPJoin's positional bound (Xiao et al.,
+    WWW'08) then drops every prefix pair whose shared prefix grams plus
+    the shorter tail after the last of them cannot reach the threshold
+    overlap (18,156 → 182 candidates at sf0.001, 18,413 → 218 at sf0.1;
+    see ``dedup._prefix_candidates_from_shingled``). Candidates are then
+    verified with exact set-intersection counts joined per (candidate,
+    gram). The brute-force all-pairs SQL is the oracle, so LSH-style
+    banding misses would be caught as a hash mismatch — prefix filtering
+    has none to miss.
+
+    The plan runs with AQE off, as Louvain's sweeps do: the input is
+    bounded by construction and the shuffle partitions are sized for it,
+    so AQE has nothing left to re-optimize and would only submit each of
+    its ~20 query stages as its own job (23 jobs → 9 for build + count at
+    sf0.001)."""
     from utils_spark.operators.dedup import prefix_filtered_jaccard_pairs
-    from utils_spark.plans import cut_lineage, scaled_shuffle_partitions
+    from utils_spark.plans import cut_lineage, scaled_shuffle_partitions, scoped_conf
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     # the query is BOUNDED to 200 docs by construction — size the shuffle
-    # stages accordingly (no-op if the session is already small)
-    with scaled_shuffle_partitions(spark, 200, 25):
+    # stages accordingly (no-op if the session is already small) and run
+    # the static plan (AQE off, see above)
+    with scaled_shuffle_partitions(spark, 200, 25), scoped_conf(
+        spark, "spark.sql.adaptive.enabled", "false"
+    ):
         pairs = prefix_filtered_jaccard_pairs(d, "text", "doc_id", shingle_k=5, threshold=0.5)
         return cut_lineage(
             pairs.select(
