@@ -1,15 +1,18 @@
 """Layering rules of the package: the operator library sits below the
 query registry, so no operator module may import a query module; and the
 loop mechanics (lineage checkpoints, observed metrics) live only in
-``utils_spark.plans``."""
+``utils_spark.plans``; and the measurement tools read Spark's in-process
+status store, never its REST API."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import sys
 
 PACKAGE_DIR = pathlib.Path(__file__).resolve().parent.parent / "utils_spark"
 OPERATORS_DIR = PACKAGE_DIR / "operators"
+TOOLS_DIR = PACKAGE_DIR.parent / "tools"
 
 
 def _imported_modules(path: pathlib.Path) -> set[str]:
@@ -48,3 +51,23 @@ def test_loop_mechanics_only_in_plans():
                 if name in ("localCheckpoint", "Observation"):
                     offenders.append(f"{path.parent.name}/{path.name}:{node.lineno}: {name}")
     assert not offenders, offenders
+
+
+def test_tools_do_not_scrape_the_ui():
+    """Tools read stages and task quantiles from the status store through
+    perfbench's probes, which works with the UI off as ``get_spark`` leaves
+    it; scraping the REST API needs the UI switched back on."""
+    offenders = []
+    for path in sorted(TOOLS_DIR.glob("*.py")):
+        offenders += [f"{path.name}: {mod}" for mod in _imported_modules(path) if mod.split(".")[0] == "urllib"]
+        if "spark.ui.enabled" in path.read_text():
+            offenders.append(f"{path.name}: spark.ui.enabled")
+    assert not offenders, offenders
+
+
+def test_tools_do_not_shadow_the_standard_library():
+    """A script's own directory comes first on its import path, so a
+    ``tools/profile.py`` would be what cProfile (imported by pyspark) gets
+    as ``profile`` in every other script there."""
+    shadowing = sorted(p.name for p in TOOLS_DIR.glob("*.py") if p.stem in sys.stdlib_module_names)
+    assert not shadowing, shadowing

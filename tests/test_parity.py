@@ -378,134 +378,6 @@ def test_driver_sim_argv_validation_fails_fast():
         assert needle in out.stderr and "usage:" in out.stderr, (argv, out.stderr)
 
 
-def test_shuffle_probe_helpers_and_argv():
-    """tools/shuffle_probe.py reads per-stage shuffle-write bytes from the
-    status REST API; its snapshot/delta math and byte formatting are pure
-    and pinned here. Bad argv must exit 2 before a JVM starts (same
-    fail-fast contract as driver_sim)."""
-    import pathlib
-    import subprocess
-    import sys
-
-    repo = pathlib.Path(__file__).resolve().parent.parent
-    sys.path.insert(0, str(repo / "tools"))
-    from shuffle_probe import (
-        default_queries,
-        fmt_bytes,
-        scaling_flag,
-        shuffle_write_snapshot,
-        stage_flag,
-    )
-
-    # default set = bench's registry-guarded headline+tracked lists
-    assert set(default_queries()) <= set(REGISTRY)
-    assert "minhash_lsh_pairs" in default_queries()
-
-    stages = [
-        {"stageId": 1, "attemptId": 0, "shuffleWriteBytes": 100},
-        {"stageId": 2, "attemptId": 0, "shuffleWriteBytes": 250},
-        {"stageId": 2, "attemptId": 1, "shuffleWriteBytes": 50},  # AQE retry
-        {"stageId": 3, "attemptId": 0},  # map-only stage: no shuffle key
-    ]
-    total, seen = shuffle_write_snapshot(stages)
-    assert total == 400
-    assert seen == {(1, 0), (2, 0), (2, 1), (3, 0)}
-    # the delta rule run_delta applies: only attempts NOT seen before count
-    after = stages + [{"stageId": 4, "attemptId": 0, "shuffleWriteBytes": 77}]
-    delta = sum(
-        s.get("shuffleWriteBytes", 0)
-        for s in after
-        if (s["stageId"], s.get("attemptId", 0)) not in seen
-    )
-    assert delta == 77
-
-    assert fmt_bytes(512) == "512 B"
-    assert fmt_bytes(2048) == "2.0 KB"
-    assert fmt_bytes(3 * 1024 * 1024) == "3.0 MB"
-
-    # CHECK-flag logic: linear passes, superlinear flags, no-shuffle passes,
-    # and 0 -> nonzero (broadcast flipped to shuffle) flags despite ratio=inf
-    assert scaling_flag(100, 1000, 15.0) is None
-    assert scaling_flag(100, 2000, 15.0) == "**CHECK >15×**"
-    assert scaling_flag(0, 0, 15.0) is None
-    assert scaling_flag(0, 1, 15.0) == "**CHECK 0→shuffle**"
-
-    # driver-side gate: stage counts must be size-stable (1.5×+2 slack
-    # absorbs AQE re-planning; real growth = data-dependent loop sweeps)
-    assert stage_flag(10, 10) is None
-    assert stage_flag(10, 17) is None  # = 1.5*10+2, boundary passes
-    assert stage_flag(10, 18) == "**CHECK stages**"
-    assert stage_flag(2, 5) is None
-    assert stage_flag(2, 6) == "**CHECK stages**"
-
-    tool = str(repo / "tools" / "shuffle_probe.py")
-    for argv, needle in [
-        (["not_a_query_xyz"], "unknown query names"),
-        (["--check"], "--check needs"),
-        (["--check", "abc"], "--check needs"),  # non-numeric: exit 2, not a traceback
-        (["--check", "minhash_lsh_pairs"], "--check needs"),  # query name eaten as value
-        (["--sf-small"], "--sf-small needs"),
-        (["--sf-small", "/nonexistent_dir_xyz"], "--sf-small needs"),
-        (["--sf-big", "/nonexistent_dir_xyz"], "--sf-big needs"),
-    ]:
-        out = subprocess.run(
-            [sys.executable, tool, *argv], capture_output=True, text=True, cwd=repo
-        )
-        assert out.returncode == 2, (argv, out.returncode, out.stderr)
-        assert needle in out.stderr, (argv, out.stderr)
-
-
-def test_skew_probe_helpers_and_argv():
-    """tools/skew_probe.py reports per-task shuffle-read max/median per
-    stage (straggler-risk witness). Pure ratio/flag helpers pinned here;
-    bad argv must exit 2 before a JVM starts (the standing fail-fast
-    contract shared with shuffle_probe/driver_sim)."""
-    import pathlib
-    import subprocess
-    import sys
-
-    repo = pathlib.Path(__file__).resolve().parent.parent
-    sys.path.insert(0, str(repo / "tools"))
-    from skew_probe import MIN_CPU_MS, MIN_TASK, cpu_flag, skew_flag, skew_ratio
-
-    assert skew_ratio(100.0, 900.0) == 9.0
-    # median 0 with a nonzero max IS maximal skew, not a divide-by-zero
-    assert skew_ratio(0.0, 5e6) == 5e6
-    # flag needs BOTH ratio > check AND absolute max > MIN_TASK
-    assert skew_flag(100.0, 900.0, 8.0) is None  # 9x but only 900 B
-    assert skew_flag(1e6, 3e6, 8.0) is None  # big but only 3x
-    assert skew_flag(1e6, 9e6, 8.0) == "**CHECK >8×**"
-    assert skew_flag(0.0, 2 * MIN_TASK, 8.0) == "**CHECK >8×**"
-    # CPU flag (r15): needs ratio > check AND max task >= MIN_CPU_MS —
-    # a 100 ms straggler is scheduling jitter, not a hot quadratic bucket
-    assert cpu_flag(20.0, 400.0, 4.0) is None  # 20x but sub-second
-    assert cpu_flag(800.0, 2400.0, 4.0) is None  # >=1 s but only 3x
-    assert cpu_flag(200.0, MIN_CPU_MS, 4.0) == "**CPU >4×**"
-    assert cpu_flag(0.0, 2 * MIN_CPU_MS, 4.0) == "**CPU >4×**"
-    # ... AND the stage must READ a shuffle: map-stage imbalance is the
-    # input's row-group layout, not the plan's partitioning (r15 sweep:
-    # every map flag traced to single-row-group fixture parquet)
-    assert cpu_flag(0.0, 2 * MIN_CPU_MS, 4.0, shuffle_read=0.0) is None
-    assert cpu_flag(200.0, MIN_CPU_MS, 4.0, shuffle_read=1024.0) == "**CPU >4×**"
-
-    tool = str(repo / "tools" / "skew_probe.py")
-    for argv, needle in [
-        ([], "usage:"),
-        (["not_a_query_xyz"], "unknown query names"),
-        (["--check"], "--check needs"),
-        (["--check", "abc"], "--check needs"),
-        (["--cpu-check"], "--cpu-check needs"),
-        (["--cpu-check", "abc"], "--cpu-check needs"),
-        (["--sf"], "--sf needs"),
-        (["--sf", "/nonexistent_dir_xyz", "minhash_lsh_pairs"], "--sf needs"),
-    ]:
-        out = subprocess.run(
-            [sys.executable, tool, *argv], capture_output=True, text=True, cwd=repo
-        )
-        assert out.returncode == 2, (argv, out.returncode, out.stderr)
-        assert needle in out.stderr, (argv, out.stderr)
-
-
 def test_bench_duckdb_baseline_subprocess_paths(monkeypatch):
     """The DuckDB 2x-gate denominator runs in a fresh subprocess (the r12
     JVM-residue fix). Success must return parsed per-query timings;

@@ -520,8 +520,8 @@ def prefix_filtered_containment_pairs(
 
     The threshold is a RATIONAL (num/den) and every gate is integer
     arithmetic — o = (num*|a| + den - 1) div den, qualify iff
-    den*inter >= num*|a| — because ceil(0.8 * 5.0) in binary floating
-    point is ceil(4.000000000000000222...) = 5, not the intended 4.
+    den*inter >= num*|a| — because ceil(0.55 * 100) in binary floating
+    point is ceil(55.00000000000001) = 56, not the intended 55.
 
     Scale shape: same as ``prefix_filter_candidates`` — hot grams sort
     last in the global df order and vanish from probe prefixes, so the

@@ -238,7 +238,7 @@ def broadcast_audit(df: DataFrame) -> list[str]:
 # the session lifetime, and the bench's min-of-2 second rep silently read
 # the first rep's materialized cache instead of doing per-run work. Every
 # operator-scratch persist now registers here; harnesses (bench.py between
-# reps, tools/time_registry.py, tools/driver_sim.py between queries) call
+# reps, tools/query_profile.py, tools/driver_sim.py between queries) call
 # ``release_scratch_caches()`` after each terminal action. Long-lived
 # sessions embedding these operators should do the same once downstream
 # actions on the returned frames have run.
