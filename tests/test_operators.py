@@ -364,6 +364,43 @@ def test_cosine_topk_exact(spark):
     assert out == want
 
 
+def test_cosine_topk_rejects_one_sided_label(spark):
+    """Label exclusion needs both label columns; one alone used to be ignored."""
+    from utils_spark.operators import cosine_topk
+
+    df = spark.createDataFrame([(1, "a", [1.0, 0.0]), (2, "b", [0.0, 1.0])], ["id", "label", "embedding"])
+    for labels in ({"query_label": "label"}, {"corpus_label": "label"}):
+        with pytest.raises(ValueError, match="together"):
+            cosine_topk(df, df, "id", "id", k=1, **labels)
+
+
+def test_salted_topk_matches_single_stage(spark):
+    """The two-stage salted top-k equals a one-stage row_number top-k on
+    heavy ties (4 distinct scores), one key holding most rows, and keys
+    whose hash buckets hold fewer than k rows (or are empty)."""
+    import random
+
+    from pyspark.sql import Window
+
+    from utils_spark.operators.similarity import SALT_BUCKETS, salted_topk
+
+    k = 7
+    sizes = {0: 3000, 1: 2, 2: 2, 3: 5, 4: 40}
+    assert sizes[4] < SALT_BUCKETS * k and min(sizes.values()) < k
+    rows = [(q, i, (i * 7 % 4) / 4.0) for q, n in sizes.items() for i in range(n)]
+    random.Random(0).shuffle(rows)  # ties must be broken by the order, not by arrival
+    df = spark.createDataFrame(rows, "q int, id int, score double").repartition(3)
+    order = (F.desc("score"), F.asc("id"))
+    got = [tuple(r) for r in salted_topk(df, "q", "id", order, k).collect()]
+    w = Window.partitionBy("q").orderBy(*order)
+    want = [
+        tuple(r)
+        for r in df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn").collect()
+    ]
+    assert sorted(got) == sorted(want)
+    assert {q: sum(1 for r in got if r[0] == q) for q in sizes} == {q: min(n, k) for q, n in sizes.items()}
+
+
 def test_zscore_per_group(spark):
     import numpy as np
 

@@ -166,6 +166,53 @@ def _minhash_sig_col(grams, n_hashes: int):
     )
 
 
+def simhash_bits(text: Column | str, n_bits: int) -> Column:
+    """SimHash bit vector (Charikar STOC'02) over distinct word tokens:
+    array<long>[n_bits] of 0/1. Each token's md5-derived n_bits-bit hash
+    votes ±1 per bit position; a bit is set when its vote sum is positive.
+    Exact for n_bits <= 52: token hashes < 2^n_bits, so floor(h / 2^b) % 2
+    is lossless in double (division by a power of two only shifts the
+    exponent) and equals DuckDB's integer (h >> b) & 1.
+
+    The per-bit vote sums accumulate in ONE pass over the token array
+    (array accumulator + zip_with), so the md5 hash runs exactly once per
+    token — a per-bit aggregate formulation inlines the hash array into
+    every bit's aggregate (CollapseProject re-inlines it even through an
+    intermediate projection) and was measured 48x the hashing work at 48
+    bits (20 s → 4 s at sf0.1)."""
+    hs = F.transform(
+        F.array_distinct(word_tokens(text)),
+        lambda t: md5_long(t) % F.lit(1 << n_bits).cast("long"),
+    )
+
+    def bit_of(h, b):
+        return F.floor(h.cast("double") / F.pow(F.lit(2.0), b.cast("double"))).cast("long") % 2
+
+    bit_range = F.sequence(F.lit(0), F.lit(n_bits - 1))
+    votes = F.aggregate(
+        hs,
+        F.array_repeat(F.lit(0), n_bits),
+        lambda acc, h: F.zip_with(
+            acc,
+            F.transform(bit_range, lambda b: F.when(bit_of(h, b) == 1, 1).otherwise(-1)),
+            lambda a, v: a + v,
+        ),
+    )
+    return F.transform(votes, lambda v: F.when(v > 0, 1).otherwise(0).cast("long"))
+
+
+def bits_to_long(bits: Column) -> Column:
+    """sum(bits[i] * 2^i) of a 0/1 array<long> via a (sum, weight) fold —
+    pure long arithmetic, exact for up to 63 bits."""
+    acc0 = F.struct(F.lit(0).cast("long").alias("s"), F.lit(1).cast("long").alias("w"))
+    return F.aggregate(
+        bits,
+        acc0,
+        lambda a, x: F.struct((a["s"] + x * a["w"]).alias("s"), (a["w"] * 2).alias("w")),
+        lambda a: a["s"],
+    )
+
+
 def text_fingerprint(text: Column | str) -> Column:
     """Exact-dedup fingerprint: md5 of the trimmed, lower-cased,
     whitespace-collapsed text — the key every fingerprint dedup path
@@ -197,10 +244,23 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     dot(a,b) / (||a||·||b||) via zip_with + aggregate — whole-stage codegen,
     no UDF. Caller should cast float arrays to double first for stable math.
     """
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
     na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
     nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)
+    return dot(a, b) / (na * nb)
+
+
+def dot(a: Column, b: Column) -> Column:
+    """Dot product of two array<double> columns: the left fold
+    ((0.0 + a₀b₀) + a₁b₁) + … over zip_with, JVM-side."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
+
+
+def sq_l2(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance of two array<double> columns: the left
+    fold ((0.0 + d₀²) + d₁²) + … of dᵢ = aᵢ − bᵢ over zip_with, JVM-side."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, d: acc + d
+    )
 
 
 def to_double_array(col: Column | str) -> Column:

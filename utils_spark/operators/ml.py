@@ -16,7 +16,8 @@ import pandas as pd  # module-level so pandas_udf type hints resolve under
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from utils_spark.functions import to_double_array
+from utils_spark.functions import dot, sq_l2, to_double_array
+from utils_spark.operators.similarity import mean_vectors
 from utils_spark.plans import (
     SAME_STATE,
     cut_lineage,
@@ -199,29 +200,14 @@ def knn_graph(
     )
     hash_exprs = [
         F.floor(
-            F.aggregate(
-                F.zip_with(
-                    F.col("__v"),
-                    F.array(*[F.lit(x) for x in u]),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            / F.lit(float(bucket_length))
+            dot(F.col("__v"), F.array(*[F.lit(x) for x in u])) / F.lit(float(bucket_length))
         ).cast("long")
         for u in units
     ]
     hashed = pts.select(
         "__key", "__v", F.posexplode(F.array(*hash_exprs)).alias("__ht", "__hv")
     )
-    dist = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col("a.__v"), F.col("b.__v"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+    dist = F.sqrt(sq_l2(F.col("a.__v"), F.col("b.__v")))
 
     def _bucket_topk(joined, extra_part_cols: list[str]):
         # candidate enumeration + the exact per-bucket cut (see docstring):
@@ -862,14 +848,7 @@ def _centroid_mst(df: DataFrame, array_col: str, cluster_col: str, start_cluster
     """Cluster centroids + Prim MST from ``start_cluster`` (the skeleton of
     ``principal_curve_pseudotime``). Only the (k × d) centroid matrix
     reaches the driver."""
-    comp = df.select(cluster_col, F.posexplode(to_double_array(array_col)).alias("dim", "x"))
-    cent_long = comp.groupBy(cluster_col, "dim").agg(F.avg("x").alias("cx"))
-    cent_rows = (
-        cent_long.groupBy(cluster_col)
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "cx"))).alias("pairs"))
-        .select(cluster_col, F.transform("pairs", lambda p: p["cx"]).alias("centroid"))
-        .collect()
-    )
+    cent_rows = mean_vectors(df, cluster_col, to_double_array(array_col)).collect()
     import math as _math
 
     cents = {r[cluster_col]: r["centroid"] for r in cent_rows}
@@ -1001,18 +980,12 @@ def principal_curve_pseudotime(
             wrk = Window.orderBy(F.asc("__pt"), F.asc("__key"))
             n = cells.count()
             P = min(approx_points, max(2, n))
-            binned = (
-                cells.withColumn("__bin", ((F.row_number().over(wrk) - 1) * P / n).cast("int"))
-                .select("__bin", F.posexplode("__v").alias("dim", "x"))
-                .groupBy("__bin", "dim")
-                .agg(F.avg("x").alias("cx"))
-                .groupBy("__bin")
-                .agg(F.array_sort(F.collect_list(F.struct("dim", "cx"))).alias("pairs"))
-                .select("__bin", F.transform("pairs", lambda p: p["cx"]).alias("pt"))
-                .orderBy("__bin")
-                .collect()
-            )
-            curve = resample(np.array([r["pt"] for r in binned]), approx_points)
+            binned = mean_vectors(
+                cells.withColumn("__bin", ((F.row_number().over(wrk) - 1) * P / n).cast("int")),
+                "__bin",
+                "__v",
+            ).orderBy("__bin").collect()
+            curve = resample(np.array([r["centroid"] for r in binned]), approx_points)
         results.append(
             cells.select(
                 F.col("__key").alias(key_col),
@@ -1539,14 +1512,7 @@ def harmony_soft(
         else:
             cent_arr = F.array(*[F.array(*[F.lit(x) for x in c]) for c in cents])
         # responsibilities: softmax over -dist²/sigma, numerically stabilized
-        d2 = F.transform(
-            cent_arr,
-            lambda mu: F.aggregate(
-                F.zip_with(F.col("__v"), mu, lambda x, m: (x - m) * (x - m)),
-                F.lit(0.0),
-                lambda acc, z: acc + z,
-            ),
-        )
+        d2 = F.transform(cent_arr, lambda mu: sq_l2(F.col("__v"), mu))
         soft = work.withColumn("__d2", d2).withColumn(
             "__logits", F.transform("__d2", lambda z: -z / F.lit(sigma))
         )

@@ -8,10 +8,38 @@ All vector math is JVM-side (zip_with/aggregate) — no Python in the loop.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from utils_spark.functions import cosine_similarity, to_double_array
+from utils_spark.functions import cosine_similarity, sq_l2, to_double_array
+
+
+# Stage-1 hash buckets per key of `salted_topk`: reducer parallelism
+# nkeys x SALT_BUCKETS, each stage-1 sort bounded to ~N/SALT_BUCKETS rows.
+SALT_BUCKETS = 32
+
+
+def salted_topk(df: DataFrame, key: str, item: str, order, k: int) -> DataFrame:
+    """The first ``k`` rows per ``key`` under the total order ``order``
+    (a tuple of sort Columns that ends in a unique tie-break on ``item``),
+    reduced in TWO window stages so no single task ever sorts all of one
+    key's rows: stage 1 takes the top-k within (key, hash(item) mod
+    SALT_BUCKETS), stage 2 merges the <= SALT_BUCKETS x k survivors per
+    key (tiny) — the distributed top-k shape of Odyssey (VLDB 2023) and
+    REPOSE (ICDE 2021).
+
+    Exact: both stages rank by the SAME total order, so anything stage 1
+    cuts was dominated by k rows of its own bucket.
+
+    Cost note: Spark >= 3.5 also gives a one-stage `Window.partitionBy(key)`
+    + row_number <= k a map-side partial top-k (WindowGroupLimit), so its
+    reducers see at most map tasks x k rows per key; at sf0.1 the salted
+    form shuffled more bytes than that (margin_bitext_mining 8 KB → 214 KB,
+    ROADMAP direction E)."""
+    w1 = Window.partitionBy(key, F.pmod(F.hash(item), F.lit(SALT_BUCKETS))).orderBy(*order)
+    df = df.withColumn("__rn", F.row_number().over(w1)).filter(F.col("__rn") <= k).drop("__rn")
+    w = Window.partitionBy(key).orderBy(*order)
+    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k).drop("__rn")
 
 
 def cosine_topk(
@@ -22,35 +50,30 @@ def cosine_topk(
     vec_col: str = "embedding",
     k: int = 5,
     round_digits: int | None = 6,
-    salt_buckets: int = 32,
     query_label: str | None = None,
     corpus_label: str | None = None,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Exact top-k cosine neighbors of every query vector:
-    (query_id, neighbor_id, cosine), k rows per query. With
-    ``query_label``/``corpus_label`` set, pairs whose labels MATCH are
+    (query_id, neighbor_id, *carry, cosine), k rows per query; ``carry``
+    names corpus columns passed through to the output. With
+    ``query_label`` and ``corpus_label`` set, pairs whose labels MATCH are
     excluded — the hard-negative-mining variant (contrastive training
-    data wants the most similar items of a DIFFERENT class).
+    data wants the most similar items of a DIFFERENT class); setting only
+    one of the two raises ValueError.
 
     Scale shape: queries broadcast; the corpus streams partition-parallel
-    (never shuffled for scoring). The top-k reduction is TWO-STAGE so no
-    single task ever sorts the whole corpus for one query: stage 1 takes
-    top-k within (query, hash-bucket) — parallelism nq x `salt_buckets`,
-    each sort bounded to ~N/salt_buckets rows — stage 2 merges the
-    nq x salt_buckets x k survivors per query (tiny). A plain
-    `Window.partitionBy(query_id)` would cap reducer parallelism at nq and
-    put the full corpus through one task's sort at large N.
-
-    Both stages rank by the SAME (rounded cosine desc, neighbor_id asc)
-    total order, so stage-1 pruning is exact: anything cut was dominated
-    by k rows of its own bucket. `round_digits` stabilizes ordering across
-    engines; None disables.
+    (never shuffled for scoring); the top-k reduction is `salted_topk`
+    by (rounded cosine desc, neighbor_id asc), so no single task ever
+    sorts the whole corpus for one query. `round_digits` stabilizes
+    ordering across engines; None disables.
     """
+    if (query_label is None) != (corpus_label is None):
+        raise ValueError("query_label and corpus_label must be set together")
     qcols = [F.col(query_key).alias("query_id"), to_double_array(vec_col).alias("__qv")]
-    ccols = [F.col(corpus_key).alias("neighbor_id"), to_double_array(vec_col).alias("__nv")]
-    if query_label:
+    ccols = [F.col(corpus_key).alias("neighbor_id"), *carry, to_double_array(vec_col).alias("__nv")]
+    if query_label is not None:
         qcols.append(F.col(query_label).alias("__ql"))
-    if corpus_label:
         ccols.append(F.col(corpus_label).alias("__nl"))
     q = queries.select(*qcols)
     c = corpus.select(*ccols)
@@ -58,23 +81,38 @@ def cosine_topk(
     if round_digits is not None:
         sim = F.round(sim, round_digits)
     cond = F.col("neighbor_id") != F.col("query_id")
-    if query_label and corpus_label:
+    if query_label is not None:
         cond = cond & (F.col("__ql") != F.col("__nl"))
     sims = (
         F.broadcast(q)
         .join(c, cond)
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
+        .select("query_id", "neighbor_id", *carry, sim.alias("cosine"))
     )
-    order = (F.desc("cosine"), F.asc("neighbor_id"))
-    if salt_buckets and salt_buckets > 1:
-        w1 = Window.partitionBy(
-            "query_id", F.pmod(F.hash("neighbor_id"), F.lit(salt_buckets))
-        ).orderBy(*order)
-        sims = sims.withColumn("__rn", F.row_number().over(w1)).filter(
-            F.col("__rn") <= k
-        ).drop("__rn")
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return sims.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k).drop("__rn")
+    return salted_topk(sims, "query_id", "neighbor_id", (F.desc("cosine"), F.asc("neighbor_id")), k)
+
+
+def mean_vectors(
+    df: DataFrame, keys: str | list[str], vec: str | Column, round_digits: int | None = None
+) -> DataFrame:
+    """Component-wise mean of the array column ``vec`` per ``keys``:
+    (keys..., centroid array<double>), components optionally rounded.
+    posexplode → avg per (keys, dim) → dim-ordered collect → array, so
+    the shuffles carry (keys x dim) partial aggregates, never vectors —
+    the centroid step of IVF coarse quantizers, PQ Lloyd updates and
+    cluster-centroid trajectories."""
+    keys = [keys] if isinstance(keys, str) else list(keys)
+
+    def component(p):
+        return p["cx"] if round_digits is None else F.round(p["cx"], round_digits)
+
+    return (
+        df.select(*keys, F.posexplode(vec).alias("dim", "x"))
+        .groupBy(*keys, "dim")
+        .agg(F.avg("x").alias("cx"))
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("dim", "cx"))).alias("pairs"))
+        .select(*keys, F.transform("pairs", component).alias("centroid"))
+    )
 
 
 def pairwise_distances(
@@ -89,13 +127,7 @@ def pairwise_distances(
     if metric == "cosine":
         m = cosine_similarity(F.col("a.v"), F.col("b.v"))
     elif metric == "euclidean":
-        m = F.sqrt(
-            F.aggregate(
-                F.zip_with("a.v", "b.v", lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            )
-        )
+        m = F.sqrt(sq_l2(F.col("a.v"), F.col("b.v")))
     else:
         raise ValueError(f"unknown metric: {metric}")
     return joined.select(F.col("a.k").alias("key_a"), F.col("b.k").alias("key_b"), m.alias(metric))

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from utils_spark.functions import md5_long, word_tokens
+from utils_spark.functions import bits_to_long, simhash_bits
 from utils_spark.io import load_table
 from utils_spark.operators.stats import pairwise_ecdf, pairwise_ks_test
 from utils_spark.registry import register
@@ -439,41 +439,10 @@ def simhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits with positive vote sums. Near-dup docs differ in few bits
     (Hamming ball lookup). Pure integer array math, map-only, no UDF.
 
-    Optimization (r15, guide §1.2 "per-task work"): the 16 per-bit vote
-    sums accumulate in ONE pass over the token array (array accumulator +
-    zip_with) — the old per-bit aggregate formulation inlined the md5 hash
-    array into all 16 aggregates (CollapseProject re-inlines it through
-    intermediate projections), paying 16× the hashing work. Same fix the
-    48-bit `_simhash_sig48` kernel already carries (where it measured
-    20 s → 4 s); vote sums and positional weights are exact integer math
-    either way, so the signature is bit-identical."""
+    The bit vote is `functions.simhash_bits`, the kernel the 48-bit
+    `simhash_hamming_pairs` signature also runs."""
     d = load_table(spark, sf_dir, "documents")
-    hs = F.transform(F.array_distinct(word_tokens("text")), lambda t: md5_long(t) % 65536)
-
-    def bit_of(h, b):
-        # floor(h / 2^b) % 2 — exact in double for h < 2^16; identical to
-        # DuckDB's (h // (1 << b)) % 2 integer arithmetic
-        return F.floor(h.cast("double") / F.pow(F.lit(2.0), b.cast("double"))).cast("long") % 2
-
-    bit_range = F.sequence(F.lit(0), F.lit(15))
-    votes = F.aggregate(
-        hs,
-        F.array_repeat(F.lit(0), 16),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(bit_range, lambda b: F.when(bit_of(h, b) == 1, 1).otherwise(-1)),
-            lambda a, v: a + v,
-        ),
-    )
-    bits = F.transform(votes, lambda v: F.when(v > 0, 1).otherwise(0).cast("long"))
-    # sum(bits[i] * 2^i) via a (sum, weight) fold — pure long arithmetic
-    acc0 = F.struct(F.lit(0).cast("long").alias("s"), F.lit(1).cast("long").alias("w"))
-    sig = F.aggregate(
-        bits,
-        acc0,
-        lambda a, x: F.struct((a["s"] + x * a["w"]).alias("s"), (a["w"] * 2).alias("w")),
-        lambda a: a["s"],
-    )
+    sig = bits_to_long(simhash_bits("text", 16))
     return d.select("doc_id", sig.alias("simhash"))
 
 

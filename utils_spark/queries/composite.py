@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from utils_spark.functions import to_double_array
+from utils_spark.functions import dot, sq_l2, to_double_array
 from utils_spark.io import load_table
 from utils_spark.registry import register
 
@@ -305,11 +305,7 @@ def factor_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rf = row_f.withColumnRenamed("features", "rf")
     cf = col_f.withColumnRenamed("features", "cf")
-    pred = F.aggregate(
-        F.zip_with(to_double_array("rf"), to_double_array("cf"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, z: acc + z,
-    )
+    pred = dot(to_double_array("rf"), to_double_array("cf"))
     resid = (
         mat.join(rf, "p_partkey")
         .join(cf, "s_suppkey")
@@ -836,18 +832,10 @@ def pca_exact_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec").alias("vec_n"),
         F.col("pca").alias("pca_n"),
     )
-
-    def _dist(x, y):
-        return F.sqrt(
-            F.aggregate(
-                F.zip_with(x, y, lambda p, q: (p - q) * (p - q)),
-                F.lit(0.0),
-                lambda acc, z: acc + z,
-            )
-        )
-
     pairs = embedded.join(nxt, "vec_id").select(
-        (_dist(F.col("pca"), F.col("pca_n")) - _dist(F.col("vec"), F.col("vec_n"))).alias("err")
+        (
+            F.sqrt(sq_l2(F.col("pca"), F.col("pca_n"))) - F.sqrt(sq_l2(F.col("vec"), F.col("vec_n")))
+        ).alias("err")
     )
     return (
         embedded.agg(F.count("*").alias("n_vecs"))
@@ -1229,21 +1217,12 @@ def mds_exact_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("mds2").alias("m2n"),
     )
 
-    def _dist6(x, y):
-        return F.sqrt(
-            F.aggregate(
-                F.zip_with(x, y, lambda p, q: (p - q) * (p - q)),
-                F.lit(0.0),
-                lambda acc, z: acc + z,
-            )
-        )
-
     d2 = F.sqrt(
         (F.col("mds1") - F.col("m1n")) * (F.col("mds1") - F.col("m1n"))
         + (F.col("mds2") - F.col("m2n")) * (F.col("mds2") - F.col("m2n"))
     )
     pairs = embedded.join(nxt, "vec_id").select(
-        (d2 - _dist6(F.col("vec"), F.col("vec_n"))).alias("err")
+        (d2 - F.sqrt(sq_l2(F.col("vec"), F.col("vec_n")))).alias("err")
     )
     return embedded.agg(F.count("*").alias("n_points")).crossJoin(
         F.broadcast(pairs.agg(F.round(F.max(F.abs("err")), 6).alias("max_dist_err")))

@@ -18,9 +18,11 @@ from utils_spark.functions import (
     MINHASH_P30,
     _minhash_constants,
     _minhash_sig_col,
+    bits_to_long,
     char_shingles,
     md5_long,
     minhash_band_structs,
+    simhash_bits,
     text_fingerprint,
     word_tokens,
 )
@@ -3710,58 +3712,17 @@ _SIMHASH_K = 3  # Hamming radius; <= bands-1 so banding has perfect recall
 
 
 def _simhash_sig48(text_col: str):
-    """48-bit SimHash signature Column over distinct word tokens: each
-    token's md5-derived 48-bit hash votes ±1 per bit position; the
-    signature sets bits whose vote sum is positive. All arithmetic is
-    exact: token hashes < 2^48 so floor(h / 2^b) % 2 is lossless in
-    double (division by a power of two only shifts the exponent), and
-    the positional weight 2^b (b <= 47) fits a long. Returns
-    (sig_long, band_vals array<long>[4]) — band k holds bits
-    [12k, 12k+12), so sig == sum(band_vals[k] * 2^(12k)).
-
-    The 48 per-bit vote sums accumulate in ONE pass over the token
-    array (array accumulator + zip_with), so the md5 hash runs exactly
-    once per token — a per-bit aggregate formulation inlines the hash
-    array into all 48 aggregates (CollapseProject re-inlines it even
-    through an intermediate projection) and was measured 48× the
-    hashing work (20 s → 4 s at sf0.1)."""
-    hs = F.transform(
-        F.array_distinct(word_tokens(text_col)),
-        lambda t: md5_long(t) % F.lit(1 << _SIMHASH_BITS).cast("long"),
-    )
-
-    def bit_of(h, b):
-        # floor(h / 2^b) % 2 — identical to DuckDB BIGINT (h >> b) & 1
-        return F.floor(h.cast("double") / F.pow(F.lit(2.0), b.cast("double"))).cast("long") % 2
-
-    bit_range = F.sequence(F.lit(0), F.lit(_SIMHASH_BITS - 1))
-    votes = F.aggregate(
-        hs,
-        F.array_repeat(F.lit(0), _SIMHASH_BITS),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(bit_range, lambda b: F.when(bit_of(h, b) == 1, 1).otherwise(-1)),
-            lambda a, v: a + v,
-        ),
-    )
-    bits = F.transform(votes, lambda v: F.when(v > 0, 1).otherwise(0).cast("long"))
-
-    def weighted(arr):
-        # sum(arr[i] * 2^i) via a (sum, weight) fold — pure long arithmetic
-        acc0 = F.struct(F.lit(0).cast("long").alias("s"), F.lit(1).cast("long").alias("w"))
-        return F.aggregate(
-            arr,
-            acc0,
-            lambda a, x: F.struct((a["s"] + x * a["w"]).alias("s"), (a["w"] * 2).alias("w")),
-            lambda a: a["s"],
-        )
-
+    """48-bit SimHash signature Column (`functions.simhash_bits`; the
+    positional weight 2^b, b <= 47, fits a long). Returns (sig_long,
+    band_vals array<long>[4]) — band k holds bits [12k, 12k+12), so
+    sig == sum(band_vals[k] * 2^(12k))."""
+    bits = simhash_bits(text_col, _SIMHASH_BITS)
     width = _SIMHASH_BITS // _SIMHASH_BANDS
     band_vals = F.transform(
         F.sequence(F.lit(0), F.lit(_SIMHASH_BANDS - 1)),
-        lambda k: weighted(F.slice(bits, k * width + 1, width)),
+        lambda k: bits_to_long(F.slice(bits, k * width + 1, width)),
     )
-    return weighted(bits), band_vals
+    return bits_to_long(bits), band_vals
 
 
 @register(

@@ -12,8 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from utils_spark.functions import cosine_similarity, to_double_array
+from utils_spark.functions import cosine_similarity, sq_l2, to_double_array
 from utils_spark.io import load_table
+from utils_spark.operators import similarity
 from utils_spark.registry import register
 
 # Fixture embedding dimensionality (TESTDATA.md: embeddings.embedding is
@@ -77,44 +78,18 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the QUERY side broadcasts (queries are small by definition);
     the corpus side streams partition-parallel — a 100 TB corpus never
-    shuffles for scoring. Top-k reduces in TWO window stages: per
-    (query, hash-bucket) first (parallelism nq x 32, bounded sorts), then
-    a tiny merge of bucket winners per query — a single-stage
-    partitionBy(query_id) window would sort the whole corpus per query in
-    one task. Both stages use the same (cosine desc, id asc) total order,
-    so the bucket prune is exact. Cosine is rounded to 6dp before ranking
-    so ordering is engine-stable."""
+    shuffles for scoring. Top-k is `similarity.salted_topk`'s two window
+    stages by (cosine desc, id asc). Cosine is rounded to 6dp before
+    ranking so ordering is engine-stable. The operator is
+    `similarity.cosine_topk`, carrying the neighbor's label."""
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), to_double_array("embedding").alias("qvec")
-    )
-    corpus = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        to_double_array("embedding").alias("nvec"),
-    )
-    sims = (
-        F.broadcast(q)
-        .join(corpus, F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neighbor_label",
-            F.round(cosine_similarity(F.col("qvec"), F.col("nvec")), 6).alias("cosine"),
-        )
-    )
-    order = (F.desc("cosine"), F.asc("neighbor_id"))
-    w1 = Window.partitionBy(
-        "query_id", F.pmod(F.hash("neighbor_id"), F.lit(32))
-    ).orderBy(*order)
-    bucket_topk = (
-        sims.withColumn("rn", F.row_number().over(w1)).filter(F.col("rn") <= 5).drop("rn")
-    )
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        bucket_topk.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .drop("rn")
+    return similarity.cosine_topk(
+        e.filter(F.col("vec_id") < 10),
+        e.withColumnRenamed("label", "neighbor_label"),
+        "vec_id",
+        "vec_id",
+        k=5,
+        carry=("neighbor_label",),
     )
 
 
@@ -191,30 +166,10 @@ def ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_id, neighbor_id, cosine, probed_label)."""
     e = load_table(spark, sf_dir, "embeddings")
     vecs = e.select("vec_id", "label", to_double_array("embedding").alias("v"))
-    # (1) centroids: posexplode → avg per (label, dim) → re-assemble arrays
-    comp = vecs.select("label", F.posexplode("v").alias("dim", "x"))
-    cent = (
-        comp.groupBy("label", "dim")
-        .agg(F.avg("x").alias("cx"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "cx"))).alias("pairs"))
-        .select("label", F.transform("pairs", lambda p: p["cx"]).alias("centroid"))
-    )
+    cent = similarity.mean_vectors(vecs, "label", "v")  # (1)
     # (2) route queries (vec_id < 10) to nearest centroid by cosine
     q = vecs.filter(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    routed = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "query_id",
-            "qv",
-            F.col("label").alias("probed_label"),
-            # rounded before argmax so routing is engine-stable (oracle parity)
-            F.round(cosine_similarity(F.col("qv"), F.col("centroid")), 6).alias("csim"),
-        )
-    )
-    wroute = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("probed_label"))
-    routed = routed.withColumn("rn", F.row_number().over(wroute)).filter(F.col("rn") == 1).drop("rn", "csim")
+    routed = _ivf_route(q, cent).filter(F.col("route_rank") == 1).drop("route_rank", "csim")
     # (3) search only the probed bucket
     sims = (
         routed.join(vecs, (vecs.label == routed.probed_label) & (vecs.vec_id != routed.query_id))
@@ -227,6 +182,26 @@ def ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wtop = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return sims.withColumn("rn", F.row_number().over(wtop)).filter(F.col("rn") <= 5).drop("rn")
+
+
+def _ivf_route(q: DataFrame, cent: DataFrame) -> DataFrame:
+    """Rank every IVF cell for every query: (query_id, qv, probed_label,
+    csim, route_rank), route_rank 1 = the centroid of highest cosine
+    (rounded to 6dp before the ranking so routing is engine-stable; ties
+    by label). Queries (query_id, qv) and centroids (label, centroid)
+    both broadcast — the routing table is queries x cells."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("probed_label"))
+    return (
+        F.broadcast(q)
+        .crossJoin(F.broadcast(cent))
+        .select(
+            "query_id",
+            "qv",
+            F.col("label").alias("probed_label"),
+            F.round(cosine_similarity(F.col("qv"), F.col("centroid")), 6).alias("csim"),
+        )
+        .withColumn("route_rank", F.row_number().over(w))
+    )
 
 
 def perturbed_copies(seed: DataFrame, offset: int, scale: float) -> DataFrame:
@@ -379,11 +354,9 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     build side of a broadcast (r6 verdict fix — at 10^9 vectors a corpus
     broadcast is a multi-GB executor copy; plan-contract-pinned in
     tests/test_plans.py)."""
-    from utils_spark.operators.similarity import cosine_topk as topk_op
-
     e = load_table(spark, sf_dir, "embeddings")
     anchors = e.filter(F.col("vec_id") < 100)
-    pairs = topk_op(
+    pairs = similarity.cosine_topk(
         anchors,
         e,
         "vec_id",
@@ -511,7 +484,7 @@ def pq_codebook(vecs: DataFrame) -> DataFrame:
     )
     for _round in range(_PQ_ROUNDS):
         assigned = train.join(F.broadcast(cent), "j").withColumn(
-            "dist", F.round(_sq_dist(F.col("sub"), F.col("cent")), 6)
+            "dist", F.round(sq_l2(F.col("sub"), F.col("cent")), 6)
         )
         # min(struct(dist, code)) == row_number over (dist asc, code asc):
         # lexicographic struct ordering is the deterministic tie-break
@@ -520,21 +493,10 @@ def pq_codebook(vecs: DataFrame) -> DataFrame:
             .agg(F.min(F.struct("dist", "code")).alias("m"), F.first("sub").alias("sub"))
             .select("j", F.col("m.code").alias("code"), "sub")
         )
-        cent = (
-            best.select("j", "code", F.posexplode("sub").alias("dim", "x"))
-            .groupBy("j", "code", "dim")
-            .agg(F.avg("x").alias("cx"))
-            .groupBy("j", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "cx"))).alias("p"))
-            .select("j", "code", F.transform("p", lambda s: F.round(s["cx"], 6)).alias("cent"))
+        cent = similarity.mean_vectors(best, ["j", "code"], "sub", round_digits=6).withColumnRenamed(
+            "centroid", "cent"
         )
     return cent
-
-
-def _sq_dist(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, x: acc + x
-    )
 
 
 def _pq_subs(vecs: DataFrame, *extra_cols: str) -> DataFrame:
@@ -552,6 +514,72 @@ def _pq_subs(vecs: DataFrame, *extra_cols: str) -> DataFrame:
     return (
         vecs.select(*keys, F.posexplode(subarrays).alias("pos", "sub"))
         .select(*keys, (F.col("pos") + 1).alias("j"), "sub")
+    )
+
+
+def _pq_encode(subs: DataFrame, cb: DataFrame, *extra_cols: str) -> DataFrame:
+    """PQ-encode (vec_id, extra cols, j, sub) rows against the codebook
+    ``cb`` (j, code, cent): per (vector, subspace) the argmin code over
+    the 16 broadcast centroids (6dp-rounded distance; min(struct(dist,
+    code)) breaks ties by lowest code), then the per-vector 8-code array
+    (vec_id, extra cols, codes). The index build: two bounded-key
+    shuffles, ``extra_cols`` carried so nothing joins back."""
+    keys = ["vec_id", *extra_cols]
+    enc = subs.join(F.broadcast(cb), "j").withColumn(
+        "dist", F.round(sq_l2(F.col("sub"), F.col("cent")), 6)
+    )
+    codes_long = (
+        enc.groupBy(*keys, "j")
+        .agg(F.min(F.struct("dist", "code")).alias("m"))
+        .select(*keys, "j", F.col("m.code").alias("code"))
+    )
+    return (
+        codes_long.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("j", "code"))).alias("jc"))
+        .select(*keys, F.transform("jc", lambda s: s["code"]).alias("codes"))
+    )
+
+
+def _pq_adc_tables(qsubs: DataFrame, cb: DataFrame, query_id, *extra_cols: str) -> DataFrame:
+    """Per-query ADC distance tables: (query_id, extra cols, qdtab), where
+    qdtab is the query's 8x16 table of 6dp subvector-to-centroid squared
+    distances densified to 128 O(1) slots — slot (j-1)*16 + code.
+    ``query_id`` is the Column (named query_id) identifying a query row of
+    ``qsubs``; ``extra_cols`` (e.g. the probed cell) key the table too."""
+    qdt = qsubs.join(F.broadcast(cb), "j").select(
+        query_id,
+        *extra_cols,
+        ((F.col("j") - 1) * _PQ_K + F.col("code")).cast("int").alias("slot"),
+        F.round(sq_l2(F.col("sub"), F.col("cent")), 6).alias("d"),
+    )
+    return (
+        qdt.groupBy("query_id", *extra_cols)
+        .agg(F.map_from_entries(F.collect_list(F.struct("slot", "d"))).alias("qm"))
+        .select(
+            "query_id",
+            *extra_cols,
+            F.transform(
+                F.sequence(F.lit(0), F.lit(_PQ_M * _PQ_K - 1)),
+                lambda idx: F.element_at(F.col("qm"), idx.cast("int")),
+            ).alias("qdtab"),
+        )
+    )
+
+
+def _pq_adc_dist():
+    """6dp asymmetric distance of a row's ``codes`` under its query's
+    ``qdtab``: one O(1) table lookup per subspace, summed."""
+    return F.round(
+        F.aggregate(
+            F.sequence(F.lit(1), F.lit(_PQ_M)),
+            F.lit(0.0),
+            lambda acc, j: acc
+            + F.element_at(
+                F.col("qdtab"),
+                ((j - 1) * _PQ_K + 1).cast("int") + F.element_at(F.col("codes"), j.cast("int")),
+            ),
+        ),
+        6,
     )
 
 
@@ -594,65 +622,17 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cent = cut_lineage(pq_codebook(v))  # <=128 rows, reused by encode + ADC
     subs = _pq_subs(v)
-    # (2) corpus encode: argmin code per (vector, subspace), then the
-    # per-vector 8-code array (index build; two bounded-key shuffles)
-    enc = subs.join(F.broadcast(cent), "j").withColumn(
-        "dist", F.round(_sq_dist(F.col("sub"), F.col("cent")), 6)
-    )
-    codes_long = (
-        enc.groupBy("vec_id", "j")
-        .agg(F.min(F.struct("dist", "code")).alias("m"))
-        .select("vec_id", "j", F.col("m.code").alias("code"))
-    )
-    codes = (
-        codes_long.groupBy("vec_id")
-        .agg(F.array_sort(F.collect_list(F.struct("j", "code"))).alias("jc"))
-        .select("vec_id", F.transform("jc", lambda s: s["code"]).alias("codes"))
-    )
+    codes = _pq_encode(subs, cent)  # (2) corpus encode (index build)
     # (3) per-query distance tables, densified to 128 O(1) slots
-    qdt = (
-        subs.filter(F.col("vec_id") < 10)
-        .join(F.broadcast(cent), "j")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            ((F.col("j") - 1) * _PQ_K + F.col("code")).cast("int").alias("slot"),
-            F.round(_sq_dist(F.col("sub"), F.col("cent")), 6).alias("d"),
-        )
-    )
-    qrows = (
-        qdt.groupBy("query_id")
-        .agg(F.map_from_entries(F.collect_list(F.struct("slot", "d"))).alias("qm"))
-        .select(
-            "query_id",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_PQ_M * _PQ_K - 1)),
-                lambda idx: F.element_at(F.col("qm"), idx.cast("int")),
-            ).alias("qdtab"),
-        )
-    )
-    adc = F.round(
-        F.aggregate(
-            F.sequence(F.lit(1), F.lit(_PQ_M)),
-            F.lit(0.0),
-            lambda acc, j: acc
-            + F.element_at(
-                F.col("qdtab"),
-                ((j - 1) * _PQ_K + 1).cast("int") + F.element_at(F.col("codes"), j.cast("int")),
-            ),
-        ),
-        6,
-    )
+    qrows = _pq_adc_tables(subs.filter(F.col("vec_id") < 10), cent, F.col("vec_id").alias("query_id"))
     scored = (
         F.broadcast(qrows)
         .crossJoin(codes)
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), adc.alias("adc_dist"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), _pq_adc_dist().alias("adc_dist"))
     )
     order = (F.asc("adc_dist"), F.asc("neighbor_id"))
-    w1 = Window.partitionBy("query_id", F.pmod(F.hash("neighbor_id"), F.lit(32))).orderBy(*order)
-    bucket_topk = scored.withColumn("rn", F.row_number().over(w1)).filter(F.col("rn") <= 5).drop("rn")
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return bucket_topk.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5).drop("rn")
+    return similarity.salted_topk(scored, "query_id", "neighbor_id", order, 5)
 
 
 _IVFADC_NPROBE = 2  # coarse cells probed per query
@@ -793,34 +773,14 @@ def ann_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # coarse quantizer: per-label centroids, 6dp-rounded per component so
     # residuals and routing argmins are engine-stable (= oracle's coarse)
-    coarse = (
-        vecs.select("label", F.posexplode("v").alias("dim", "x"))
-        .groupBy("label", "dim")
-        .agg(F.avg("x").alias("cx"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "cx"))).alias("p"))
-        .select("label", F.transform("p", lambda s: F.round(s["cx"], 6)).alias("c"))
-    )
+    coarse = similarity.mean_vectors(vecs, "label", "v", round_digits=6).withColumnRenamed("centroid", "c")
     coarse = cut_lineage(coarse)  # one row per label, reused 3x
     res = vecs.join(F.broadcast(coarse), "label").select(
         "vec_id", "label", F.zip_with("v", "c", lambda x, y: x - y).alias("v")
     )
     cb = cut_lineage(pq_codebook(res.select("vec_id", "v")))  # <=128 rows
     # index build: residual PQ codes per vector, cell label carried through
-    subs = _pq_subs(res, "label")
-    enc = subs.join(F.broadcast(cb), "j").withColumn(
-        "dist", F.round(_sq_dist(F.col("sub"), F.col("cent")), 6)
-    )
-    codes_long = (
-        enc.groupBy("vec_id", "label", "j")
-        .agg(F.min(F.struct("dist", "code")).alias("m"))
-        .select("vec_id", "label", "j", F.col("m.code").alias("code"))
-    )
-    codes = (
-        codes_long.groupBy("vec_id", "label")
-        .agg(F.array_sort(F.collect_list(F.struct("j", "code"))).alias("jc"))
-        .select("vec_id", "label", F.transform("jc", lambda s: s["code"]).alias("codes"))
-    )
+    codes = _pq_encode(_pq_subs(res, "label"), cb, "label")
     # query routing: nprobe nearest coarse cells by L2, residual per cell
     q = vecs.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
@@ -828,7 +788,7 @@ def ann_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = (
         F.broadcast(q)
         .crossJoin(F.broadcast(coarse))
-        .withColumn("rdist", F.round(_sq_dist(F.col("qv"), F.col("c")), 6))
+        .withColumn("rdist", F.round(sq_l2(F.col("qv"), F.col("c")), 6))
     )
     wroute = Window.partitionBy("query_id").orderBy(F.asc("rdist"), F.asc("label"))
     probes = (
@@ -844,36 +804,7 @@ def ann_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     qsubs = _pq_subs(
         probes.withColumnRenamed("query_id", "vec_id"), "probed_label"
     ).withColumnRenamed("vec_id", "query_id")
-    qdt = qsubs.join(F.broadcast(cb), "j").select(
-        "query_id",
-        "probed_label",
-        ((F.col("j") - 1) * _PQ_K + F.col("code")).cast("int").alias("slot"),
-        F.round(_sq_dist(F.col("sub"), F.col("cent")), 6).alias("d"),
-    )
-    qrows = (
-        qdt.groupBy("query_id", "probed_label")
-        .agg(F.map_from_entries(F.collect_list(F.struct("slot", "d"))).alias("qm"))
-        .select(
-            "query_id",
-            "probed_label",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_PQ_M * _PQ_K - 1)),
-                lambda idx: F.element_at(F.col("qm"), idx.cast("int")),
-            ).alias("qdtab"),
-        )
-    )
-    adc = F.round(
-        F.aggregate(
-            F.sequence(F.lit(1), F.lit(_PQ_M)),
-            F.lit(0.0),
-            lambda acc, j: acc
-            + F.element_at(
-                F.col("qdtab"),
-                ((j - 1) * _PQ_K + 1).cast("int") + F.element_at(F.col("codes"), j.cast("int")),
-            ),
-        ),
-        6,
-    )
+    qrows = _pq_adc_tables(qsubs, cb, F.col("query_id"), "probed_label")
     scored = (
         F.broadcast(qrows)
         .join(codes, F.col("label") == F.col("probed_label"))
@@ -882,14 +813,11 @@ def ann_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             "probed_label",
-            adc.alias("adc_dist"),
+            _pq_adc_dist().alias("adc_dist"),
         )
     )
     order = (F.asc("adc_dist"), F.asc("neighbor_id"))
-    w1 = Window.partitionBy("query_id", F.pmod(F.hash("neighbor_id"), F.lit(32))).orderBy(*order)
-    bucket_topk = scored.withColumn("rn", F.row_number().over(w1)).filter(F.col("rn") <= 5).drop("rn")
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return bucket_topk.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5).drop("rn")
+    return similarity.salted_topk(scored, "query_id", "neighbor_id", order, 5)
 
 
 @register(
@@ -1051,59 +979,33 @@ def margin_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition the fixture into the two "languages".
 
     Scale shape: the bounded query set broadcasts against the streaming
-    Y side (the cosine_topk two-stage top-k pattern); the backward kNN
-    runs the bounded candidate set (queries x k rows) against the
-    streaming X side the same way — both passes are
+    Y side (`similarity.cosine_topk`, two-stage salted top-k); the
+    backward kNN runs the bounded candidate set (queries x k rows)
+    against the streaming X side through the same operator — both passes are
     broadcast-bounded-side x streamed-corpus, never corpus x corpus. At
     full corpus-to-corpus mining scale the candidate generator swaps for
     the IVF/LSH route (`ann_ivf_bucketed`); the margin arithmetic is
     unchanged. Cosines rounded to 6dp before ranking/averaging for
     engine-stable order."""
     e = load_table(spark, sf_dir, "embeddings")
-    x = e.filter(F.col("label") < 5).select(
-        F.col("vec_id").alias("xid"), to_double_array("embedding").alias("xv")
-    )
-    y = e.filter(F.col("label") >= 5).select(
-        F.col("vec_id").alias("yid"), to_double_array("embedding").alias("yv")
-    )
-    q = x.filter(F.col("xid") < 40).select(
-        F.col("xid").alias("query_id"), F.col("xv").alias("qv")
-    )
+    x = e.filter(F.col("label") < 5)
+    y = e.filter(F.col("label") >= 5)
     k = 4
-    fwd = (
-        F.broadcast(q)
-        .join(y, F.lit(True))
-        .select(
-            "query_id",
-            F.col("yid").alias("cand_id"),
-            F.round(cosine_similarity(F.col("qv"), F.col("yv")), 6).alias("cosine"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    fwd_rk = fwd.withColumn("rn", F.row_number().over(wq)).filter(F.col("rn") <= k)
-    knnx = fwd_rk.groupBy("query_id").agg(F.round(F.avg("cosine"), 6).alias("knn_x"))
-    cands = fwd_rk.select("cand_id").distinct().join(
-        y, F.col("cand_id") == F.col("yid")
-    ).select("cand_id", "yv")
-    bwd = (
-        F.broadcast(cands)
-        .join(x, F.lit(True))
-        .select(
-            "cand_id",
-            "xid",
-            F.round(cosine_similarity(F.col("yv"), F.col("xv")), 6).alias("cosine"),
-        )
-    )
-    wc = Window.partitionBy("cand_id").orderBy(F.desc("cosine"), F.asc("xid"))
+    # forward kNN: the query set's top-k into Y (X and Y are disjoint, so
+    # the operator's self-pair exclusion never fires)
+    fwd = similarity.cosine_topk(x.filter(F.col("vec_id") < 40), y, "vec_id", "vec_id", k=k)
+    fwd = fwd.withColumnRenamed("neighbor_id", "cand_id")
+    knnx = fwd.groupBy("query_id").agg(F.round(F.avg("cosine"), 6).alias("knn_x"))
+    # backward kNN: each distinct candidate's top-k into the full X side
+    cands = fwd.select("cand_id").distinct().join(y, F.col("cand_id") == F.col("vec_id"))
     knny = (
-        bwd.withColumn("rn", F.row_number().over(wc))
-        .filter(F.col("rn") <= k)
-        .groupBy("cand_id")
+        similarity.cosine_topk(cands, x, "cand_id", "vec_id", k=k)
+        .groupBy(F.col("query_id").alias("cand_id"))
         .agg(F.round(F.avg("cosine"), 6).alias("knn_y"))
     )
     denom = F.col("knn_x") / 2 + F.col("knn_y") / 2
     scored = (
-        fwd_rk.join(knnx, "query_id")
+        fwd.join(knnx, "query_id")
         .join(knny, "cand_id")
         .select(
             "query_id",
@@ -1191,7 +1093,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     20-query panel.
 
     Scale shape: the query panel broadcasts against the streaming
-    corpus for the exact baseline (the cosine_topk pattern) and the
+    corpus for the exact baseline (`similarity.cosine_topk`) and the
     routing table (queries × cells, ≤ 80 rows) joins the corpus on the
     LABEL key for candidates — only probed cells are scanned, which is
     the IVF premise being audited. The nprobe fanout multiplies the
@@ -1199,31 +1101,11 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     every ranking so route and rank are engine-stable."""
     e = load_table(spark, sf_dir, "embeddings")
     vecs = e.select("vec_id", "label", to_double_array("embedding").alias("v"))
-    comp = vecs.select("label", F.posexplode("v").alias("dim", "x"))
-    cent = (
-        comp.groupBy("label", "dim")
-        .agg(F.avg("x").alias("cx"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "cx"))).alias("pairs"))
-        .select("label", F.transform("pairs", lambda p: p["cx"]).alias("centroid"))
-    )
+    cent = similarity.mean_vectors(vecs, "label", "v")
     q = vecs.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    wroute = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("probed_label"))
-    routed = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "query_id",
-            "qv",
-            F.col("label").alias("probed_label"),
-            F.round(cosine_similarity(F.col("qv"), F.col("centroid")), 6).alias("csim"),
-        )
-        .withColumn("route_rank", F.row_number().over(wroute))
-        .filter(F.col("route_rank") <= 4)
-        .drop("csim")
-    )
+    routed = _ivf_route(q, cent).filter(F.col("route_rank") <= 4).drop("csim")
     cand = (
         F.broadcast(routed)
         .join(vecs, (vecs.label == routed.probed_label) & (vecs.vec_id != routed.query_id))
@@ -1243,23 +1125,9 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= 5)
         .select("nprobe", "query_id", "neighbor_id")
     )
-    bf_sims = (
-        F.broadcast(q)
-        .join(vecs, vecs.vec_id != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("qv"), F.col("v")), 6).alias("cosine"),
-        )
-    )
-    wbf = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    bf = (
-        bf_sims.withColumn("rn", F.row_number().over(wbf))
-        .filter(F.col("rn") <= 5)
-        .select(
-            F.col("query_id").alias("bf_query_id"),
-            F.col("neighbor_id").alias("bf_neighbor_id"),
-        )
+    bf = similarity.cosine_topk(e.filter(F.col("vec_id") < 20), e, "vec_id", "vec_id", k=5).select(
+        F.col("query_id").alias("bf_query_id"),
+        F.col("neighbor_id").alias("bf_neighbor_id"),
     )
     hits = (
         ivf.join(
