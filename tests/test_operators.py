@@ -374,30 +374,28 @@ def test_cosine_topk_rejects_one_sided_label(spark):
             cosine_topk(df, df, "id", "id", k=1, **labels)
 
 
-def test_salted_topk_matches_single_stage(spark):
-    """The two-stage salted top-k equals a one-stage row_number top-k on
-    heavy ties (4 distinct scores), one key holding most rows, and keys
-    whose hash buckets hold fewer than k rows (or are empty)."""
+def test_topk_per_key_exact_under_ties_and_skew(spark):
+    """The shared top-k equals a Python sort-and-cut reference on heavy
+    ties (4 distinct scores, broken by id), one key holding most rows,
+    and keys with fewer than k rows, over shuffled multi-partition input
+    so the map-side partial top-k (WindowGroupLimit) cuts each partition
+    before the merge."""
     import random
 
-    from pyspark.sql import Window
-
-    from utils_spark.operators.similarity import SALT_BUCKETS, salted_topk
+    from utils_spark.operators.similarity import topk_per_key
 
     k = 7
     sizes = {0: 3000, 1: 2, 2: 2, 3: 5, 4: 40}
-    assert sizes[4] < SALT_BUCKETS * k and min(sizes.values()) < k
     rows = [(q, i, (i * 7 % 4) / 4.0) for q, n in sizes.items() for i in range(n)]
     random.Random(0).shuffle(rows)  # ties must be broken by the order, not by arrival
     df = spark.createDataFrame(rows, "q int, id int, score double").repartition(3)
-    order = (F.desc("score"), F.asc("id"))
-    got = [tuple(r) for r in salted_topk(df, "q", "id", order, k).collect()]
-    w = Window.partitionBy("q").orderBy(*order)
-    want = [
-        tuple(r)
-        for r in df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn").collect()
-    ]
-    assert sorted(got) == sorted(want)
+    out = topk_per_key(df, "q", (F.desc("score"), F.asc("id")), k)
+    assert "WindowGroupLimit" in out._jdf.queryExecution().executedPlan().toString()
+    got = sorted(tuple(r) for r in out.collect())
+    want = sorted(
+        r for q in sizes for r in sorted((r for r in rows if r[0] == q), key=lambda r: (-r[2], r[1]))[:k]
+    )
+    assert got == want
     assert {q: sum(1 for r in got if r[0] == q) for q in sizes} == {q: min(n, k) for q, n in sizes.items()}
 
 

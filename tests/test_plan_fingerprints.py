@@ -21,6 +21,34 @@ def _run(tool, *argv):
     return subprocess.run([sys.executable, str(tool), *argv], capture_output=True, text=True, env=env, timeout=600)
 
 
+def _tool_module():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location("plan_fingerprints", TOOL)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+def test_normalize_renumbers_expression_ids():
+    """Ids are renumbered, not deleted: the same plan built with other ids
+    normalizes identically, but a reference to the other side of a
+    self-join (same name, different id) still changes the text."""
+    normalize = _tool_module().normalize
+    plan = (
+        "Project [v#{out}, transform(v#{va}, lambdafunction(lambda x_{lam}#{lam_id}, lambda x_{lam}#{lam_id}))]\n"
+        "+- Join Inner, (k#{ka} = k#{kb}), none#0\n"
+        "   :- InMemoryRelation [k#{ka}, v#{va}], UnsafeArrayData@{obj}\n"
+        "   +- InMemoryRelation [k#{kb}, v#{vb}], plan_id={pid}"
+    )
+    ids = dict(ka=10, va=11, kb=12, vb=13, lam=40, lam_id=14, obj="1a2b", pid=7)
+    left = normalize(plan.format(out=11, **ids))
+    shifted = {k: v + 900 if isinstance(v, int) else "ffe0" for k, v in ids.items()}
+    assert normalize(plan.format(out=911, **shifted)) == left
+    assert normalize(plan.format(out=13, **ids)) != left
+    assert "none#0" in left and "x_" not in left and "@1a2b" not in left and "plan_id=7" not in left
+
+
 def test_argv_fails_fast():
     """Unknown names and flags exit 2 before a JVM starts."""
     for argv, needle in [

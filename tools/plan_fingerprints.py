@@ -7,9 +7,12 @@ for the query built at sf0.001 (expression ids and alias names normalized
 away, so renamed helper columns and lambda variables leave it unchanged).
 Plan parts that canonicalization does not reach (a cached relation's
 physical plan, a Python UDF's result) still print names that depend on
-what the process built before; ``MASKS`` blanks them: expression ids after
-a name, fresh lambda variable suffixes (``x_40``), exchange plan ids and
-Java identity hashes (array literals print as ``UnsafeArrayData@1a2b``).
+what the process built before. ``normalize`` renumbers their expression
+ids (``v#4711``) in order of first appearance, so the text is the same in
+every process while references to different attributes of one name (the
+two sides of a self-join) stay different; ``MASKS`` blanks fresh lambda
+variable suffixes (``x_40``), exchange plan ids and Java identity hashes
+(array literals print as ``UnsafeArrayData@1a2b``).
 The reference file is ``plans/fingerprints_sf0.001.json``.
 
 Without ``--check`` the named queries (default: all) are built twice in
@@ -49,8 +52,9 @@ SF_DIR = "/root/testdata/sf0.001"
 FINGERPRINTS = os.path.join(REPO, "plans", "fingerprints_sf0.001.json")
 # fixed session shape: partition counts that reach a plan must not follow the host
 SESSION = {"cpus": 8, "shuffle_partitions": 8}
+# an expression id after a name; canonicalized attributes (``none#3``) are already numbered
+EXPR_ID = re.compile(r"(?<=[\w)])(?<!none)#(\d+)")
 MASKS = (
-    (re.compile(r"(?<=[\w)])(?<!none)#\d+"), "#"),
     (re.compile(r"(lambda \w+?)_\d+#"), r"\1#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"@[0-9a-f]+\b"), "@"),
@@ -60,6 +64,15 @@ CHILD = "import json, sys, plan_fingerprints as P; print(json.dumps(P.build_plan
 
 def is_hash(value: str) -> bool:
     return len(value) == 40 and all(c in "0123456789abcdef" for c in value)
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with its process-dependent names made process-independent."""
+    ids: dict[str, int] = {}
+    plan = EXPR_ID.sub(lambda m: f"#{ids.setdefault(m.group(1), len(ids))}", plan)
+    for pattern, mask in MASKS:
+        plan = pattern.sub(mask, plan)
+    return plan
 
 
 def build_plans(names: list[str], builds: int = 1) -> dict[str, list[str]]:
@@ -81,9 +94,7 @@ def build_plans(names: list[str], builds: int = 1) -> dict[str, list[str]]:
         for _ in range(builds):
             try:
                 df = registry[name].fn(spark, SF_DIR)
-                plan = df._jdf.queryExecution().optimizedPlan().canonicalized().toString()
-                for pattern, mask in MASKS:
-                    plan = pattern.sub(mask, plan)
+                plan = normalize(df._jdf.queryExecution().optimizedPlan().canonicalized().toString())
             except Exception as exc:  # a failed build is recorded, not fatal
                 plan = f"error: {type(exc).__name__}: {str(exc).splitlines()[0][:200]}"
             plans[name].append(plan)

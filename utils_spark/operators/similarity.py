@@ -14,30 +14,15 @@ from pyspark.sql import functions as F
 from utils_spark.functions import cosine_similarity, sq_l2, to_double_array
 
 
-# Stage-1 hash buckets per key of `salted_topk`: reducer parallelism
-# nkeys x SALT_BUCKETS, each stage-1 sort bounded to ~N/SALT_BUCKETS rows.
-SALT_BUCKETS = 32
-
-
-def salted_topk(df: DataFrame, key: str, item: str, order, k: int) -> DataFrame:
+def topk_per_key(df: DataFrame, key: str, order, k: int) -> DataFrame:
     """The first ``k`` rows per ``key`` under the total order ``order``
-    (a tuple of sort Columns that ends in a unique tie-break on ``item``),
-    reduced in TWO window stages so no single task ever sorts all of one
-    key's rows: stage 1 takes the top-k within (key, hash(item) mod
-    SALT_BUCKETS), stage 2 merges the <= SALT_BUCKETS x k survivors per
-    key (tiny) — the distributed top-k shape of Odyssey (VLDB 2023) and
-    REPOSE (ICDE 2021).
-
-    Exact: both stages rank by the SAME total order, so anything stage 1
-    cuts was dominated by k rows of its own bucket.
-
-    Cost note: Spark >= 3.5 also gives a one-stage `Window.partitionBy(key)`
-    + row_number <= k a map-side partial top-k (WindowGroupLimit), so its
-    reducers see at most map tasks x k rows per key; at sf0.1 the salted
-    form shuffled more bytes than that (margin_bitext_mining 8 KB → 214 KB,
-    ROADMAP direction E)."""
-    w1 = Window.partitionBy(key, F.pmod(F.hash(item), F.lit(SALT_BUCKETS))).orderBy(*order)
-    df = df.withColumn("__rn", F.row_number().over(w1)).filter(F.col("__rn") <= k).drop("__rn")
+    (a tuple of sort Columns that ends in a unique tie-break), as one
+    `Window.partitionBy(key)` + ``row_number <= k`` stage. Spark plans
+    this shape with a map-side partial top-k (``WindowGroupLimit ...
+    Partial`` before the exchange), so each reducer sees at most
+    map tasks x k rows per key, never all of one key's rows. A salted
+    two-stage form (top-k per (key, hash bucket), then per key) measured
+    worse at sf0.1: more shuffle bytes and one more stage per top-k."""
     w = Window.partitionBy(key).orderBy(*order)
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k).drop("__rn")
 
@@ -63,9 +48,8 @@ def cosine_topk(
     one of the two raises ValueError.
 
     Scale shape: queries broadcast; the corpus streams partition-parallel
-    (never shuffled for scoring); the top-k reduction is `salted_topk`
-    by (rounded cosine desc, neighbor_id asc), so no single task ever
-    sorts the whole corpus for one query. `round_digits` stabilizes
+    (never shuffled for scoring); the top-k reduction is `topk_per_key`
+    by (rounded cosine desc, neighbor_id asc). `round_digits` stabilizes
     ordering across engines; None disables.
     """
     if (query_label is None) != (corpus_label is None):
@@ -88,7 +72,7 @@ def cosine_topk(
         .join(c, cond)
         .select("query_id", "neighbor_id", *carry, sim.alias("cosine"))
     )
-    return salted_topk(sims, "query_id", "neighbor_id", (F.desc("cosine"), F.asc("neighbor_id")), k)
+    return topk_per_key(sims, "query_id", (F.desc("cosine"), F.asc("neighbor_id")), k)
 
 
 def mean_vectors(
