@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import gc
 import os
+import shutil
 import tempfile
+import uuid
+import weakref
 
 import pytest
 
@@ -158,6 +162,77 @@ def test_load_table_survives_unset_timezone_conf(spark, sf_dir):
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def _jobs_during(spark, fn) -> int:
+    """Spark jobs launched while ``fn`` runs, counted under a fresh job group
+    once the listener bus has delivered every event."""
+    sc = spark.sparkContext
+    group = f"io-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_resolves_schema_once_per_session(spark, sf_dir, tmp_path, monkeypatch):
+    """Schema inference (a one-task schema-merge job) runs on the first
+    load_table of a table in a session only; a rebuild reads with the
+    resolved schema and launches no job. A newSession() resolves its own."""
+    from pyspark import RDD
+
+    # every SparkSession() re-points RDD.toDF at itself; keep the suite's
+    monkeypatch.setattr(RDD, "toDF", RDD.toDF)
+    shutil.copy(os.path.join(sf_dir, "nation.parquet"), tmp_path / "nation.parquet")
+    sf = str(tmp_path)
+    assert _jobs_during(spark, lambda: load_table(spark, sf, "nation")) == 1
+    assert _jobs_during(spark, lambda: load_table(spark, sf, "nation")) == 0
+    assert load_table(spark, sf, "nation").count() == 25
+    fresh = spark.newSession()
+    assert _jobs_during(fresh, lambda: load_table(fresh, sf, "nation")) == 1
+
+
+def test_load_table_reresolves_rewritten_table(spark, tmp_path):
+    """The schema entry is keyed by the file's modification time and
+    length: a table rewritten with an added column shows the column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a", "b"]
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"], "c": [0.5, 1.5]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b", "c"]
+    assert sorted(r.c for r in df.collect()) == [0.5, 1.5]
+
+
+def test_session_store_released_with_session(spark, sf_dir, monkeypatch):
+    """Resolved schemas, the Viterbi chain Columns and the fitted LSH model
+    live in the session's store; dropping the session drops all of them."""
+    from pyspark import RDD
+
+    from utils_spark.operators.ml import _fitted_brp_lsh, _to_vector_col
+    from utils_spark.operators.textmodel import _viterbi_chain_exprs
+    from utils_spark.session import _SESSION_STORES, session_store
+
+    monkeypatch.setattr(RDD, "toDF", RDD.toDF)
+    s2 = spark.newSession()
+    load_table(s2, sf_dir, "region")
+    _viterbi_chain_exprs(s2)
+    # (createDataFrame would pin s2 as the class-level active session)
+    work = _to_vector_col(load_table(s2, sf_dir, "embeddings"), "embedding", "__feat")
+    _fitted_brp_lsh(work, 1.0, 2)
+    assert {k[0] for k in session_store(s2)} == {"schema", "viterbi_chain", "brp_lsh"}
+    ref, n = weakref.ref(s2), len(_SESSION_STORES)
+    del s2, work
+    monkeypatch.undo()  # RDD.toDF held the newest session
+    gc.collect()
+    assert ref() is None
+    assert len(_SESSION_STORES) == n - 1
 
 
 def test_read_jsonl_corrupt_line_tolerance(spark, tmp_path):

@@ -31,8 +31,12 @@ query that fails):
   * skew: the worst read stage's max task reads > 8x its median and > 1 MB;
   * CPU: the worst runtime stage's slowest task ran >= 1 s and > 4x the
     median, on a reduce stage (map-stage layout follows the input files).
-Shuffle bytes, spill, stage counts and task read quantiles are
-deterministic for a fixed plan, dataset and core count.
+Shuffle bytes, spill, stage counts and task read quantiles follow the
+plan, dataset and core count, but also what ran earlier in the same
+process: ``ann_recall_audit`` at sf0.1 reads 13 stages / 46,061 B or 15
+stages / 53,690 B at one commit, depending on the queries profiled before
+it. Before citing a stage or byte change, profile the changed query alone
+in a fresh process, at least twice on each side.
 """
 
 from __future__ import annotations

@@ -28,6 +28,7 @@ from utils_spark.plans import (
     scoped_conf,
     scratch_persist,
 )
+from utils_spark.session import session_store
 
 
 def _to_vector_col(df: DataFrame, array_col: str, out: str = "features") -> DataFrame:
@@ -323,16 +324,16 @@ def knn_graph(
 # num_hash_tables, seed) for the whole session — repeated graph builds
 # (bench min-of-2, the lisi/triangle/louvain queries sharing one layout)
 # skip the fit job; the cache key's dim probe is a single narrow head().
-_BRP_LSH_CACHE: dict = {}
-
-
+# It lives in the session's ``session_store``, so the JVM model is
+# released with the session.
 def _fitted_brp_lsh(work: DataFrame, bucket_length: float, num_hash_tables: int, seed: int = 290):
     from pyspark.ml.feature import BucketedRandomProjectionLSH
 
     head = work.select("__feat").head()
     dim = len(head[0]) if head is not None else 0
-    key = (dim, bucket_length, num_hash_tables, seed)
-    model = _BRP_LSH_CACHE.get(key)
+    store = session_store(work.sparkSession)
+    key = ("brp_lsh", dim, bucket_length, num_hash_tables, seed)
+    model = store.get(key)
     if model is None:
         model = BucketedRandomProjectionLSH(
             inputCol="__feat",
@@ -341,7 +342,7 @@ def _fitted_brp_lsh(work: DataFrame, bucket_length: float, num_hash_tables: int,
             numHashTables=num_hash_tables,
             seed=seed,
         ).fit(work)
-        _BRP_LSH_CACHE[key] = model
+        store[key] = model
     return model
 
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from utils_spark.functions import word_tokens
 from utils_spark.plans import cut_lineage, fixpoint
+from utils_spark.session import session_store
 
 
 def _bigram_structs(toks_col: str):
@@ -438,7 +439,7 @@ def _viterbi_chain(words: DataFrame, vocab: DataFrame):
     checkpointed between the passes (dp/__m columns dropped first, so
     the materialized rows are (w, n, MAXLEN ints) — never the per-row
     vocab map); values are bit-identical either way."""
-    dp_k_levels, on_levels, piece_at = _viterbi_chain_exprs()
+    dp_k_levels, on_levels, piece_at = _viterbi_chain_exprs(words.sparkSession)
     vmap = vocab.agg(
         F.map_from_entries(F.collect_list(F.struct("piece", "logp"))).alias("__m")
     )
@@ -456,19 +457,18 @@ def _viterbi_chain(words: DataFrame, vocab: DataFrame):
 
 # The chain's column expressions are pure functions of (UNIGRAM_MAXLEN,
 # UNIGRAM_MAXP) over fixed column NAMES — independent of any input frame —
-# so they are built once per process and reused (optimization r16, the
+# so they are built once per session and reused (optimization r16, the
 # same py4j lesson as harmony_soft: constructing ~1000 Column objects via
 # operator overloads costs a gateway round trip per operator, measured
 # ~7 s of pure driver Python PER CHAIN BUILD, and one query builds up to
 # five chains: two trainer EM rounds + final segmentation + the apply
 # head/tail twins). Column objects are immutable and reusable across
-# DataFrames; the cache is lazy because Column creation needs a live JVM.
-_CHAIN_EXPR_CACHE: dict = {}
-
-
-def _viterbi_chain_exprs():
-    key = (UNIGRAM_MAXLEN, UNIGRAM_MAXP)
-    got = _CHAIN_EXPR_CACHE.get(key)
+# DataFrames; they live in the session's ``session_store``, so the JVM
+# Columns are released with the session.
+def _viterbi_chain_exprs(spark):
+    store = session_store(spark)
+    key = ("viterbi_chain", UNIGRAM_MAXLEN, UNIGRAM_MAXP)
+    got = store.get(key)
     if got is not None:
         return got
     NEG = F.lit(-1.0e9)
@@ -503,7 +503,7 @@ def _viterbi_chain_exprs():
             sub = F.when(F.col(f"k_{i}") == k, F.col("w").substr(i - k + 1, k)).otherwise(sub)
         piece_at.append(F.when((F.length("w") >= i) & F.col(f"on_{i}"), sub))
     got = (tuple(dp_k_levels), tuple(on_levels), tuple(piece_at))
-    _CHAIN_EXPR_CACHE[key] = got
+    store[key] = got
     return got
 
 

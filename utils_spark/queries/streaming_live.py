@@ -34,7 +34,10 @@ def _source_rows(spark: SparkSession, sf_dir: str, table: str) -> int:
     """Measured row count of a stream's source table (parquet metadata
     count — footer row counts, no column decode), for sizing the streaming
     query's state partitioning. Deliberately NOT memoized: one sub-second
-    job per query run, recomputed from the input every time.
+    job per query run, recomputed from the input every time. The schema
+    costs no job: it is the session's resolved entry
+    (``io.resolve_schema``), inferred on the session's first read of the
+    table.
 
     Routed through ``load_table`` (ADVICE r15): a bare
     ``spark.read.parquet`` of a TIMESTAMP(NANOS) table only counts on a

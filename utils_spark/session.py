@@ -19,10 +19,24 @@ Design choices (all standard public Spark):
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# One memo per SparkSession object, held weakly by it: what is derived once
+# per session (table schemas, reusable Column chains, fitted data-independent
+# models) is dropped with the session, and a ``newSession()`` (own SQLConf)
+# or a restarted context starts empty. Values must not reference the session,
+# or it is never collected.
+_SESSION_STORES: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+
+def session_store(spark: SparkSession) -> dict:
+    """The memo dict of ``spark``, created on first use. Entries are keyed
+    by a tuple whose first item names the kind of entry."""
+    return _SESSION_STORES.setdefault(spark, {})
 
 
 def get_spark(

@@ -10,79 +10,40 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-from utils_spark.io import pin_read_confs
-
-
-def _events_raw_schema(ts_type) -> StructType:
-    return StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", ts_type),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
-
-
-# rounds 1-2 testdata: ts = TIMESTAMP(NANOS) read as long nanos
-# (see utils_spark.io.load_table for the batch twin of this conversion)
-EVENTS_RAW_SCHEMA = _events_raw_schema(LongType())
+from utils_spark.io import normalize_events_ts, pin_read_confs, resolve_schema
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source stream over the events table (stand-in for Kafka in this
-    environment). `events.ts` has shipped as TIMESTAMP(NANOS) and as
-    TIMESTAMP(MICROS, ntz) across testdata regenerations; we probe the
-    stored type with one batch footer read, then mirror ``load_table``'s
-    two normalization branches so stream and batch schemas are identical
-    (a unit test pins that equality)."""
-    # one-footer probe of the STORED parquet type (lazy scan — only the
-    # schema is materialized). The read confs are pinned BEFORE the probe
-    # (nanosAsLong), and UTC keeps the ntz cast and window/hour extraction
-    # wall-clock-exact vs the oracles.
+    environment). The stream's schema is the stored one from
+    ``io.resolve_schema`` (inferred once per session and file version, the
+    same entry ``load_table`` uses), and `events.ts`, which has shipped as
+    TIMESTAMP(NANOS) and as TIMESTAMP(MICROS, ntz) across testdata
+    regenerations, gets ``load_table``'s normalization, so stream and
+    batch schemas are identical (a unit test pins that equality)."""
+    # the read confs are pinned BEFORE the schema is resolved (nanosAsLong),
+    # and UTC keeps the ntz cast and window/hour extraction wall-clock-exact
+    # vs the oracles
     pin_read_confs(spark)
-    stored_ts = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes)["ts"]
-    if stored_ts == "bigint":
-        schema = EVENTS_RAW_SCHEMA
-    else:
-        from pyspark.sql.types import TimestampNTZType, TimestampType
-
-        schema = _events_raw_schema(
-            TimestampNTZType() if stored_ts == "timestamp_ntz" else TimestampType()
-        )
+    schema = resolve_schema(spark, f"{sf_dir}/events.parquet")
     reader = spark.readStream.schema(schema).option("pathGlobFilter", "events.parquet")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     # the file source needs a DIRECTORY; select just the events file by glob
-    df = reader.parquet(sf_dir)
-    if stored_ts == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif stored_ts == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return normalize_events_ts(reader.parquet(sf_dir), schema["ts"].dataType)
 
 
 def read_documents_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-source stream over the documents table — the ingest stand-in
-    for a document firehose (Kafka/queue in production). Schema comes
-    from the batch loader so stream and batch agree by construction
-    (documents has no legacy-timestamp branches, so no further
-    normalization is needed)."""
-    from utils_spark.io import load_table
-
-    schema = load_table(spark, sf_dir, "documents").schema
+    for a document firehose (Kafka/queue in production). The schema is
+    ``io.resolve_schema``'s entry for the file, the one the batch loader
+    reads with, so stream and batch agree by construction (documents has
+    no legacy-timestamp branches, so no further normalization is needed)."""
+    pin_read_confs(spark)
+    schema = resolve_schema(spark, f"{sf_dir}/documents.parquet")
     reader = spark.readStream.schema(schema).option("pathGlobFilter", "documents.parquet")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
