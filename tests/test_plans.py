@@ -74,7 +74,8 @@ def test_mad_outliers_broadcasts_thresholds(spark, sf_dir):
 
 def test_codegen_everywhere(spark, sf_dir):
     # whole-stage codegen must cover the hot paths (no interpreted gaps).
-    # grouped_quantiles is exempt: exact `percentile` is a
+    # grouped_quantiles is exempt: its exact quantiles collect each group's
+    # values with `collect_list`, like `percentile` a
     # TypedImperativeAggregate → ObjectHashAggregate (no codegen) — the
     # documented cost of exact quantiles on the correctness path; the
     # approx_percentile variant would restore codegen at scale.

@@ -8,6 +8,8 @@ hashing primitives our sampling / dedup / similarity operators build on.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -261,6 +263,64 @@ def sq_l2(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, d: acc + d
     )
+
+
+def exact_percentile(value: Column | str, p: float | Sequence[float]) -> Column:
+    """Exact interpolated percentile aggregate, a drop-in for
+    ``F.expr("percentile(x, p)")``: a scalar ``p`` gives a double, a
+    sequence gives array<double>, and an empty or all-NULL group gives NULL
+    in both forms. Use inside ``groupBy(...).agg(...)``.
+
+    Each group collects its non-null values as doubles into one array,
+    sorts it once, and reads every ``p`` from that array with Spark's
+    interpolation: pos = (n−1)·p; v[floor(pos)] when pos is whole or both
+    neighbours are equal, else (ceil−pos)·v[floor] + (pos−floor)·v[ceil].
+    ``percentile`` reads its values in IEEE total order (−0.0 before 0.0,
+    NaN last). The sort here runs inside a lambda's argument, which Spark
+    evaluates without codegen and with SQL ordering, where −0.0 = 0.0, so
+    it leaves the zeros in collection order; a zero read from the array
+    therefore takes the sign of its rank among the group's zeros. Results
+    are bit-identical to ``percentile`` for double inputs, and for
+    integral and decimal inputs up to the rounding of distinct values onto
+    one double. The expression is composed from Columns, not parsed from
+    SQL text: parsing text this nested grew the SQL parser's prediction
+    cache, which lives as long as the JVM, by about 4 MB.
+
+    Cost model: this holds every non-null value of a group (8 B each in the
+    shuffle) where ``percentile`` holds one boxed (value, count) hash-map
+    entry per distinct value and sorts the entries on the reducer. It wins
+    on near-distinct columns (about 2.5× on lineitem's prices at sf0.1)
+    and loses on duplicate-heavy ones (about 1.6× slower on the 50-valued
+    l_quantity), so keep ``percentile`` there. A group over Spark's array
+    limit (2^31−15 values) fails; at 100 TB use ``percentile_approx``
+    (``approx_sketch_aggs``)."""
+    scalar = not isinstance(p, (list, tuple))
+    ps = [float(q) for q in ([p] if scalar else p)]
+    for q in ps:
+        if not 0.0 <= q <= 1.0:
+            raise ValueError(f"percentile must be in [0, 1], got {q}")
+    v = F.col(value) if isinstance(value, str) else value
+    ranked = F.sort_array(F.collect_list(v.cast("double")))
+
+    def at(s: Column, q: Column) -> Column:
+        pos = (F.size(s) - 1) * q
+        lo, hi = F.floor(pos), F.ceil(pos)
+        a, b = s[lo.cast("int")], s[hi.cast("int")]
+        # a zero at rank lo of the zero run is -0.0 iff lo falls among the run's -0.0s
+        negative_zeros = F.size(F.filter(s, lambda x: x.cast("string") == "-0.0"))
+        sign = F.when(lo - F.array_position(s, 0.0) + 1 < negative_zeros, -1.0).otherwise(1.0)
+        exact = F.when(a == 0, F.abs(a) * sign).otherwise(a)
+        return F.when((lo == hi) | (a == b), exact).otherwise((hi - pos) * a + (pos - lo) * b)
+
+    def pick(s: Column) -> Column:
+        if scalar:
+            out = at(s, F.lit(ps[0]))
+        else:
+            out = F.transform(F.array(*[F.lit(q) for q in ps]), lambda q: at(s, q))
+        return F.when(F.size(s) > 0, out)
+
+    # the lambda binds the sorted array once, so each group sorts once for all ps
+    return F.transform(F.array(ranked), pick)[0]
 
 
 def to_double_array(col: Column | str) -> Column:

@@ -2,8 +2,9 @@
 crosstab, row proportions, binned aggregation, histograms, grouping sets.
 
 Covers SURVEY.md §2.4 (A1-A23). All hash aggregations — Spark plans
-partial (map-side) + final aggregation automatically; exact ``percentile``
-(not approx) is used on correctness paths per SURVEY §7.1.
+partial (map-side) + final aggregation automatically; exact percentiles
+(``functions.exact_percentile``, not approx) are used on correctness paths
+per SURVEY §7.1.
 """
 
 from __future__ import annotations
@@ -11,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from utils_spark.functions import fixed_width_bucket
+from utils_spark.functions import exact_percentile, fixed_width_bucket
 from utils_spark.io import load_table
 from utils_spark.operators import relational
 from utils_spark.registry import register
@@ -39,11 +40,13 @@ def grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical recipe (A1: R/utils.R:7-14 `max, median, q0.75, q0.99 by
     Sample`), TPC-H Q1 shaped.
 
-    Scale: single hash-agg shuffle on the (tiny-cardinality) group key;
-    exact percentile is a sort-based agg per group — at 100 TB switch the
-    tolerance flag to percentile_approx (same API, mergeable sketches)."""
+    Scale: single shuffle on the (tiny-cardinality) group key; the exact
+    quantiles are `exact_percentile`, one sorted array per group read at
+    all three ps (near-distinct prices: one flat sort beats `percentile`'s
+    value→count hash map). A group holds all its values, so at 100 TB
+    switch to percentile_approx (mergeable sketches, `approx_sketch_aggs`)."""
     li = load_table(spark, sf_dir, "lineitem")
-    pct = F.expr("percentile(l_extendedprice, array(0.5, 0.75, 0.99))")
+    pct = exact_percentile("l_extendedprice", (0.5, 0.75, 0.99))
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
+from utils_spark.functions import exact_percentile
 from utils_spark.io import load_table
 from utils_spark.operators import sampling
 from utils_spark.registry import register
@@ -61,7 +62,7 @@ def per_column_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     R/compare_annotation.R:158-160 `apply(mx, 2, quantile)`), long-format
     output (one row per metric — the wide apply becomes a union of aggs)."""
     def q(df, col):
-        pct = F.expr(f"percentile({col}, array(0.25, 0.5, 0.75))")
+        pct = exact_percentile(col, (0.25, 0.5, 0.75))
         return df.agg(pct.alias("_p")).select(
             F.lit(col).alias("metric"),
             F.round(F.col("_p")[0], 4).alias("q25"),

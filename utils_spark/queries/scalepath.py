@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from utils_spark.functions import cosine_similarity, to_double_array
+from utils_spark.functions import cosine_similarity, exact_percentile, to_double_array
 from utils_spark.io import load_table
 from utils_spark.registry import register
 
@@ -174,7 +174,7 @@ def approx_sketch_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
     )
     exact = li.groupBy("l_returnflag").agg(
-        F.expr("percentile(l_extendedprice, array(0.4, 0.6))").alias("band"),
+        exact_percentile("l_extendedprice", (0.4, 0.6)).alias("band"),
         F.countDistinct("l_orderkey").alias("cd"),
     )
     return approx.join(exact, "l_returnflag").select(

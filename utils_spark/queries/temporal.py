@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from utils_spark.functions import exact_percentile
 from utils_spark.io import load_table
 from utils_spark.registry import register
 
@@ -575,18 +576,27 @@ def hourly_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's quantile_cont definition; `approx_sketch_aggs` documents the
     mergeable-sketch switch for the same shape at 100 TB.
 
-    Scale shape: one shuffle on the (hour, type) composite key; exact
-    percentile costs an ObjectHashAggregate per group (documented
-    trade-off), groups are bounded (24 × types)."""
+    Scale shape: one shuffle on the (hour, type) composite key; the three
+    bands are one `exact_percentile` call, so each group ships its values
+    as one array and sorts it once (an ObjectHashAggregate, no codegen;
+    `value` is near-distinct, where the sorted array beats `percentile`'s
+    value→count map); groups are bounded (24 × types)."""
     e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(
             F.hour("ts").cast("int").alias("hour_of_day"), "event_type"
-        ).agg(
+        )
+        .agg(
             F.count("*").alias("n"),
-            F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
-            F.round(F.expr("percentile(value, 0.95)"), 6).alias("p95"),
-            F.round(F.expr("percentile(value, 0.99)"), 6).alias("p99"),
+            exact_percentile("value", (0.5, 0.95, 0.99)).alias("_p"),
+        )
+        .select(
+            "hour_of_day",
+            "event_type",
+            "n",
+            F.round(F.col("_p")[0], 6).alias("p50"),
+            F.round(F.col("_p")[1], 6).alias("p95"),
+            F.round(F.col("_p")[2], 6).alias("p99"),
         )
     )
 
