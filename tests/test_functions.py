@@ -9,7 +9,7 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
-from utils_spark.functions import exact_percentile
+from utils_spark.functions import average_rank, exact_percentile
 
 PS = (0.0, 0.5, 0.99, 1.0)
 NAN = float("nan")
@@ -83,3 +83,13 @@ def test_exact_percentile_empty_input_is_null(spark):
 def test_exact_percentile_rejects_p_outside_unit_interval(p):
     with pytest.raises(ValueError):
         exact_percentile("x", p)
+
+
+def test_average_rank_averages_ties_within_partition(spark):
+    groups = {"g": [2.0, 3.0, 1.0, 2.0], "h": [5.0, 5.0, 5.0]}
+    rows = [(g, x) for g, xs in groups.items() for x in xs]
+    df = spark.createDataFrame(rows, "g string, x double").repartition(2)
+    out = df.select("g", "x", average_rank(["g"], "x").alias("r")).collect()
+    ranks = {g: sorted((r["x"], r["r"]) for r in out if r["g"] == g) for g in groups}
+    assert [r for _, r in ranks["g"]] == [1.0, 2.5, 2.5, 4.0]
+    assert [r for _, r in ranks["h"]] == [2.0, 2.0, 2.0]

@@ -1,8 +1,9 @@
 """Layering rules of the package: the operator library sits below the
-query registry, so no operator module may import a query module; and the
+query registry, so no operator module may import a query module; the
 loop mechanics (lineage checkpoints, observed metrics) live only in
-``utils_spark.plans``; and the measurement tools read Spark's in-process
-status store, never its REST API."""
+``utils_spark.plans``; the day bucket lives only in
+``utils_spark.functions``; and the measurement tools read Spark's
+in-process status store, never its REST API."""
 
 from __future__ import annotations
 
@@ -52,6 +53,26 @@ def test_loop_mechanics_only_in_plans():
                     offenders.append(f"{path.parent.name}/{path.name}:{node.lineno}: {name}")
     assert not offenders, offenders
 
+
+
+def test_day_bucket_only_in_functions():
+    """Queries bucket timestamps by day through ``functions.utc_day``, so
+    the day policy (which truncation, which cast) is decided in one place.
+    Oracle SQL strings are not calls and are not checked."""
+    offenders = []
+    for path in sorted((PACKAGE_DIR / "queries").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+                unit = node.args[0] if node.args else None
+                if (
+                    name == "date_trunc"
+                    and isinstance(unit, ast.Constant)
+                    and str(unit.value).lower() == "day"
+                ):
+                    offenders.append(f"{path.name}:{node.lineno}")
+    assert not offenders, offenders
 
 def test_tools_do_not_scrape_the_ui():
     """Tools read stages and task quantiles from the status store through

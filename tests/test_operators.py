@@ -483,6 +483,69 @@ def test_ewma_closed_form_long_series_no_overflow(spark):
         assert abs(got - want) <= 1e-9 * max(1.0, abs(want)), (row.t, got, want)
 
 
+
+SERIES = {
+    "a": [3.0, 7.0, 1.0, 8.0, 2.0, 9.0, 4.0, 4.0, 6.0, 5.0],
+    "b": [10.0, 20.0, 60.0],  # shorter than the 5 lags asked for
+}
+
+
+def _series_frame(spark):
+    """SERIES as (key, day, x) rows delivered out of day order."""
+    rows = [(k, t, x) for k, xs in SERIES.items() for t, x in enumerate(xs)]
+    rows = rows[1::2] + rows[::-2]
+    return spark.createDataFrame(rows, "key string, day int, x double").repartition(3)
+
+
+def test_lag_covariances_match_python_acf(spark):
+    """num_k = Σ_t (x_t − μ)(x_{t−k} − μ) over day-ordered pairs, with the
+    series' ss = Σx² − n·μ² and count; a lag at or past a series' length
+    emits no row."""
+    from utils_spark.operators.stats import lag_covariances
+
+    got = {
+        (r["key"], r["lag"]): (r["num"], r["ss"], r["cnt"])
+        for r in lag_covariances(_series_frame(spark), "key", "day", "x", 5).collect()
+    }
+    want = {}
+    for key, xs in SERIES.items():
+        n, mu = len(xs), sum(xs) / len(xs)
+        ss = sum(x * x for x in xs) - n * mu * mu
+        for k in range(1, min(5, n - 1) + 1):
+            num = sum((xs[t] - mu) * (xs[t - k] - mu) for t in range(k, n))
+            want[(key, k)] = (num, ss, n)
+    assert sorted(got) == sorted(want) == [("a", k) for k in range(1, 6)] + [("b", 1), ("b", 2)]
+    for key, (num, ss, n) in want.items():
+        g_num, g_ss, g_n = got[key]
+        assert g_n == n, key
+        assert math.isclose(g_num, num, rel_tol=1e-12, abs_tol=1e-9), (key, g_num, num)
+        assert math.isclose(g_ss, ss, rel_tol=1e-12), (key, g_ss, ss)
+
+
+def test_ordered_series_sorts_by_order_not_arrival(spark):
+    from utils_spark.operators.stats import ordered_series
+
+    out = ordered_series(_series_frame(spark), "key", "day", "x").collect()
+    got = {r["key"]: (r["vals"], r["n"]) for r in out}
+    assert got == {k: (xs, len(xs)) for k, xs in SERIES.items()}
+
+
+def test_contingency_margins_on_2x3_table(spark):
+    from utils_spark.operators.stats import contingency_margins
+
+    counts = {("r1", "c1"): 1, ("r1", "c2"): 2, ("r1", "c3"): 3}
+    counts |= {("r2", "c1"): 4, ("r2", "c2"): 5, ("r2", "c3"): 6}
+    cells = spark.createDataFrame(
+        [(r, c, o) for (r, c), o in counts.items()], "r string, c string, o long"
+    )
+    got = {
+        (x["r"], x["c"]): (x["o"], x["row_tot"], x["col_tot"], x["n"])
+        for x in contingency_margins(cells, "r", "c", "o").collect()
+    }
+    row_tot = {"r1": 6, "r2": 15}
+    col_tot = {"c1": 5, "c2": 7, "c3": 9}
+    assert got == {(r, c): (o, row_tot[r], col_tot[c], 21) for (r, c), o in counts.items()}
+
 def _brute_jaccard_pairs(texts, k, t):
     """All-pairs exact k-gram Jaccard >= t on plain Python (test oracle)."""
     import itertools
@@ -1262,7 +1325,6 @@ def test_tokenizer_apply_tail_path_forced(spark, duck, sf_dir, monkeypatch):
     from utils_spark.registry import load_all
 
     monkeypatch.setattr(textmodel, "TOKENIZER_APPLY_TOPK", 5)
-    monkeypatch.setattr(textmodel, "UNIGRAM_APPLY_TOPK", 5)
     reg = load_all()
     for name in ("bpe_encoding_apply", "tokenizer_fertility", "unigram_encoding_apply"):
         qd = reg[name]

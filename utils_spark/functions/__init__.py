@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column
+from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 
@@ -54,12 +54,28 @@ def make_unique(name: Column | str, order_by: Column | str):
 
     Returns a Column; must be used with a Window — see operators.relational.
     """
-    from pyspark.sql import Window
-
     n = F.col(name) if isinstance(name, str) else name
     o = F.col(order_by) if isinstance(order_by, str) else order_by
     rn = F.row_number().over(Window.partitionBy(n).orderBy(o))
     return F.when(rn == 1, n).otherwise(F.concat_ws(".", n, (rn - 1).cast("string")))
+
+
+def utc_day(ts: Column | str) -> Column:
+    """Calendar day of a timestamp, ``to_date(date_trunc('day', ts))``: the
+    day bucket of every daily roll-up. Sessions run in UTC, so this is the
+    UTC day, as the oracles' ``CAST(date_trunc('day', ts) AS DATE)``."""
+    return F.to_date(F.date_trunc("day", ts))
+
+
+def average_rank(partition_by: Sequence[str], order_by: str) -> Column:
+    """Tie-averaged rank of ``order_by`` within ``partition_by`` (R's
+    ``rank(ties.method = "average")``): (2·rank + ties − 1) / 2.0, where
+    ties counts the rows that share the value. The ranks are
+    half-integers, exact in double. Two windows: the rank's ordered one
+    and the per-value count."""
+    rank = F.rank().over(Window.partitionBy(*partition_by).orderBy(order_by))
+    ties = F.count("*").over(Window.partitionBy(*partition_by, order_by))
+    return (2 * rank + ties - 1) / 2.0
 
 
 def zscore(value: Column, mean: Column, std: Column) -> Column:

@@ -2,7 +2,10 @@
 
 Re-expresses the reference's statistics (SURVEY §2: W4 BH adjust, A11 MAD
 outliers, P19 z-score, M16 KS tests, M24 quantile thresholds) as window /
-aggregate compositions — no UDFs, exact medians on correctness paths.
+aggregate compositions — no UDFs, exact medians on correctness paths — plus
+the event-series building blocks the time-series and test-statistic
+queries compose: the ordered per-series array, the series moments and lag
+covariances, and the contingency-table margins.
 """
 
 from __future__ import annotations
@@ -228,6 +231,72 @@ def pairwise_ks_test(
         p.alias("p_asymptotic"),
         F.first("na").cast("long").alias("n_a"),
         F.first("nb").cast("long").alias("n_b"),
+    )
+
+
+def ordered_series(df: DataFrame, key: str, order: str, value: str) -> DataFrame:
+    """Per-``key`` array of ``value`` sorted by ``order`` → (key, vals, n),
+    n = size(vals). ``collect_list`` keeps arrival order, so each value
+    travels in an (order, value) struct and the structs are sorted before
+    the values are taken out; ties in ``order`` fall back to ``value``."""
+    return (
+        df.groupBy(key)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct(order, value))), lambda s: s[value]
+            ).alias("vals")
+        )
+        .withColumn("n", F.size("vals"))
+    )
+
+
+def series_moments(df: DataFrame, key: str, value: str) -> DataFrame:
+    """Per-``key`` mean, count and centred sum of squares of ``value`` →
+    (key, mu, cnt, ss), ss = Σx² − n·mean², the ACF denominator."""
+    v = F.col(value)
+    return df.groupBy(key).agg(
+        F.avg(value).alias("mu"),
+        F.count("*").alias("cnt"),
+        (F.sum(v * v) - F.count("*") * F.avg(value) * F.avg(value)).alias("ss"),
+    )
+
+
+def lag_covariances(df: DataFrame, key: str, order: str, value: str, max_lag: int) -> DataFrame:
+    """Per-series lag-k autocovariance sums for k = 1..``max_lag`` →
+    (key, lag, num, ss, cnt): num = Σ_t (x_t − μ)(x_{t−k} − μ) over the
+    overlapping pairs in ``order`` order, with the series' ``ss`` and
+    ``cnt`` (``series_moments``), so ACF_k = num / ss. A lag at or past a
+    series' length has no pair and emits no row.
+
+    One ordered window pass computes all lags, ``stack`` turns them into
+    long form, and one (key, lag) aggregate sums them: a single sort per
+    series, never one per lag."""
+    moments = series_moments(df, key, value)
+    w = Window.partitionBy(key).orderBy(order)
+    lags = range(1, max_lag + 1)
+    lagged = df.select(key, value, *[F.lag(value, k).over(w).alias(f"l{k}") for k in lags])
+    stacked = lagged.select(
+        key,
+        value,
+        F.expr(f"stack({max_lag}, " + ", ".join(f"{k}, l{k}" for k in lags) + ") AS (lag, lv)"),
+    ).filter(F.col("lv").isNotNull())
+    num = F.sum((F.col(value) - F.col("mu")) * (F.col("lv") - F.col("mu")))
+    return (
+        stacked.join(F.broadcast(moments), key)
+        .groupBy(key, "lag")
+        .agg(num.alias("num"), F.first("ss").alias("ss"), F.first("cnt").alias("cnt"))
+    )
+
+
+def contingency_margins(cells: DataFrame, row: str, col: str, count: str) -> DataFrame:
+    """A contingency table's cells with their margins: ``cells`` plus
+    row_tot, col_tot and the grand total n, each a window sum of
+    ``count`` over the cell table (bounded: rows × columns)."""
+    return cells.select(
+        "*",
+        F.sum(count).over(Window.partitionBy(row)).alias("row_tot"),
+        F.sum(count).over(Window.partitionBy(col)).alias("col_tot"),
+        F.sum(count).over(Window.partitionBy()).alias("n"),
     )
 
 

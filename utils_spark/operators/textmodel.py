@@ -348,7 +348,6 @@ UNIGRAM_N_MULTI = 60  # multi-char seed pieces kept (by weighted frequency)
 # (the FULL distinct-word dictionary grows with the corpus — Heaps' law)
 # while Zipf's law puts the vast majority of word OCCURRENCES in the head
 TOKENIZER_APPLY_TOPK = 32768
-UNIGRAM_APPLY_TOPK = TOKENIZER_APPLY_TOPK  # back-compat alias
 UNIGRAM_ROUNDS = 2  # Viterbi-EM rounds
 UNIGRAM_FLOOR = -20.0  # log-prob floor for kept-but-unused single chars
 

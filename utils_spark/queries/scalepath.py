@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from utils_spark.functions import cosine_similarity, exact_percentile, to_double_array
+from utils_spark.functions import cosine_similarity, exact_percentile, to_double_array, utc_day
 from utils_spark.io import load_table
 from utils_spark.registry import register
 
@@ -614,7 +614,7 @@ def partition_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(
             e.select(
                 F.lit("day"),
-                F.to_date(F.date_trunc("day", "ts")).cast("string"),
+                utc_day("ts").cast("string"),
             )
         )
     )

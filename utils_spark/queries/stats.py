@@ -1,26 +1,68 @@
-"""Statistical operators: MAD outlier flagging, z-score scaling, robust
-clamping, two-sample KS test, quantile-threshold selection, variance
-explained (one-way ANOVA R²), log-normalization.
+"""Statistical operators and hypothesis tests: MAD outlier flagging, z-score
+scaling, robust clamping, quantile thresholds and normalization, variance
+explained (one-way ANOVA R²), log-normalization; grouped regression,
+correlation and moments; rank and location tests (KS, Spearman,
+Mann-Whitney, Kruskal-Wallis, Welch, Brown-Forsythe/Levene, Wilcoxon
+signed-rank, Friedman); trend tests (Mann-Kendall, Cochran-Armitage);
+contingency tests (chi-square, G-test, Fisher exact, mutual information,
+two-proportion A/B); resampling (jackknife, bootstrap, permutation) and
+survival (Kaplan-Meier, log-rank).
 
 Covers SURVEY.md §2 A11, P19, P20, M16, M24, M3 — the reference's
-statistics re-expressed as window/aggregate compositions (no UDFs).
+statistics re-expressed as window/aggregate compositions (no row-at-a-time
+UDFs). Daily series bucket with ``functions.utc_day``, ranks average ties
+with ``functions.average_rank`` and contingency tables take their margins
+from ``stats.contingency_margins``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from utils_spark.io import load_table
-from utils_spark.functions import squish
+from utils_spark.functions import average_rank, md5_long, squish, utc_day
 from utils_spark.operators import qc
 from utils_spark.operators.stats import (
     MAD_CONSISTENCY,
+    contingency_margins,
     median_mad,
     pairwise_value_counts,
     zscore_per_group,
 )
 from utils_spark.registry import register
+
+
+def _purchase_durations(events: DataFrame) -> DataFrame:
+    """Per user, whole hours from the first event to the first purchase,
+    censored at 48 → (user_id, t, ev): ev = 1 for a purchase within 48 h,
+    ev = 0 (t = 48) for a later purchase or none. The duration table of
+    the survival queries."""
+    users = events.groupBy("user_id").agg(
+        F.floor(
+            (
+                F.unix_timestamp(F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))))
+                - F.unix_timestamp(F.min("ts"))
+            )
+            / 3600.0
+        ).cast("long").alias("h")
+    )
+    return users.select(
+        "user_id",
+        F.when(F.col("h") <= 48, F.col("h")).otherwise(F.lit(48)).alias("t"),
+        F.when(F.col("h") <= 48, 1).otherwise(0).alias("ev"),
+    )
+
+
+def _replicate_uniform() -> Column:
+    """Deterministic U[0,1) draw per (event_type, day, b) row, from
+    md5("event_type:day:b") in steps of 1e-6: the replicate draw of the
+    resampling queries, bit-identical in every engine (no RNG)."""
+    key = F.concat(
+        F.col("event_type"), F.lit(":"), F.col("day").cast("string"),
+        F.lit(":"), F.col("b").cast("string"),
+    )
+    return (md5_long(key) % 1000000) / 1000000.0
 
 
 @register(
@@ -449,8 +491,8 @@ def spearman_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation (Spearman 1904) per event type between
     daily event count and daily mean value — the monotone-association,
     outlier-robust sibling of Pearson `grouped_correlation` /
-    `rolling_correlation`. Ties get R's AVERAGE ranks, computed
-    explicitly (min-rank + (tie-count - 1)/2 — two window passes), then
+    `rolling_correlation`. Ties get R's AVERAGE ranks
+    (`functions.average_rank`: (2·rank + ties − 1)/2, two windows), then
     rho is Pearson over the rank pairs; integer daily counts tie
     frequently, so average-rank handling visibly changes the result and
     is hash-checked.
@@ -461,14 +503,12 @@ def spearman_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     float rounding is the final 6dp rho."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
+        "event_type", utc_day("ts").alias("day")
     ).agg(F.count("*").cast("double").alias("x"), F.avg("value").alias("y"))
-    wx = Window.partitionBy("event_type").orderBy("x")
-    wy = Window.partitionBy("event_type").orderBy("y")
     ranked = daily.select(
         "event_type",
-        (F.rank().over(wx) + (F.count("*").over(Window.partitionBy("event_type", "x")) - 1) / 2.0).alias("rx"),
-        (F.rank().over(wy) + (F.count("*").over(Window.partitionBy("event_type", "y")) - 1) / 2.0).alias("ry"),
+        average_rank(["event_type"], "x").alias("rx"),
+        average_rank(["event_type"], "y").alias("ry"),
     )
     n = F.count("*")
     num = n * F.sum(F.col("rx") * F.col("ry")) - F.sum("rx") * F.sum("ry")
@@ -540,14 +580,7 @@ def chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = e.groupBy("event_type", F.dayofweek("ts").alias("dow")).agg(
         F.count("*").cast("long").alias("o")
     )
-    tot = obs.select(
-        "event_type",
-        "dow",
-        "o",
-        F.sum("o").over(Window.partitionBy("event_type")).alias("row_tot"),
-        F.sum("o").over(Window.partitionBy("dow")).alias("col_tot"),
-        F.sum("o").over(Window.partitionBy()).alias("n"),
-    )
+    tot = contingency_margins(obs, "event_type", "dow", "o")
     expected = F.col("row_tot").cast("double") * F.col("col_tot") / F.col("n")
     cells = tot.select(
         "event_type",
@@ -840,7 +873,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie counts are exact integers; var_s/z round at 4/6dp."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
+        "event_type", utc_day("ts").alias("day")
     ).agg(F.count("*").cast("double").alias("x"))
     a, b = daily.alias("a"), daily.alias("b")
     s = (
@@ -934,9 +967,7 @@ def jackknife_cv_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     closing aggregation — O(series × days) total, no pair join. All
     inputs to the 6dp-rounded outputs are few-term double sums."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("x"))
+    daily = e.groupBy("event_type", utc_day("ts").alias("day")).agg(F.avg("value").alias("x"))
     suff = daily.groupBy("event_type").agg(
         F.count("*").cast("double").alias("n"),
         F.sum("x").alias("s1"),
@@ -1040,22 +1071,10 @@ def bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation per grain after that. Nearest-rank percentiles (ranks
     ceil(0.025 B)/ceil(0.975 B), tie-broken by replicate id) avoid
     interpolation-convention drift between engines."""
-    from utils_spark.functions import md5_long
-
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("x"))
+    daily = e.groupBy("event_type", utc_day("ts").alias("day")).agg(F.avg("value").alias("x"))
     reps = spark.range(0, 100).select(F.col("id").alias("b"))
-    u = (
-        md5_long(
-            F.concat(
-                F.col("event_type"), F.lit(":"), F.col("day").cast("string"),
-                F.lit(":"), F.col("b").cast("string"),
-            )
-        )
-        % 1000000
-    ) / 1000000.0
+    u = _replicate_uniform()
     w = F.lit(6)
     for k in range(len(_POIS1_CDF) - 1, -1, -1):
         w = F.when(u < _POIS1_CDF[k], F.lit(k)).otherwise(w)
@@ -1166,21 +1185,7 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     in both engines (unix_timestamp and date_diff('second') both
     truncate sub-second parts identically); the survival product is exp(Σ ln(1 - d/n)) in BOTH
     engines, so product associativity can't drift."""
-    e = load_table(spark, sf_dir, "events")
-    users = e.groupBy("user_id").agg(
-        F.floor(
-            (
-                F.unix_timestamp(F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))))
-                - F.unix_timestamp(F.min("ts"))
-            )
-            / 3600.0
-        ).cast("long").alias("h")
-    )
-    dur = users.select(
-        "user_id",
-        F.when(F.col("h") <= 48, F.col("h")).otherwise(F.lit(48)).alias("t"),
-        F.when(F.col("h") <= 48, 1).otherwise(0).alias("ev"),
-    )
+    dur = _purchase_durations(load_table(spark, sf_dir, "events"))
     att = dur.groupBy("t").agg(
         F.sum("ev").cast("long").alias("d"),
         F.sum(1 - F.col("ev")).cast("long").alias("c"),
@@ -1264,12 +1269,7 @@ def mutual_information_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = e.groupBy("event_type", F.dayofweek("ts").alias("dow")).agg(
         F.count("*").cast("double").alias("o")
     )
-    tot = obs.select(
-        "event_type", "dow", "o",
-        F.sum("o").over(Window.partitionBy("event_type")).alias("row_tot"),
-        F.sum("o").over(Window.partitionBy("dow")).alias("col_tot"),
-        F.sum("o").over(Window.partitionBy()).alias("n"),
-    )
+    tot = contingency_margins(obs, "event_type", "dow", "o")
     exp_ = F.col("row_tot") * F.col("col_tot") / F.col("n")
     parts = tot.groupBy("n").agg(
         F.sum((F.col("o") / F.col("n")) * F.log(F.col("o") * F.col("n") / (F.col("row_tot") * F.col("col_tot")))).alias("mi"),
@@ -1455,12 +1455,8 @@ def permutation_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     the x200 replicate fan-out and every aggregation after it live on
     that bounded table. The p-value uses the add-one Monte-Carlo
     estimator, exact-integer counts over 6dp-stable comparisons."""
-    from utils_spark.functions import md5_long
-
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type").isin("click", "view"))
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("x"))
+    daily = e.groupBy("event_type", utc_day("ts").alias("day")).agg(F.avg("value").alias("x"))
     obs = daily.agg(
         (
             F.avg(F.when(F.col("event_type") == "click", F.col("x")))
@@ -1472,15 +1468,7 @@ def permutation_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("p_a"),
     )
     reps = spark.range(0, 200).select(F.col("id").alias("b"))
-    u = (
-        md5_long(
-            F.concat(
-                F.col("event_type"), F.lit(":"), F.col("day").cast("string"),
-                F.lit(":"), F.col("b").cast("string"),
-            )
-        )
-        % 1000000
-    ) / 1000000.0
+    u = _replicate_uniform()
     relabeled = (
         daily.crossJoin(F.broadcast(reps))
         .crossJoin(F.broadcast(obs))
@@ -1847,9 +1835,7 @@ def wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= n_days/2 rows. Rank sums are exact multiples of 0.5, so the
     unordered SUM is float-exact across engines."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
+    daily = e.groupBy("event_type", utc_day("ts").alias("day")).agg(F.avg("value").alias("v"))
     idx = daily.select(
         "event_type",
         "v",
@@ -1867,12 +1853,11 @@ def wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.event_type").alias("event_type"), (F.col("b.v") - F.col("a.v")).alias("d"))
     )
     nz = pairs.filter(F.col("d") != 0).withColumn("ad", F.abs("d"))
-    wr = Window.partitionBy("event_type").orderBy("ad")
     wt = Window.partitionBy("event_type", "ad")
     rk = nz.select(
         "event_type",
         "d",
-        ((2 * F.rank().over(wr) + F.count("*").over(wt) - 1) / 2.0).alias("r"),
+        average_rank(["event_type"], "ad").alias("r"),
         (
             (F.count("*").over(wt).cast("double") * F.count("*").over(wt) - 1) / 48.0
         ).alias("tie_term"),
@@ -1962,9 +1947,7 @@ def friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, never a corpus-side shuffle. Rank sums are exact
     multiples of 0.5, so cross-engine sums are float-exact."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
+    daily = e.groupBy("event_type", utc_day("ts").alias("day")).agg(F.avg("value").alias("v"))
     kdf = daily.agg(F.countDistinct("event_type").alias("k"))
     complete = (
         daily.groupBy("day")
@@ -1974,14 +1957,8 @@ def friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("day")
     )
     nb = complete.agg(F.count("*").alias("n"))
-    wr = Window.partitionBy("day").orderBy("v")
-    wt = Window.partitionBy("day", "v")
-    ranked = (
-        daily.join(complete, "day")
-        .select(
-            "event_type",
-            ((2 * F.rank().over(wr) + F.count("*").over(wt) - 1) / 2.0).alias("r"),
-        )
+    ranked = daily.join(complete, "day").select(
+        "event_type", average_rank(["day"], "v").alias("r")
     )
     rj = ranked.groupBy("event_type").agg(
         F.sum("r").alias("rsum"), F.sum(F.col("r") * F.col("r")).alias("rsq")
@@ -2081,8 +2058,8 @@ def friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 def logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mantel-Cox log-rank test (Mantel 1966): do two user cohorts
     (deterministic user_id-parity split) differ in time to first
-    purchase? Reuses kaplan_meier_retention's duration construction
-    verbatim (whole hours, 48h administrative censoring), then at each
+    purchase? Shares kaplan_meier_retention's duration table
+    (`_purchase_durations`: whole hours, 48h administrative censoring), then at each
     distinct event time compares observed group-0 events with the
     hypergeometric expectation/variance given the per-group risk sets,
     emitting the chi-square and signed z. The inferential companion to
@@ -2094,20 +2071,8 @@ def logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-duration table (<= 49 rows) via two reverse-cumulative
     windows, and the final statistic is one scalar aggregate with the
     cohort sizes attached from a broadcast 1-row aggregate."""
-    e = load_table(spark, sf_dir, "events")
-    users = e.groupBy("user_id").agg(
-        F.floor(
-            (
-                F.unix_timestamp(F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))))
-                - F.unix_timestamp(F.min("ts"))
-            )
-            / 3600.0
-        ).cast("long").alias("h")
-    )
-    dur = users.select(
-        (F.col("user_id") % 2).cast("int").alias("grp"),
-        F.when(F.col("h") <= 48, F.col("h")).otherwise(F.lit(48)).alias("t"),
-        F.when(F.col("h") <= 48, 1).otherwise(0).alias("ev"),
+    dur = _purchase_durations(load_table(spark, sf_dir, "events")).select(
+        (F.col("user_id") % 2).cast("int").alias("grp"), "t", "ev"
     )
     att = dur.groupBy("t").agg(
         F.sum(F.when(F.col("grp") == 0, F.col("ev")).otherwise(0)).cast("double").alias("d0"),
@@ -2293,14 +2258,7 @@ def g_test_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = e.groupBy(
         "event_type", F.dayofweek("ts").alias("dow")
     ).agg(F.count("*").alias("o"))
-    tot = obs.select(
-        "event_type",
-        "dow",
-        "o",
-        F.sum("o").over(Window.partitionBy("event_type")).alias("row_tot"),
-        F.sum("o").over(Window.partitionBy("dow")).alias("col_tot"),
-        F.sum("o").over(Window.partitionBy()).alias("n"),
-    )
+    tot = contingency_margins(obs, "event_type", "dow", "o")
     expected = F.col("row_tot").cast("double") * F.col("col_tot") / F.col("n")
     cells = tot.select(
         "event_type",

@@ -1,8 +1,17 @@
 """Temporal + semi-structured operators: date truncation roll-ups, tumbling
-event-time windows (batch twin of the streaming path), JSON extraction.
+event-time windows (batch twin of the streaming path), JSON extraction,
+event analytics (cohort retention, funnels, transition matrices, basket
+affinity), and the daily time-series queries: smoothing and forecasting
+(EWMA, Holt, Holt-Winters), monitoring detectors (EWMA control chart,
+CUSUM, rolling correlation, percentile bands), decomposition and trend
+(seasonal decomposition, Theil-Sen, isotonic fit), serial dependence (ACF,
+PACF, Ljung-Box, periodogram) and series comparison (DTW, Kendall tau).
 
-The reference has no date/JSON surface (SURVEY §2.7) — Spark gives these
-free and the driver's `events.props` / `orders.o_orderdate` call for them.
+Every daily roll-up buckets with ``functions.utc_day``; the array folds
+take their per-series arrays from ``stats.ordered_series`` and the ACF
+family its lag sums from ``stats.lag_covariances``. The reference has no
+date/JSON surface (SURVEY §2.7) — Spark gives these free and the driver's
+`events.props` / `orders.o_orderdate` call for them.
 """
 
 from __future__ import annotations
@@ -10,8 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from utils_spark.functions import exact_percentile
+from utils_spark.functions import exact_percentile, utc_day
 from utils_spark.io import load_table
+from utils_spark.operators.stats import (
+    MAD_CONSISTENCY,
+    ewma_closed_form,
+    lag_covariances,
+    ordered_series,
+    series_moments,
+)
 from utils_spark.registry import register
 
 
@@ -174,7 +190,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard event-analytics retention query. First-day table is small
     per cohort and broadcast back onto activity."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day")
+        "user_id", utc_day("ts").alias("day")
     )
     firsts = e.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
     activity = (
@@ -450,7 +466,7 @@ def event_pair_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     item counts and the basket total broadcast."""
     e = load_table(spark, sf_dir, "events")
     baskets = e.select(
-        "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day"), "event_type"
+        "user_id", utc_day("ts").alias("day"), "event_type"
     ).distinct()
     nb = baskets.agg(
         F.countDistinct("user_id", "day").cast("double").alias("nb")
@@ -540,11 +556,9 @@ def daily_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     join back. The oracle computes the same closed form with explicit
     power-weighted self-join — an independent formulation, so agreement
     checks the algebra, not just the code."""
-    from utils_spark.operators.stats import ewma_closed_form
-
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
+        "event_type", utc_day("ts").alias("day")
     ).agg(F.count("*").cast("double").alias("n"))
     sm = ewma_closed_form(daily, ["event_type"], "day", "n", alpha=0.25)
     return sm.select(
@@ -674,11 +688,9 @@ def ewma_anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines — no float-boundary flag flips."""
     from pyspark.sql import Window
 
-    from utils_spark.operators.stats import MAD_CONSISTENCY, ewma_closed_form
-
     e = load_table(spark, sf_dir, "events")
     daily = (
-        e.groupBy("event_type", F.to_date(F.date_trunc("day", "ts")).alias("day"))
+        e.groupBy("event_type", utc_day("ts").alias("day"))
         .agg(F.count("*").cast("double").alias("n_raw"))
         .select(
             "event_type",
@@ -766,7 +778,7 @@ def rolling_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day")).agg(
+    daily = e.groupBy(utc_day("ts").alias("day")).agg(
         F.sum((F.col("event_type") == "view").cast("int")).cast("double").alias("x"),
         F.sum((F.col("event_type") == "click").cast("int")).cast("double").alias("y"),
     )
@@ -845,7 +857,7 @@ def seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
+        "event_type", utc_day("ts").alias("day")
     ).agg(F.count("*").cast("double").alias("n"))
     w = Window.partitionBy("event_type").orderBy("day").rowsBetween(-3, 3)
     trended = daily.select(
@@ -918,7 +930,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     never over raw events. Exact in-group median via percentile."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
+        "event_type", utc_day("ts").alias("day")
     ).agg(F.count("*").cast("double").alias("n"))
     idx = daily.select(
         "event_type",
@@ -1004,34 +1016,11 @@ def autocorrelation_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(series-length x 7) after the rollup, never a per-lag re-sort.
     The band flag compares the unrounded ratio; the emitted acf is
     6dp-rounded for cross-engine hashing."""
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
+        "event_type", utc_day("ts").alias("day")
     ).agg(F.count("*").cast("double").alias("n"))
-    stats = daily.groupBy("event_type").agg(
-        F.avg("n").alias("mu"),
-        F.count("*").alias("cnt"),
-        (F.sum(F.col("n") * F.col("n")) - F.count("*") * F.avg("n") * F.avg("n")).alias("ss"),
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    lagged = daily.select(
-        "event_type", "n", *[F.lag("n", k).over(w).alias(f"l{k}") for k in range(1, 8)]
-    )
-    stacked = lagged.select(
-        "event_type",
-        "n",
-        F.expr(
-            "stack(7, " + ", ".join(f"{k}, l{k}" for k in range(1, 8)) + ") AS (lag, lv)"
-        ),
-    ).filter(F.col("lv").isNotNull())
-    num = F.sum((F.col("n") - F.col("mu")) * (F.col("lv") - F.col("mu")))
-    acf = (
-        stacked.join(F.broadcast(stats), "event_type")
-        .groupBy("event_type", "lag")
-        .agg(num.alias("num"), F.first("ss").alias("ss"), F.first("cnt").alias("cnt"))
-    )
+    acf = lag_covariances(daily, "event_type", "day", "n", 7)
     ratio = F.col("num") / F.col("ss")
     return acf.select(
         "event_type",
@@ -1116,7 +1105,7 @@ def cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events")
-    day = F.to_date(F.date_trunc("day", "ts"))
+    day = utc_day("ts")
     spike = F.when(
         F.dayofmonth("day") >= 20,
         F.when(F.col("event_type") == "view", F.lit(0.5)).otherwise(F.lit(2.0)),
@@ -1269,12 +1258,9 @@ def pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
+        "event_type", utc_day("ts").alias("day")
     ).agg(F.count("*").cast("double").alias("n"))
-    stats = daily.groupBy("event_type").agg(
-        F.avg("n").alias("mu"),
-        (F.sum(F.col("n") * F.col("n")) - F.count("*") * F.avg("n") * F.avg("n")).alias("ss"),
-    )
+    stats = series_moments(daily, "event_type", "n")
     w = Window.partitionBy("event_type").orderBy("day")
     lagged = daily.select(
         "event_type",
@@ -1320,8 +1306,8 @@ def pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the daily-count series: Q = T(T+2) * sum_{k=1..7} acf_k^2/(T-k),
     # dof = 7 — the "is this series white noise at all" gate that the
     # per-lag ACF band flags of `autocorrelation_lags` approximate one
-    # lag at a time. The ACF terms reuse the identical single-window
-    # 7-lag construction so float parity carries over.
+    # lag at a time. The ACF terms come from the same single-window
+    # 7-lag construction (`stats.lag_covariances`).
     oracle="""
     WITH daily AS (
       SELECT event_type, CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
@@ -1375,45 +1361,18 @@ def ljung_box_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     (which tests each lag separately) and `pacf_durbin_levinson`
     (which identifies the AR order once whiteness is rejected).
 
-    Scale shape: identical to the ACF query — one bounded daily rollup,
-    ONE ordered window pass producing all seven lag columns, a bounded
-    (type x lag) aggregation, then a k-row closing aggregate. The rho_k
-    terms are computed with the exact same expressions as
-    `autocorrelation_lags`, so cross-engine float parity is inherited
-    rather than re-derived."""
-    from pyspark.sql import Window
-
+    Scale shape: identical to the ACF query, whose lag sums it composes
+    (`stats.lag_covariances`: one bounded daily rollup, ONE ordered
+    window pass producing all seven lag columns, a bounded (type x lag)
+    aggregation), then rho_k = num/ss and a k-row closing aggregate."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
+        "event_type", utc_day("ts").alias("day")
     ).agg(F.count("*").cast("double").alias("n"))
-    stats = daily.groupBy("event_type").agg(
-        F.avg("n").alias("mu"),
-        F.count("*").alias("cnt"),
-        (F.sum(F.col("n") * F.col("n")) - F.count("*") * F.avg("n") * F.avg("n")).alias("ss"),
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    lagged = daily.select(
-        "event_type", "n", *[F.lag("n", k).over(w).alias(f"l{k}") for k in range(1, 8)]
-    )
-    stacked = lagged.select(
-        "event_type",
-        "n",
-        F.expr(
-            "stack(7, " + ", ".join(f"{k}, l{k}" for k in range(1, 8)) + ") AS (lag, lv)"
-        ),
-    ).filter(F.col("lv").isNotNull())
-    acf = (
-        stacked.join(F.broadcast(stats), "event_type")
-        .groupBy("event_type", "lag")
-        .agg(
-            (F.sum((F.col("n") - F.col("mu")) * (F.col("lv") - F.col("mu"))) / F.first("ss")).alias("rho"),
-            F.first("cnt").alias("cnt"),
-        )
-    )
+    acf = lag_covariances(daily, "event_type", "day", "n", 7)
+    rho = F.col("num") / F.col("ss")
     terms = acf.select(
-        "event_type", "cnt",
-        (F.col("rho") * F.col("rho") / (F.col("cnt") - F.col("lag"))).alias("term"),
+        "event_type", "cnt", (rho * rho / (F.col("cnt") - F.col("lag"))).alias("term")
     )
     cnt = F.first("cnt")
     return terms.groupBy("event_type").agg(
@@ -1486,17 +1445,12 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical fold via list_reduce, seed packed as element 0, so
     the float op order matches exactly."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
-    series = daily.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "v"))), lambda s: s["v"]
-        ).alias("vals")
-    ).filter(F.size("vals") >= 3)  # degenerate-series guard (see docstring)
+    daily = e.groupBy("event_type", utc_day("ts").alias("day")).agg(F.avg("value").alias("v"))
+    # degenerate-series guard (see docstring)
+    series = ordered_series(daily, "event_type", "day", "v").filter(F.col("n") >= 3)
     folded = series.select(
         "event_type",
-        F.size("vals").alias("n"),
+        "n",
         F.aggregate(
             F.slice("vals", F.lit(3), F.size("vals") - 2),
             F.struct(
@@ -1604,14 +1558,8 @@ def holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs the byte-identical fold via list_reduce with the state packed
     as a flat 10-double list, so the float op order matches exactly."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
-    series = daily.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "v"))), lambda s: s["v"]
-        ).alias("vals")
-    ).withColumn("n", F.size("vals"))
+    daily = e.groupBy("event_type", utc_day("ts").alias("day")).agg(F.avg("value").alias("v"))
+    series = ordered_series(daily, "event_type", "day", "v")
 
     def week_mean(start: int):
         return (
@@ -1740,19 +1688,9 @@ def periodogram_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
-    series = (
-        daily.groupBy("event_type")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("day", "v"))), lambda s: s["v"]
-            ).alias("vals")
-        )
-        .withColumn("n", F.size("vals"))
-        .filter(F.col("n") >= 3)  # degenerate-series guard (see docstring)
-    )
+    daily = e.groupBy("event_type", utc_day("ts").alias("day")).agg(F.avg("value").alias("v"))
+    # degenerate-series guard (see docstring)
+    series = ordered_series(daily, "event_type", "day", "v").filter(F.col("n") >= 3)
     cent = series.select(
         "event_type",
         "n",
@@ -1901,14 +1839,8 @@ def dtw_pairwise_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the oracle does, so fold order and tie resolution are
     byte-identical across engines."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
-    series = daily.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "v"))), lambda s: s["v"]
-        ).alias("vals")
-    ).withColumn("n", F.size("vals"))
+    daily = e.groupBy("event_type", utc_day("ts").alias("day")).agg(F.avg("value").alias("v"))
+    series = ordered_series(daily, "event_type", "day", "v")
     a, b = series.alias("a"), series.alias("b")
     # broadcast the (tiny, one-row-per-type) build side so the
     # inequality pair join plans as a bounded BroadcastNestedLoopJoin,
@@ -2041,14 +1973,8 @@ def isotonic_daily_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-insensitive and interval means are identical left folds, so
     cross-engine parity is float-exact before the 6dp round."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
-    series = daily.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "v"))), lambda s: s["v"]
-        ).alias("vals")
-    ).withColumn("n", F.size("vals"))
+    daily = e.groupBy("event_type", utc_day("ts").alias("day")).agg(F.avg("value").alias("v"))
+    series = ordered_series(daily, "event_type", "day", "v")
 
     def interval_mean(i, j):
         return F.aggregate(
@@ -2176,14 +2102,8 @@ def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus volume never re-enters). S and the tie counts are integer
     sums, so cross-engine parity is exact by construction."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
-    series = daily.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "v"))), lambda s: s["v"]
-        ).alias("vals")
-    ).withColumn("n", F.size("vals"))
+    daily = e.groupBy("event_type", utc_day("ts").alias("day")).agg(F.avg("value").alias("v"))
+    series = ordered_series(daily, "event_type", "day", "v")
     a, b = series.alias("a"), series.alias("b")
     # broadcast build side: bounded BroadcastNestedLoopJoin, not a
     # CartesianProduct (registry-wide plan audit contract)

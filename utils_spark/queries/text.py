@@ -18,6 +18,7 @@ from utils_spark.functions import (
     MINHASH_P30,
     _minhash_constants,
     _minhash_sig_col,
+    average_rank,
     bits_to_long,
     char_shingles,
     md5_long,
@@ -2959,7 +2960,7 @@ def unigram_encoding_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     SentencePiece-family twin of `bpe_encoding_apply`: train 2 Viterbi-EM
     rounds (`unigram_lm_tokenizer`), then encode with the Zipf-shaped
     two-path apply: the TOP-K most frequent words' segmentations
-    (UNIGRAM_APPLY_TOPK rows — an explicit Limit, bounded at any corpus
+    (TOKENIZER_APPLY_TOPK rows — an explicit Limit, bounded at any corpus
     size) broadcast as a head dictionary covering the vast majority of
     occurrences, and TAIL words run the same Viterbi DP inline per
     occurrence under the broadcast piece table (bounded: singles + 60
@@ -2971,7 +2972,7 @@ def unigram_encoding_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     accounting (both engines identically). Emits per-source token
     accounting plus a word-level checksum over (word, encoding) pairs."""
     from utils_spark.operators.textmodel import (
-        UNIGRAM_APPLY_TOPK,
+        TOKENIZER_APPLY_TOPK,
         UNIGRAM_MAXLEN,
         _unigram_words,
         _viterbi_chain,
@@ -2992,7 +2993,7 @@ def unigram_encoding_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk_words = (
         _unigram_words(d, "text")
         .orderBy(F.desc("n"), F.asc("w"))
-        .limit(UNIGRAM_APPLY_TOPK)
+        .limit(TOKENIZER_APPLY_TOPK)
     )
     # cut_lineage materializes the bounded head dict: without it, the
     # hits/miss filters above the left join are pushed INTO the build
@@ -4386,13 +4387,7 @@ def roc_auc_quality_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Rank sums are exact multiples of 0.5 so the unordered
     SUM is float-exact across engines."""
     d = load_table(spark, sf_dir, "documents")
-    wr = Window.partitionBy("source").orderBy("n_chars")
-    wt = Window.partitionBy("source", "n_chars")
-    ranked = d.select(
-        "source",
-        "lang",
-        ((2 * F.rank().over(wr) + F.count("*").over(wt) - 1) / 2.0).alias("r"),
-    )
+    ranked = d.select("source", "lang", average_rank(["source"], "n_chars").alias("r"))
     agg = ranked.groupBy("source").agg(
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("n1"),
         F.sum(F.when(F.col("lang") == "en", 0).otherwise(1)).alias("n0"),
